@@ -222,7 +222,7 @@ def minhash_pairs_from_index(index: DataFrame, max_bucket_size: int = 100_000,
                              id_col: str = "doc_id") -> DataFrame:
     """:func:`minhash_lsh_pairs` answered from the MAINTAINED LSH-bucket
     view (band_idx, band_hash, ids, over — built incrementally by
-    ``streaming.matview.apply_minhash_buckets_batch``): distinct
+    ``streaming.matview.apply_minhash_buckets_delta``): distinct
     (id_a < id_b) candidate pairs with band-collision counts, with NO
     corpus scan and NO signature recomputation — the view's capped
     member sets ARE the detector's buckets. With the view maintained
@@ -746,7 +746,7 @@ def substring_dup_spans_from_index(df: DataFrame, index: DataFrame,
                                    min_count: int = 2) -> DataFrame:
     """:func:`substring_dup_spans` with coverage evidence read from the
     MAINTAINED gram-index view (h, cnt — built incrementally by
-    ``streaming.matview.apply_gram_index_batch``): duplicated-span
+    ``streaming.matview.apply_gram_index_delta``): duplicated-span
     statistics for any doc set against corpus-wide gram counts with no
     history re-scan — the monitoring read path of the streaming
     ExactSubstr story (the rewrite read path is
@@ -932,7 +932,7 @@ def substring_dedup_rewrite_from_index(df: DataFrame, index: DataFrame,
                                        grams=None) -> DataFrame:
     """:func:`substring_dedup_rewrite` with duplicate/keep-first evidence
     read from a MAINTAINED gram-index view (h, cnt, min_okey — built
-    incrementally by ``streaming.matview.apply_gram_index_batch``)
+    incrementally by ``streaming.matview.apply_gram_index_delta``)
     instead of a corpus-wide window: the streaming form of ExactSubstr
     span removal. ``df`` is the document set to rewrite (a new batch, or
     the whole corpus); the index carries corpus-wide occurrence counts
@@ -1059,7 +1059,7 @@ def substring_shared_gram_pairs_from_index(index: DataFrame,
                                            min_shared: int = 2) -> DataFrame:
     """:func:`substring_shared_gram_pairs` answered from the MAINTAINED
     gram-index view (h, cnt, min_okey, ids, over — built incrementally by
-    ``streaming.matview.apply_gram_index_batch``): WHICH document pairs
+    ``streaming.matview.apply_gram_index_delta``): WHICH document pairs
     share ≥ ``min_shared`` distinct k-grams, with no corpus re-scan at
     all — the view's capped posting lists ARE the detector's buckets.
     Completes the streaming ExactSubstr triad (rewrite:
@@ -1067,8 +1067,8 @@ def substring_shared_gram_pairs_from_index(index: DataFrame,
     :func:`substring_dup_spans_from_index`).
 
     The df cap is baked into the view at BUILD time (``max_gram_df`` on
-    the apply/maintain side): a gram whose distinct-doc set ever exceeds
-    it stores (ids=NULL, over=true) and contributes no pairs —
+    the apply and segment-read side): a gram whose distinct-doc set
+    ever exceeds it stores (ids=NULL, over=true) and contributes no pairs —
     exactly the batch detector's boilerplate-gram cutoff, so with the
     same cap the output equals the one-shot batch pairs (pytest-pinned,
     including a cap that only overflows through a cross-batch union).
@@ -1081,8 +1081,7 @@ def substring_shared_gram_pairs_from_index(index: DataFrame,
     if "ids" not in index.columns:
         # pre-r10 (h, cnt, min_okey) view: the posting lists were never
         # stored, so the conservative read is every gram over-cap — no
-        # pairs claimed, no AnalysisException (r10 ADVICE migration note;
-        # apply_gram_index_batch backfills the stored state the same way)
+        # pairs claimed, no AnalysisException (r10 ADVICE migration note)
         from ..streaming.matview import _backfill_gram_index_schema
 
         index = _backfill_gram_index_schema(index)

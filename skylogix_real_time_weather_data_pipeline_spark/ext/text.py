@@ -1475,7 +1475,7 @@ def bm25_topk_from_stats(df: DataFrame, stats: DataFrame, n_docs: int,
                          text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """BM25 scoring against PRECOMPUTED corpus statistics — the production
     split: term df comes from a maintained (w, cf, df) view (see
-    streaming/matview.maintain_term_stats_view) and N/avgdl from stored
+    streaming/matview.apply_term_stats_delta) and N/avgdl from stored
     corpus counters, so scoring never re-aggregates the corpus. With the
     view current, results equal :func:`bm25_topk` recomputed from scratch
     (pinned in tests/test_matview.py).

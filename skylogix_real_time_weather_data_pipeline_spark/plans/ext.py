@@ -202,52 +202,60 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_pairs_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs answered from the MAINTAINED
     band-bucket view (r10): build the view over two corpus halves as
-    replay-guarded micro-batch applies
-    (streaming/matview.py:apply_minhash_buckets_batch — per-doc
+    replay-guarded segment applies
+    (streaming/matview.py:apply_minhash_buckets_delta — per-doc
     signatures are pure functions of the document, member sets union on
     the capped semilattice), then read candidate pairs entirely from
-    the view (ext/dedup.py:minhash_pairs_from_index — no corpus scan,
-    no signature recomputation). The oracle is byte-identical to
-    docs_minhash_lsh_pairs's: maintained buckets == one-shot buckets is
-    the operator's contract, so the driver's hash check certifies the
-    incremental LSH-index machinery itself."""
+    the segment-merged view (streaming/matview.py:
+    read_minhash_buckets_segments → ext/dedup.py:minhash_pairs_from_index
+    — no corpus scan, no signature recomputation). The oracle is
+    byte-identical to docs_minhash_lsh_pairs's: maintained buckets ==
+    one-shot buckets is the operator's contract, so the driver's hash
+    check certifies the incremental LSH-index machinery itself."""
     import os
 
-    from ..streaming.matview import apply_minhash_buckets_batch
+    from ..streaming.matview import (
+        apply_minhash_buckets_delta,
+        read_minhash_buckets_segments,
+    )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_minhash_idx")
     state = os.path.join(root, "view")
-    apply_minhash_buckets_batch(
+    apply_minhash_buckets_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state,
         n_hashes=_N_HASHES, bands=_BANDS, max_bucket_size=_MAX_BUCKET,
     )
-    apply_minhash_buckets_batch(
+    apply_minhash_buckets_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state,
         n_hashes=_N_HASHES, bands=_BANDS, max_bucket_size=_MAX_BUCKET,
     )
-    view = spark.read.parquet(state)
+    view = read_minhash_buckets_segments(spark, state, max_bucket_size=_MAX_BUCKET)
     return dedup.minhash_pairs_from_index(view, max_bucket_size=_MAX_BUCKET)
 
 
 def q_exact_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup read from the MAINTAINED fingerprint view (r10): two
-    replay-guarded micro-batch applies
-    (streaming/matview.py:apply_exact_dedup_batch — survivor id MINs,
-    copy count ADDs), then the view IS the answer — the membership
-    table a deployment probes per ingest batch without re-hashing
-    history. Oracle byte-identical to docs_exact_dedup's (maintained
+    replay-guarded segment applies
+    (streaming/matview.py:apply_exact_dedup_delta — survivor id MINs,
+    copy count ADDs), then the segment-merged view
+    (streaming/matview.py:read_exact_dedup_segments) IS the answer — the
+    membership table a deployment probes per ingest batch without
+    re-hashing history. Oracle byte-identical to docs_exact_dedup's (maintained
     view == one-shot hash-groupBy is the monoid contract)."""
     import os
 
-    from ..streaming.matview import apply_exact_dedup_batch
+    from ..streaming.matview import (
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
+    )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_exact_idx")
     state = os.path.join(root, "view")
-    apply_exact_dedup_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, state)
-    apply_exact_dedup_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, state)
-    return spark.read.parquet(state).select("fingerprint", "doc_id", "n_copies")
+    apply_exact_dedup_delta(docs.filter(F.col("doc_id") % 2 == 0), 0, state)
+    apply_exact_dedup_delta(docs.filter(F.col("doc_id") % 2 == 1), 1, state)
+    return read_exact_dedup_segments(spark, state)
 
 
 def q_exact_dedup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2423,10 +2431,10 @@ def q_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_substring_rewrite_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION index-maintenance split of ExactSubstr removal,
     driven end-to-end: build the gram-index matview (h, cnt, min_okey)
-    from two halves of the corpus as two replay-guarded micro-batch
-    applies (streaming/matview.py:apply_gram_index_batch — counts add,
-    the keep-first order key mins across batches), then rewrite the
-    corpus against the MAINTAINED view
+    from two halves of the corpus as two replay-guarded segment applies
+    (streaming/matview.py:apply_gram_index_delta — counts add, the
+    keep-first order key mins across batches), then rewrite the corpus
+    against the segment-merged MAINTAINED view
     (ext/dedup.py:substring_dedup_rewrite_from_index) with no corpus-wide
     window pass. The oracle is byte-identical to docs_substring_rewrite's
     — index-driven == one-shot batch rewrite is the operator's contract —
@@ -2441,8 +2449,10 @@ def q_substring_rewrite_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _gram_index_view(spark: SparkSession, sf_dir: str, prefix: str,
                      max_gram_df: int = 1_000) -> tuple[DataFrame, DataFrame]:
     """Build the ExactSubstr gram-index matview over the corpus as two
-    replay-guarded micro-batch applies and return (docs, view) — the
-    shared maintenance preamble of the three *_indexed read-path queries
+    replay-guarded segment applies (streaming/matview.py:
+    apply_gram_index_delta) and return (docs, the segment-merged view
+    from read_gram_index_segments) — the shared maintenance preamble of
+    the three *_indexed read-path queries
     (each uses its own state prefix so sequential sweep runs never share
     state). ``docs`` is the narrow (id, text) projection OWNED-PERSISTED
     once (r14, r13 verdict #7): both apply halves AND the caller's read
@@ -2451,16 +2461,16 @@ def _gram_index_view(spark: SparkSession, sf_dir: str, prefix: str,
     import os
 
     from ..cache import owned_persist
-    from ..streaming.matview import apply_gram_index_batch
+    from ..streaming.matview import apply_gram_index_delta, read_gram_index_segments
 
     docs = owned_persist(_docs(spark, sf_dir).select("doc_id", "text"))
     root = _session_state_dir(spark, sf_dir, prefix)
     state = os.path.join(root, "view")
-    apply_gram_index_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, state,
+    apply_gram_index_delta(docs.filter(F.col("doc_id") % 2 == 0), 0, state,
                            k=_SUBSTR_K, max_gram_df=max_gram_df)
-    apply_gram_index_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, state,
+    apply_gram_index_delta(docs.filter(F.col("doc_id") % 2 == 1), 1, state,
                            k=_SUBSTR_K, max_gram_df=max_gram_df)
-    return docs, spark.read.parquet(state)
+    return docs, read_gram_index_segments(spark, state, max_gram_df=max_gram_df)
 
 
 def q_substring_rewrite_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4146,8 +4156,9 @@ def q_bm25_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 scored against the INCREMENTALLY MAINTAINED term-stats view —
     the production index-maintenance split driven end-to-end as a driver
     query: build the (w, cf, df) view from two halves of the corpus as
-    two replay-guarded micro-batch applies
-    (streaming/matview.py:apply_term_stats_batch), then score with
+    two replay-guarded segment applies
+    (streaming/matview.py:apply_term_stats_delta), read the
+    segment-merged view (read_term_stats_segments), then score with
     ext/text.py:bm25_topk_from_stats (term df from the view, N/avgdl as
     stored scalars — no corpus re-aggregation in the scoring plan). The
     oracle is byte-identical to docs_bm25_topk's: view-current scoring ==
@@ -4157,14 +4168,14 @@ def q_bm25_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..ext.text import tokens as _tokens
-    from ..streaming.matview import apply_term_stats_batch
+    from ..streaming.matview import apply_term_stats_delta, read_term_stats_segments
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_term_stats")
     state = os.path.join(root, "view")
-    apply_term_stats_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, state)
-    apply_term_stats_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, state)
-    stats = spark.read.parquet(state)
+    apply_term_stats_delta(docs.filter(F.col("doc_id") % 2 == 0), 0, state)
+    apply_term_stats_delta(docs.filter(F.col("doc_id") % 2 == 1), 1, state)
+    stats = read_term_stats_segments(spark, state)
     counters = docs.select(F.size(_tokens("text")).alias("dl")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]

@@ -392,10 +392,12 @@ def co_supplier_shared_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # realistic sf; the self-join condition already pins a < b) and
         # shuffles one long instead of two, with a cheaper single-column
         # hash at both ends. Unpacked right after the aggregate — the
-        # returned (a, b, shared) rows are identical.
+        # returned (a, b, shared) rows are identical. Both operands are
+        # cast to long first: on an int column Spark masks the shift
+        # amount mod 32, so a·2³² would silently become a and the key a+b.
         .select(
-            (F.shiftleft(F.col("t1.l_suppkey"), 32)
-             + F.col("t2.l_suppkey")).alias("ab")
+            (F.shiftleft(F.col("t1.l_suppkey").cast("long"), 32)
+             + F.col("t2.l_suppkey").cast("long")).alias("ab")
         )
         # force the shuffle BEFORE aggregating: the pair stream's global
         # duplication (shared-count avg ~20) is spread across ALL map

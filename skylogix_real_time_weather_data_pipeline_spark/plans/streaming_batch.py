@@ -230,12 +230,14 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts")
+    # microsecond gaps, not whole seconds: the oracle's epoch(ts) is a
+    # fractional DOUBLE, so a 7200.5 s gap must start a new session even
+    # when the two whole-second floors differ by exactly 7200
+    us = F.unix_micros("ts")
     flagged = ev.withColumn(
         "new_s",
-        F.when(
-            F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w) <= 7200,
-            F.lit(0),
-        ).otherwise(F.lit(1)),
+        F.when(us - F.lag(us).over(w) <= 7200 * 1_000_000, F.lit(0))
+        .otherwise(F.lit(1)),
     )
     sess = flagged.withColumn(
         "session_seq", F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))

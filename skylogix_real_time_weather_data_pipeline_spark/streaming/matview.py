@@ -1,15 +1,29 @@
 """Incremental materialized-view maintenance under foreachBatch.
 
-The pattern every warehouse needs at scale: a daily aggregate table kept
-current by COMBINING each micro-batch's partial aggregates into the stored
-view — never re-scanning history. Sum/count (and any commutative monoid)
-combine exactly; the equivalence "incrementally maintained view == one-shot
-batch aggregate over all data" is pinned in tests/test_matview.py.
+The pattern every warehouse needs at scale: an aggregate table kept
+current by folding each micro-batch's partial aggregate into the stored
+view through the view's monoid, never re-scanning history. The
+equivalence "incrementally maintained view == one-shot batch aggregate
+over all data" is pinned in tests/test_matview.py.
 
 Contrast with ``outputMode("complete")`` window aggregation: complete mode
 re-emits the WHOLE result every batch and keeps all groups in the state
-store; this keeps state in a parquet table (compact, queryable, restartable
-via the checkpoint) and each batch touches O(batch) groups.
+store; this keeps state in parquet (compact, queryable, restartable via
+the checkpoint) and each batch writes O(batch) rows.
+
+One protocol per view shape:
+
+- Views whose size has a FIXED BOUND (the KMV / HLL / CMS / bottom-k
+  sketches: <= k / m / d*w rows; the IVF cell stats: <= ncells rows) use
+  the whole-view commit (:func:`_commit_view`): read, merge, rewrite
+  the view under a batch-id replay guard. A rewrite costs O(bound).
+- Views that GROW WITH THE DATA (daily counts, term stats, gram index,
+  exact dedup, minhash buckets, and the retractable Z-set views) use
+  immutable per-batch segments (:func:`_apply_delta_segment`): the
+  segment directory is the replay guard, reads fold segments through
+  the monoid, and compaction folds them back to one.
+
+:func:`maintain_view` is the single streaming driver for both shapes.
 """
 
 from __future__ import annotations
@@ -68,20 +82,17 @@ def _already_applied(state_path: str, batch_id: int) -> bool:
     return False
 
 
-def _commit_view(merged: DataFrame, state_path: str, batch_id: int,
-                 single_file: bool = False) -> None:
+def _commit_view(merged: DataFrame, state_path: str, batch_id: int) -> None:
     """Staging write + batch-id marker + crash-safe directory swap. The
     underscore-prefixed marker is invisible to Spark's parquet reader
     (same convention as _SUCCESS).
 
-    ``single_file``: views whose size is BOUNDED BY CONTRACT (the sketch
-    family — ≤ k / m / d·w rows regardless of input) coalesce to one
-    parquet file: inheriting the session's shuffle-partition count wrote
-    up to 32 near-empty files per commit, and the 32 write tasks + the
-    multi-file listing on every state read were most of a maintenance
-    cycle's fixed cost (r7 bench: the cycle is job overhead, not data).
-    Unbounded views (term stats — vocabulary-sized) keep the default
-    layout.
+    Only views whose size is BOUNDED BY CONTRACT come here (see the
+    module docstring), so the view is always coalesced to one parquet
+    file: inheriting the session's shuffle-partition count wrote up to 32
+    near-empty files per commit, and the 32 write tasks + the multi-file
+    listing on every state read were most of a maintenance cycle's fixed
+    cost (r7 bench: the cycle is job overhead, not data).
 
     The swap never has a window where no committed view exists on disk:
     the old view is RENAMED aside (same-filesystem, atomic) rather than
@@ -93,9 +104,7 @@ def _commit_view(merged: DataFrame, state_path: str, batch_id: int,
     replay."""
     staging = f"{state_path}__staging"
     old = f"{state_path}__old"
-    if single_file:
-        merged = merged.coalesce(1)
-    merged.write.mode("overwrite").parquet(staging)
+    merged.coalesce(1).write.mode("overwrite").parquet(staging)
     with open(os.path.join(staging, "_last_batch.json"), "w") as f:
         json.dump({"batch_id": batch_id}, f)
     if os.path.exists(state_path):
@@ -105,60 +114,14 @@ def _commit_view(merged: DataFrame, state_path: str, batch_id: int,
         shutil.rmtree(old)
 
 
-def combine_daily_counts(state: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Merge a batch's (day, event_type, n, sum_value) partial aggregate
-    into the stored view: full outer join on the group key, monoid-combine
-    the measures. At 100 TB both sides are pre-aggregated — the join is
-    O(touched groups + view size), never O(events)."""
-    if state is None:
-        return delta
-    s = state.select(
-        "day", "event_type",
-        F.col("n").alias("_sn"), F.col("sum_value").alias("_sv"),
-    )
-    return (
-        s.join(delta, ["day", "event_type"], "full_outer")
-        .select(
-            "day",
-            "event_type",
-            (F.coalesce(F.col("_sn"), F.lit(0)) + F.coalesce(F.col("n"), F.lit(0))).alias("n"),
-            (
-                F.coalesce(F.col("_sv"), F.lit(0.0)) + F.coalesce(F.col("sum_value"), F.lit(0.0))
-            ).alias("sum_value"),
-        )
-    )
-
-
-def apply_daily_batch(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One micro-batch of the daily view: partial aggregate → combine →
-    atomic commit, skipped entirely when the batch was already applied
-    (see _already_applied — the replay guard is what the equivalence and
-    replay tests pin)."""
-    if _already_applied(state_path, batch_id):
-        return
-    spark = batch_df.sparkSession
-    delta = (
-        batch_df.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("sum_value"),
-        )
-    )
-    state = spark.read.parquet(state_path) if os.path.exists(state_path) else None
-    _commit_view(combine_daily_counts(state, delta), state_path, batch_id)
-
-
-def maintain_daily_view(src: DataFrame, state_path: str, checkpoint_dir: str):
-    """Run the incremental maintenance over a streaming events frame
-    (ts, event_type, value) with trigger(availableNow): each micro-batch
-    partial-aggregates to (day, event_type) and combines into the parquet
-    view at ``state_path`` through a staging swap. Returns the finished
-    StreamingQuery."""
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        apply_daily_batch(batch_df, batch_id, state_path)
-
+def maintain_view(src: DataFrame, apply_fn, checkpoint_dir: str):
+    """Run ``apply_fn(batch_df, batch_id)`` on every micro-batch of the
+    streaming frame ``src`` with trigger(availableNow) and wait for it
+    to drain. ``apply_fn`` is any replay-guarded applier (bind its state
+    directory and knobs with a lambda), so a rerun after a crash or a
+    timeout is safe. Returns the finished StreamingQuery."""
     q = (
-        src.writeStream.foreachBatch(_upsert)
+        src.writeStream.foreachBatch(apply_fn)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -173,146 +136,6 @@ def maintain_daily_view(src: DataFrame, state_path: str, checkpoint_dir: str):
             "incomplete (the replay guard makes a rerun safe)"
         )
     return q
-
-
-def combine_term_stats(state: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Merge a batch's per-term partial stats (w, cf, df) into the stored
-    term-statistics view — the incremental maintenance of the BM25/TF-IDF
-    corpus statistics (collection frequency + document frequency), so
-    retrieval scoring stays current without ever re-tokenizing history.
-
-    Both measures are additive monoids PROVIDED each document arrives in
-    exactly one micro-batch (append-only corpus — re-delivered documents
-    would double-count df; dedup upstream with dropDuplicates on the id
-    within the watermark if the source can replay). The join is O(touched
-    terms + vocabulary), never O(corpus)."""
-    if state is None:
-        return delta
-    s = state.select(
-        "w", F.col("cf").alias("_cf"), F.col("df").alias("_df"),
-    )
-    return s.join(delta, ["w"], "full_outer").select(
-        "w",
-        (F.coalesce(F.col("_cf"), F.lit(0)) + F.coalesce(F.col("cf"), F.lit(0))).alias("cf"),
-        (F.coalesce(F.col("_df"), F.lit(0)) + F.coalesce(F.col("df"), F.lit(0))).alias("df"),
-    )
-
-
-def apply_term_stats_batch(batch_df: DataFrame, batch_id: int, state_path: str,
-                           text_col: str = "text", id_col: str = "doc_id") -> None:
-    """One micro-batch of the term-stats view: tokenize ONLY this batch's
-    documents, partial-aggregate per term, monoid-combine into the stored
-    view (replay-guarded, crash-safe swap). Public batch form so callers
-    (and the bench's maintenance cycle) can drive maintenance without a
-    streaming source."""
-    if _already_applied(state_path, batch_id):
-        return
-    spark = batch_df.sparkSession
-    delta = _term_stats_delta(batch_df, text_col, id_col)
-    state = (
-        spark.read.parquet(state_path) if os.path.exists(state_path) else None
-    )
-    _commit_view(combine_term_stats(state, delta), state_path, batch_id)
-
-
-def maintain_term_stats_view(src: DataFrame, state_path: str, checkpoint_dir: str,
-                             text_col: str = "text", id_col: str = "doc_id"):
-    """Incrementally maintain the (w, cf, df) term-statistics view over a
-    streaming documents frame with trigger(availableNow): each micro-batch
-    applies :func:`apply_term_stats_batch`. Equivalence with the one-shot
-    batch aggregation over the full corpus is pinned in
-    tests/test_matview.py."""
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        apply_term_stats_batch(batch_df, batch_id, state_path,
-                               text_col=text_col, id_col=id_col)
-
-    q = (
-        src.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False WITHOUT stopping the query:
-    # a silent return here would hand the caller a partially-built view
-    # (r9 review finding) — surface the stall instead
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "view maintenance did not finish within 300s; state is "
-            "incomplete (the replay guard makes a rerun safe)"
-        )
-    return q
-
-
-def combine_gram_index(state: DataFrame | None, delta: DataFrame,
-                       max_gram_df: int = 1_000) -> DataFrame:
-    """Merge a batch's per-k-gram partial evidence
-    (h, cnt, min_okey, ids, over) into the stored gram-index view — the
-    incremental maintenance of the ExactSubstr (Lee et al. 2022)
-    duplicate-evidence index. Every measure is a monoid: occurrence
-    counts ADD, the keep-first order key (doc_id·2^20 + pos) MINS, and
-    the capped posting list (r10 — the pair-detector read path) UNIONs
-    on a join-semilattice: once a gram's distinct-doc set exceeds
-    ``max_gram_df`` it collapses to (ids=NULL, over=true) and stays
-    there — the same boilerplate-gram cutoff the batch pair detector
-    applies, so overflow order across batches cannot matter. Valid
-    provided each document arrives in exactly one micro-batch
-    (append-only corpus, same contract as the term-stats view). The
-    join is O(touched grams + view), never O(corpus)."""
-    if state is None:
-        return delta
-    s = state.select(
-        "h", F.col("cnt").alias("_cnt"), F.col("min_okey").alias("_mo"),
-        F.col("ids").alias("_ids"), F.col("over").alias("_over"),
-    )
-    u = F.array_union(
-        F.coalesce(F.col("_ids"), F.array().cast("array<long>")),
-        F.coalesce(F.col("ids"), F.array().cast("array<long>")),
-    )
-    over = (
-        F.coalesce(F.col("_over"), F.lit(False))
-        | F.coalesce(F.col("over"), F.lit(False))
-        | (F.size(u) > max_gram_df)
-    )
-    return s.join(delta, ["h"], "full_outer").select(
-        "h",
-        (F.coalesce(F.col("_cnt"), F.lit(0)) + F.coalesce(F.col("cnt"), F.lit(0))).alias("cnt"),
-        F.least(
-            F.coalesce(F.col("_mo"), F.col("min_okey")),
-            F.coalesce(F.col("min_okey"), F.col("_mo")),
-        ).alias("min_okey"),
-        F.when(~over, F.array_sort(u)).alias("ids"),
-        over.alias("over"),
-    )
-
-
-def apply_gram_index_batch(batch_df: DataFrame, batch_id: int, state_path: str,
-                           text_col: str = "text", id_col: str = "doc_id",
-                           k: int = 8, max_gram_df: int = 1_000) -> None:
-    """One micro-batch of the gram-index view: hash ONLY this batch's
-    documents' k-grams (the shared Carter-Wegman combine — bit-identical
-    to the batch ExactSubstr operators), partial-aggregate
-    (count, min order key, capped distinct-doc posting list) per gram,
-    monoid-combine into the stored view (replay-guarded, crash-safe
-    swap). The maintained view feeds the WHOLE ExactSubstr triad's read
-    paths without re-scanning history:
-    ``ext.dedup.substring_dedup_rewrite_from_index`` (span removal, via
-    cnt + min_okey), ``substring_dup_spans_from_index`` (coverage stats,
-    via cnt), and ``substring_shared_gram_pairs_from_index`` (pair
-    detection, via the posting lists — grams whose distinct-doc set
-    exceeds ``max_gram_df`` store ids=NULL/over=true, mirroring the
-    batch detector's df cap)."""
-    if _already_applied(state_path, batch_id):
-        return
-    spark = batch_df.sparkSession
-    delta = _gram_index_delta(batch_df, text_col, id_col, k, max_gram_df)
-    state = (
-        _backfill_gram_index_schema(spark.read.parquet(state_path))
-        if os.path.exists(state_path) else None
-    )
-    _commit_view(combine_gram_index(state, delta, max_gram_df=max_gram_df),
-                 state_path, batch_id)
 
 
 def _backfill_gram_index_schema(state: DataFrame) -> DataFrame:
@@ -322,9 +145,8 @@ def _backfill_gram_index_schema(state: DataFrame) -> DataFrame:
     semilattice's conservative bottom-for-pairs element
     (ids=NULL, over=true) — the rewrite/spans paths (cnt, min_okey) keep
     their exact answers, and the pairs path treats every legacy gram as
-    over-cap (claims NO pairs) rather than inventing wrong ones. New
-    batches merge on top normally; a full rebuild restores pair coverage
-    for the legacy corpus."""
+    over-cap (claims NO pairs) rather than inventing wrong ones. A full
+    rebuild restores pair coverage for the legacy corpus."""
     if "ids" in state.columns:
         return state
     return state.select(
@@ -359,7 +181,7 @@ def _gram_index_delta_from_occ(occ: DataFrame, id_col: str,
                                max_gram_df: int) -> DataFrame:
     """Per-gram partial aggregate (h, cnt, min_okey, ids, over) from a
     gram-OCCURRENCE frame (id, pos, h, okey — ext.dedup.gram_occurrences):
-    the delta computation shared by the batch-df appliers and the
+    the delta computation shared by the text-fed applier and the
     shared-scan apply_gram_index_occ_delta path."""
     ids_set = F.array_sort(F.collect_set(F.col(id_col).cast("long")))
     return occ.groupBy("h").agg(
@@ -375,8 +197,10 @@ def _gram_index_delta_from_occ(occ: DataFrame, id_col: str,
 
 def _gram_index_delta(batch_df: DataFrame, text_col: str, id_col: str,
                       k: int, max_gram_df: int) -> DataFrame:
-    """One batch's per-gram partials (h, cnt, min_okey, ids, over) —
-    shared by the compacting and segmented appliers."""
+    """One batch's per-gram partials (h, cnt, min_okey, ids, over):
+    counts add, the keep-first order key (doc_id·2^20 + pos) mins, and
+    the posting list is capped at ``max_gram_df`` distinct docs (see
+    :func:`_capped_union_merge`)."""
     from ..ext.dedup import _gram_occurrences
 
     _require_integral_id(batch_df, id_col, "gram_index")
@@ -384,184 +208,14 @@ def _gram_index_delta(batch_df: DataFrame, text_col: str, id_col: str,
     return _gram_index_delta_from_occ(occ, id_col, max_gram_df)
 
 
-def maintain_gram_index_view(src: DataFrame, state_path: str, checkpoint_dir: str,
-                             text_col: str = "text", id_col: str = "doc_id",
-                             k: int = 8, max_gram_df: int = 1_000):
-    """Incrementally maintain the (h, cnt, min_okey, ids, over)
-    ExactSubstr gram index over a streaming documents frame with
-    trigger(availableNow): each micro-batch applies
-    :func:`apply_gram_index_batch`. Equivalence with the one-shot batch
-    gram aggregate — and of the index-driven rewrite/spans/pairs read
-    paths with their batch forms — is pinned in tests/test_matview.py."""
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        apply_gram_index_batch(batch_df, batch_id, state_path,
-                               text_col=text_col, id_col=id_col, k=k,
-                               max_gram_df=max_gram_df)
-
-    q = (
-        src.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False WITHOUT stopping the query:
-    # a silent return here would hand the caller a partially-built view
-    # (r9 review finding) — surface the stall instead
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "view maintenance did not finish within 300s; state is "
-            "incomplete (the replay guard makes a rerun safe)"
-        )
-    return q
-
-
-def combine_exact_dedup(state: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Merge a batch's per-fingerprint partials (fingerprint, doc_id,
-    n_copies) into the stored exact-dedup view: the survivor id MINs and
-    the copy count ADDs — both monoids, so batch arrival order cannot
-    matter. The maintained view IS ``ext.dedup.exact_dedup``'s output
-    over everything ingested so far: the membership/dedup lookup table a
-    deployment probes per ingest batch without ever re-hashing history.
-    Valid provided each document arrives in exactly one micro-batch
-    (append-only corpus). O(touched fingerprints + view), never
-    O(corpus)."""
-    if state is None:
-        return delta
-    s = state.select(
-        "fingerprint",
-        F.col("doc_id").alias("_id"),
-        F.col("n_copies").alias("_n"),
-    )
-    return s.join(delta, ["fingerprint"], "full_outer").select(
-        "fingerprint",
-        F.least(
-            F.coalesce(F.col("_id"), F.col("doc_id")),
-            F.coalesce(F.col("doc_id"), F.col("_id")),
-        ).alias("doc_id"),
-        (F.coalesce(F.col("_n"), F.lit(0)) + F.coalesce(F.col("n_copies"), F.lit(0)))
-        .alias("n_copies"),
-    )
-
-
-def apply_exact_dedup_batch(batch_df: DataFrame, batch_id: int,
-                            state_path: str, text_col: str = "text",
-                            id_col: str = "doc_id") -> None:
-    """One micro-batch of the exact-dedup view: fingerprint ONLY this
-    batch's documents (md5 of the text — bit-identical to the batch
-    ``exact_dedup``), partial-aggregate (min id, count) per fingerprint,
-    monoid-combine into the stored view (replay-guarded, crash-safe
-    swap)."""
-    if _already_applied(state_path, batch_id):
-        return
-    from ..ext.dedup import exact_dedup
-
-    spark = batch_df.sparkSession
-    delta = exact_dedup(batch_df, text_col=text_col, id_col=id_col)
-    state = (
-        spark.read.parquet(state_path) if os.path.exists(state_path) else None
-    )
-    _commit_view(combine_exact_dedup(state, delta), state_path, batch_id)
-
-
-def maintain_exact_dedup_view(src: DataFrame, state_path: str,
-                              checkpoint_dir: str, text_col: str = "text",
-                              id_col: str = "doc_id"):
-    """Incrementally maintain the exact-dedup (fingerprint → survivor,
-    copy count) view over a streaming documents frame with
-    trigger(availableNow). View == one-shot ``exact_dedup`` over the
-    full corpus is pinned in tests/test_matview.py."""
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        apply_exact_dedup_batch(batch_df, batch_id, state_path,
-                                text_col=text_col, id_col=id_col)
-
-    q = (
-        src.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "view maintenance did not finish within 300s; state is "
-            "incomplete (the replay guard makes a rerun safe)"
-        )
-    return q
-
-
-def combine_minhash_buckets(state: DataFrame | None, delta: DataFrame,
-                            max_bucket_size: int = 100_000) -> DataFrame:
-    """Merge a batch's banded-MinHash bucket membership
-    (band_idx, band_hash, ids, over) into the stored LSH-bucket view —
-    the incremental maintenance of the near-dup candidate index. The
-    capped member set is the same join-semilattice as the gram-index
-    posting lists (:func:`combine_gram_index`): distinct-doc sets UNION,
-    collapsing to (ids=NULL, over=true) once a bucket exceeds
-    ``max_bucket_size`` — exactly the degenerate-mass-duplicate cutoff
-    ``ext.dedup.minhash_lsh_pairs`` applies, so overflow order across
-    batches cannot matter. Valid provided each document arrives in
-    exactly one micro-batch (append-only corpus). The join is
-    O(touched buckets + view), never O(corpus)."""
-    if state is None:
-        return delta
-    s = state.select(
-        "band_idx", "band_hash",
-        F.col("ids").alias("_ids"), F.col("over").alias("_over"),
-    )
-    u = F.array_union(
-        F.coalesce(F.col("_ids"), F.array().cast("array<long>")),
-        F.coalesce(F.col("ids"), F.array().cast("array<long>")),
-    )
-    over = (
-        F.coalesce(F.col("_over"), F.lit(False))
-        | F.coalesce(F.col("over"), F.lit(False))
-        | (F.size(u) > max_bucket_size)
-    )
-    return s.join(delta, ["band_idx", "band_hash"], "full_outer").select(
-        "band_idx", "band_hash",
-        F.when(~over, F.array_sort(u)).alias("ids"),
-        over.alias("over"),
-    )
-
-
-def apply_minhash_buckets_batch(batch_df: DataFrame, batch_id: int,
-                                state_path: str, text_col: str = "text",
-                                id_col: str = "doc_id", n_hashes: int = 16,
-                                bands: int = 4, shingle_n: int = 3,
-                                max_bucket_size: int = 100_000) -> None:
-    """One micro-batch of the LSH-bucket view: signature ONLY this
-    batch's documents (the shared shingle→Carter-Wegman→min pipeline —
-    bit-identical banding to ``minhash_lsh_pairs``), aggregate bucket
-    membership per (band_idx, band_hash), and monoid-combine into the
-    stored view (replay-guarded, crash-safe swap). A per-document
-    signature is a pure function of the document, so incremental
-    signatures equal the one-shot corpus signatures by construction —
-    the maintained buckets ARE the batch detector's buckets. Read paths:
-    ``ext.dedup.minhash_pairs_from_index`` (all candidate pairs, no
-    corpus re-scan) — restrict to pairs touching a new batch's ids for
-    the per-ingest dedup query a deployment actually runs."""
-    if _already_applied(state_path, batch_id):
-        return
-    spark = batch_df.sparkSession
-    delta = _minhash_buckets_delta(batch_df, text_col, id_col, n_hashes,
-                                   bands, shingle_n, max_bucket_size)
-    state = (
-        spark.read.parquet(state_path) if os.path.exists(state_path) else None
-    )
-    _commit_view(
-        combine_minhash_buckets(state, delta, max_bucket_size=max_bucket_size),
-        state_path, batch_id,
-    )
-
-
 def _minhash_buckets_delta(batch_df: DataFrame, text_col: str, id_col: str,
                            n_hashes: int, bands: int, shingle_n: int,
                            max_bucket_size: int) -> DataFrame:
     """One batch's banded bucket membership (band_idx, band_hash, ids,
-    over) — shared by the compacting and segmented appliers."""
+    over), capped at ``max_bucket_size`` members — the same cutoff
+    ``ext.dedup.minhash_lsh_pairs`` applies. Per-document signatures are
+    pure functions of the document, so the maintained buckets ARE the
+    batch detector's buckets."""
     from ..ext.dedup import band_structs, minhash_signatures
 
     _require_integral_id(batch_df, id_col, "minhash_buckets")
@@ -581,40 +235,6 @@ def _minhash_buckets_delta(batch_df: DataFrame, text_col: str, id_col: str,
         F.when(F.size("_raw_ids") <= max_bucket_size, F.col("_raw_ids")).alias("ids"),
         (F.size("_raw_ids") > max_bucket_size).alias("over"),
     )
-
-
-def maintain_minhash_buckets_view(src: DataFrame, state_path: str,
-                                  checkpoint_dir: str, text_col: str = "text",
-                                  id_col: str = "doc_id", n_hashes: int = 16,
-                                  bands: int = 4, shingle_n: int = 3,
-                                  max_bucket_size: int = 100_000):
-    """Incrementally maintain the banded-MinHash LSH-bucket view over a
-    streaming documents frame with trigger(availableNow): each
-    micro-batch applies :func:`apply_minhash_buckets_batch`. Equivalence
-    of the maintained buckets — and of the index-driven candidate pairs
-    — with the one-shot batch detector is pinned in
-    tests/test_matview.py."""
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        apply_minhash_buckets_batch(
-            batch_df, batch_id, state_path, text_col=text_col, id_col=id_col,
-            n_hashes=n_hashes, bands=bands, shingle_n=shingle_n,
-            max_bucket_size=max_bucket_size,
-        )
-
-    q = (
-        src.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "view maintenance did not finish within 300s; state is "
-            "incomplete (the replay guard makes a rerun safe)"
-        )
-    return q
 
 
 def _nearest_cell(vec_col: str, centroids: list[list[float]]):
@@ -682,8 +302,8 @@ def maintain_ivf_cell_view(src: DataFrame, centroids: list[list[float]],
       swap — the balance/drift side that tells you when to retrain.
 
     Equivalence with one-shot batch assignment + aggregation is pinned in
-    tests/test_matview.py. Append-only source assumed, as with
-    ``maintain_term_stats_view`` (replayed ids would duplicate postings)."""
+    tests/test_matview.py. Append-only source assumed, as with the
+    add-only doc views (replayed ids would duplicate postings)."""
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         if _already_applied(state_path, batch_id):
@@ -720,22 +340,7 @@ def maintain_ivf_cell_view(src: DataFrame, centroids: list[list[float]],
         )
         _commit_view(combine_cell_stats(state, delta), state_path, batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False WITHOUT stopping the query:
-    # a silent return here would hand the caller a partially-built view
-    # (r9 review finding) — surface the stall instead
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "view maintenance did not finish within 300s; state is "
-            "incomplete (the replay guard makes a rerun safe)"
-        )
-    return q
+    return maintain_view(src, _upsert, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -761,8 +366,7 @@ def apply_kmv_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     state = (
         spark.read.parquet(state_path) if os.path.exists(state_path) else None
     )
-    _commit_view(kmv_merge(state, delta, k), state_path, batch_id,
-                 single_file=True)
+    _commit_view(kmv_merge(state, delta, k), state_path, batch_id)
 
 
 def apply_hll_batch(batch_df: DataFrame, batch_id: int, state_path: str,
@@ -779,8 +383,7 @@ def apply_hll_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     state = (
         spark.read.parquet(state_path) if os.path.exists(state_path) else None
     )
-    _commit_view(hll_merge(state, delta), state_path, batch_id,
-                 single_file=True)
+    _commit_view(hll_merge(state, delta), state_path, batch_id)
 
 
 def apply_cms_batch(batch_df: DataFrame, batch_id: int, state_path: str,
@@ -797,8 +400,7 @@ def apply_cms_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     state = (
         spark.read.parquet(state_path) if os.path.exists(state_path) else None
     )
-    _commit_view(cms_merge(state, delta), state_path, batch_id,
-                 single_file=True)
+    _commit_view(cms_merge(state, delta), state_path, batch_id)
 
 
 def apply_bottomk_batch(batch_df: DataFrame, batch_id: int, state_path: str,
@@ -822,8 +424,7 @@ def apply_bottomk_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     state = (
         spark.read.parquet(state_path) if os.path.exists(state_path) else None
     )
-    _commit_view(bottomk_merge(state, delta, k), state_path, batch_id,
-                 single_file=True)
+    _commit_view(bottomk_merge(state, delta, k), state_path, batch_id)
 
 
 def apply_sketch_views_batch(batch_df: DataFrame, batch_id: int,
@@ -898,8 +499,7 @@ def apply_sketch_views_batch(batch_df: DataFrame, batch_id: int,
             state = (
                 spark.read.parquet(sp) if os.path.exists(sp) else None
             )
-            _commit_view(merges[view](state, deltas[view]()), sp, batch_id,
-                         single_file=True)
+            _commit_view(merges[view](state, deltas[view]()), sp, batch_id)
 
         # the views are INDEPENDENT stores, so their read→merge→commit
         # pipelines run concurrently (multi-threaded job submission — the
@@ -946,31 +546,18 @@ def maintain_sketch_views(src: DataFrame, base_dir: str, checkpoint_dir: str,
             width=width, value_col=value_col,
         )
 
-    q = (
-        src.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False WITHOUT stopping the query:
-    # a silent return here would hand the caller a partially-built view
-    # (r9 review finding) — surface the stall instead
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "view maintenance did not finish within 300s; state is "
-            "incomplete (the replay guard makes a rerun safe)"
-        )
-    return q
+    return maintain_view(src, _upsert, checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
 # LSM-segmented view state (r10): O(batch) applies for ingest-heavy loads
 # --------------------------------------------------------------------------
 #
-# The compact-every-batch protocol above (_commit_view) rewrites the WHOLE
-# view per apply — O(view), measured as the dominant per-ingest cost at
-# sf10x (INGEST_SCALE_r10.json: 17 s of a 30 s ingest). When view keys are
+# The whole-view commit above (_commit_view) rewrites the WHOLE view per
+# apply — O(bound) for the sketch and cell views, but O(view) for a view
+# that grows with the data, measured as the dominant per-ingest cost at
+# sf10x (INGEST_SCALE_r10.json: 17 s of a 30 s ingest). Every unbounded
+# view therefore lives in segments. When view keys are
 # uniform hashes (grams, fingerprints, band buckets) bucketed state cannot
 # help — every batch touches every bucket — so the scale answer is the
 # LSM one: each apply writes an IMMUTABLE per-batch segment (O(batch)),
@@ -1099,10 +686,13 @@ def _write_segment(delta: DataFrame, state_dir: str, batch_id: int,
 def _capped_union_merge(df: DataFrame, keys: list[str], cap: int,
                         extras: dict | None = None) -> DataFrame:
     """Fold segment rows keyed by ``keys`` through the capped-posting
-    semilattice (+ optional extra monoid aggregates, name → agg expr):
-    the final distinct-doc union decides `over` exactly when some
-    pairwise prefix would have (union sizes grow monotonically), so
-    all-at-once == the pairwise combine."""
+    join-semilattice (+ optional extra monoid aggregates, name → agg
+    expr): distinct-doc sets UNION, and once a key's set exceeds ``cap``
+    it collapses to (ids=NULL, over=true) and stays there — the batch
+    detectors' boilerplate cutoff. The final union decides `over` exactly
+    when some pairwise prefix would have (union sizes grow
+    monotonically), so all-at-once == any pairwise order. Valid provided
+    each document arrives in exactly one batch (append-only corpus)."""
     extras = extras or {}
     merged = df.groupBy(*keys).agg(
         *[expr.alias(name) for name, expr in extras.items()],
@@ -1122,9 +712,8 @@ def _capped_union_merge(df: DataFrame, keys: list[str], cap: int,
 
 def _merge_gram_segments(df: DataFrame, max_gram_df: int) -> DataFrame:
     """Fold any number of gram-index segment rows through the view's
-    monoid in ONE aggregate. Associativity makes this equal to the
-    pairwise combine_gram_index chain: counts add, the keep-first order
-    key mins, and the capped posting semilattice is order-free."""
+    monoid in ONE aggregate: counts add, the keep-first order key mins,
+    and the capped posting semilattice is order-free."""
     return _capped_union_merge(
         df, ["h"], max_gram_df,
         {"cnt": F.sum("cnt"), "min_okey": F.min("min_okey")},
@@ -1281,12 +870,17 @@ def maybe_compact(spark, state_dir: str, merge_fn,
     mid-pool compaction would race other writers) and call this ONCE
     after the pool drains. By default it applies BOTH triggers
     :func:`_apply_delta_segment` applies inline — the segment-count
-    threshold AND the tombstone-fraction threshold — so the pooled
-    protocol compacts exactly where the sequential protocol would have
-    after its final apply (the r14 pooled paths checked only the count
-    trigger, silently skipping the fraction-triggered compaction the
-    sequential r11-r13 shape performed; reads fold raw segments either
-    way, so answers never differed, but on-disk state did).
+    threshold AND the tombstone-fraction threshold (the r14 pooled paths
+    checked only the count trigger).
+
+    The guarantee is ANSWER-equivalence with the sequential protocol:
+    reads fold raw and compacted segments alike, so every read returns
+    the same view whichever protocol wrote it. The on-disk end state
+    matches the sequential protocol only when the tombstone lands LAST:
+    the inline fraction check runs only on a tombstone apply that finds
+    earlier segments, so a sequential tombstone-FIRST order skips the
+    fraction compaction that this post-drain check, seeing the whole
+    pool, runs (pytest-pinned both ways).
 
     ``fraction_trigger=False`` DEFERS the tombstone-fraction compaction
     on purpose — the choice for a protocol whose reads all happen
@@ -1330,12 +924,15 @@ def apply_gram_index_delta(batch_df: DataFrame, batch_id: int, state_dir: str,
                            text_col: str = "text", id_col: str = "doc_id",
                            k: int = 8, max_gram_df: int = 1_000,
                            auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the ExactSubstr gram index: the same
-    per-gram partial aggregate :func:`apply_gram_index_batch` computes,
-    written as an immutable segment instead of combined into the stored
-    view — the ingest-heavy deployment shape (INGEST_SCALE_r10 measured
-    the per-apply view rewrite as the dominant cost of the
-    compact-every-batch protocol). Read with
+    """O(batch) segmented apply of the ExactSubstr (Lee et al. 2022) gram
+    index: hash ONLY this batch's documents' k-grams (the shared
+    Carter-Wegman combine — bit-identical to the batch ExactSubstr
+    operators) and write the per-gram partials as an immutable segment.
+    The merged view feeds the whole triad's read paths without
+    re-scanning history: ``ext.dedup.substring_dedup_rewrite_from_index``
+    (span removal, via cnt + min_okey), ``substring_dup_spans_from_index``
+    (coverage stats, via cnt) and ``substring_shared_gram_pairs_from_index``
+    (pair detection, via the capped posting lists). Read with
     :func:`read_gram_index_segments`; segments fold back to one
     automatically once the readable count reaches ``auto_compact``
     (:data:`AUTO_COMPACT_SEGMENTS`; None = manual
@@ -1370,7 +967,7 @@ def apply_gram_index_occ_delta(occ_batch: DataFrame, batch_id: int,
 def _read_segments(spark, state_dir: str, merge_fn) -> DataFrame:
     """The current view from segmented state: union the readable
     segments and fold through the view's monoid merge. Equal to the
-    compact-every-batch view over the same batches (pytest-pinned); the
+    one-shot batch aggregate over the same batches (pytest-pinned); the
     read-side merge is one groupBy over segment rows — compact when the
     segment count makes that noticeable."""
     paths, _ = _segment_scan(state_dir)
@@ -1488,8 +1085,12 @@ def apply_exact_dedup_delta(batch_df: DataFrame, batch_id: int,
                             state_dir: str, text_col: str = "text",
                             id_col: str = "doc_id",
                             auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the exact-dedup view — same protocol
-    and crash story as :func:`apply_gram_index_delta`."""
+    """O(batch) segmented apply of the exact-dedup view: fingerprint ONLY
+    this batch's documents (md5 of the text — bit-identical to the batch
+    ``exact_dedup``). The merged view IS ``exact_dedup``'s output over
+    everything ingested so far: the membership table a deployment probes
+    per ingest batch. Same protocol and crash story as
+    :func:`apply_gram_index_delta`."""
     from ..ext.dedup import exact_dedup
 
     _apply_delta_segment(
@@ -1785,12 +1386,6 @@ def read_minhash_buckets_retractable_segments(
     )
 
 
-def compact_minhash_buckets_retractable_segments(spark, state_dir: str,
-        retain_last: int = 0) -> int:
-    return _compact_segments(
-        spark, state_dir, _fold_minhash_weights, retain_last=retain_last)
-
-
 def _term_stats_weighted_delta(batch_df: DataFrame, text_col: str,
                                id_col: str, weight: int) -> DataFrame:
     """Doc-granular term evidence (w, doc_id, tf, zw) — the term column
@@ -1889,8 +1484,11 @@ def apply_term_stats_delta(batch_df: DataFrame, batch_id: int,
                            state_dir: str, text_col: str = "text",
                            id_col: str = "doc_id",
                            auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the BM25/TF-IDF term-stats view —
-    same protocol and crash story as :func:`apply_gram_index_delta`."""
+    """O(batch) segmented apply of the BM25/TF-IDF term-stats view:
+    tokenize ONLY this batch's documents into per-term (cf, df) partials.
+    df adds correctly provided each document arrives in exactly one batch
+    (append-only corpus). Same protocol and crash story as
+    :func:`apply_gram_index_delta`."""
     _apply_delta_segment(
         lambda: _term_stats_delta(batch_df, text_col, id_col),
         batch_df, batch_id, state_dir, _merge_term_stats_segments, auto_compact,
@@ -2222,36 +1820,9 @@ def read_gram_index_retractable_as_of(spark, state_dir: str, as_of: int,
         lambda df: _merge_gram_index_retractable(df, max_gram_df), as_of)
 
 
-def read_minhash_buckets_retractable_as_of(
-        spark, state_dir: str, as_of: int,
-        max_bucket_size: int = 100_000) -> DataFrame:
-    return _read_segments_as_of(
-        spark, state_dir,
-        lambda df: _merge_minhash_retractable(df, max_bucket_size), as_of)
-
-
 def read_term_stats_retractable_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
     return _read_segments_as_of(spark, state_dir,
                                 _merge_term_stats_retractable, as_of)
-
-
-def read_ivf_postings_retractable_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir,
-                                _merge_ivf_postings_retractable, as_of)
-
-
-def read_count_sketch_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir,
-                                _fold_count_sketch_weights, as_of)
-
-
-def read_gram_index_segments_as_of(spark, state_dir: str, as_of: int,
-                                   max_gram_df: int = 1_000) -> DataFrame:
-    """As-of read for the ADD-ONLY segmented gram index (the other
-    add-only views follow the same one-liner; retention caveat in the
-    section note applies equally)."""
-    return _read_segments_as_of(
-        spark, state_dir, lambda df: _merge_gram_segments(df, max_gram_df), as_of)
 
 
 def maintain_changelog_view(src: DataFrame, state_dir: str,
@@ -2281,19 +1852,7 @@ def maintain_changelog_view(src: DataFrame, state_dir: str,
         retract_fn(batch_df.filter(F.col(op_col) < 0).drop(op_col),
                    2 * batch_id + 1, state_dir)
 
-    q = (
-        src.writeStream.foreachBatch(_route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "changelog maintenance did not finish within 300s; state is "
-            "incomplete (the replay guard makes a rerun safe)"
-        )
-    return q
+    return maintain_view(src, _route, checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
@@ -2339,7 +1898,8 @@ def _fold_daily_counts_weights(df: DataFrame) -> DataFrame:
 
 
 def _merge_daily_counts_retractable(df: DataFrame) -> DataFrame:
-    """Read fold to the add-only view's contract: live groups only."""
+    """Read fold to the daily view's (day, event_type, n, sum_value)
+    contract: live groups only."""
     return _fold_daily_counts_weights(df).filter(F.col("n") > 0)
 
 
@@ -2510,23 +2070,6 @@ def apply_doc_views_deltas(batches: list[tuple[DataFrame, int]],
             if len(paths) >= auto_compact:
                 _compact_segments(spark, state_dir, merge_fn,
                                   retain_last=AUTO_COMPACT_RETAIN)
-
-
-def read_minhash_buckets_segments_as_of(spark, state_dir: str, as_of: int,
-                                        max_bucket_size: int = 100_000) -> DataFrame:
-    return _read_segments_as_of(
-        spark, state_dir,
-        lambda df: _merge_minhash_segments(df, max_bucket_size), as_of)
-
-
-def read_exact_dedup_segments_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir,
-                                _merge_exact_dedup_segments, as_of)
-
-
-def read_term_stats_segments_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir,
-                                _merge_term_stats_segments, as_of)
 
 
 def segment_stats(state_dir: str) -> dict:

@@ -7,7 +7,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import maintain_daily_view
+from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import maintain_view
 
 _SCHEMA = "ts timestamp, event_type string, value double"
 
@@ -29,7 +29,76 @@ def _write(path, name, rows):
             f.write(json.dumps(r) + "\n")
 
 
+def _snap_grams(df):
+    return sorted(
+        (r.h, r.cnt, r.min_okey, tuple(r.ids) if r.ids is not None else None, r.over)
+        for r in df.collect()
+    )
+
+
+def _grams_oneshot(corpus, k, cap=1_000):
+    """The one-shot batch gram aggregate over the whole corpus, in
+    :func:`_snap_grams` form: the reference for every gram-index view."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import _gram_occurrences
+
+    _, _, occ = _gram_occurrences(corpus, "text", "doc_id", k)
+    rows = occ.groupBy("h").agg(
+        F.count(F.lit(1)).alias("cnt"), F.min("okey").alias("min_okey"),
+        F.array_sort(F.collect_set("doc_id")).alias("ids"),
+    ).collect()
+    return sorted(
+        (r.h, r.cnt, r.min_okey, None if len(r.ids) > cap else tuple(r.ids),
+         len(r.ids) > cap)
+        for r in rows
+    )
+
+
+def _snap_buckets(df):
+    return sorted(
+        (r.band_idx, r.band_hash, tuple(r.ids) if r.ids is not None else None, r.over)
+        for r in df.collect()
+    )
+
+
+def _buckets_oneshot(corpus, cap=100_000, n_hashes=16, bands=4):
+    """The one-shot banding's bucket membership over the whole corpus,
+    in :func:`_snap_buckets` form, with the batch detector's cap."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
+        band_structs,
+        minhash_signatures,
+    )
+
+    sig = minhash_signatures(corpus, n_hashes=n_hashes)
+    rows = (
+        sig.select("doc_id", F.explode(F.array(*band_structs(n_hashes, bands))).alias("b"))
+        .groupBy("b.band_idx", "b.band_hash")
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
+        .collect()
+    )
+    return sorted(
+        (r.band_idx, r.band_hash, None if len(r.ids) > cap else tuple(r.ids),
+         len(r.ids) > cap)
+        for r in rows
+    )
+
+
+def _term_stats_oneshot(corpus):
+    """The one-shot (w, cf, df) term aggregate over the whole corpus."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.text import tokens
+
+    return sorted(map(tuple, (
+        corpus.select("doc_id", F.explode(tokens("text")).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cf"), F.count_distinct("doc_id").alias("df"))
+    ).collect()))
+
+
 def test_incremental_view_equals_batch_aggregate(spark, tmp_path):
+    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
+        apply_daily_counts_delta,
+        read_daily_counts_retractable_segments,
+    )
+
     src_dir, state, ckpt = tmp_path / "src", str(tmp_path / "view"), str(tmp_path / "ckpt")
     _write(src_dir, "b1.json", _B1)
     time.sleep(1.1)
@@ -39,11 +108,11 @@ def test_incremental_view_equals_batch_aggregate(spark, tmp_path):
         spark.readStream.schema(_SCHEMA)
         .option("maxFilesPerTrigger", 1).json(str(src_dir))
     )
-    maintain_daily_view(stream, state, ckpt)
+    maintain_view(stream, lambda df, b: apply_daily_counts_delta(df, b, state), ckpt)
 
     got = {
         (str(r.day), r.event_type): (r.n, r.sum_value)
-        for r in spark.read.parquet(state).collect()
+        for r in read_daily_counts_retractable_segments(spark, state).collect()
     }
     want = {
         (str(r.day), r.event_type): (r.n, r.sum_value)
@@ -70,7 +139,8 @@ def test_incremental_term_stats_equals_batch(spark, tmp_path):
 
     from skylogix_real_time_weather_data_pipeline_spark.ext.text import tokens
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        maintain_term_stats_view,
+        apply_term_stats_delta,
+        read_term_stats_segments,
     )
 
     schema = "doc_id long, text string"
@@ -89,9 +159,9 @@ def test_incremental_term_stats_equals_batch(spark, tmp_path):
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(str(src_dir))
     )
-    maintain_term_stats_view(stream, state, ckpt)
+    maintain_view(stream, lambda df, b: apply_term_stats_delta(df, b, state), ckpt)
 
-    got = {r.w: (r.cf, r.df) for r in spark.read.parquet(state).collect()}
+    got = {r.w: (r.cf, r.df) for r in read_term_stats_segments(spark, state).collect()}
     batch = (
         spark.read.json(str(src_dir), schema=schema)
         .select("doc_id", F.explode(tokens("text")).alias("w"))
@@ -118,7 +188,8 @@ def test_bm25_from_maintained_stats_equals_recompute(spark, tmp_path):
         tokens,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        maintain_term_stats_view,
+        apply_term_stats_delta,
+        read_term_stats_segments,
     )
 
     schema = "doc_id long, text string"
@@ -136,7 +207,7 @@ def test_bm25_from_maintained_stats_equals_recompute(spark, tmp_path):
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(str(src_dir))
     )
-    maintain_term_stats_view(stream, state, ckpt)
+    maintain_view(stream, lambda df, b: apply_term_stats_delta(df, b, state), ckpt)
 
     docs = spark.read.json(str(src_dir), schema=schema)
     # stored corpus counters, derived the same way the scoring scan would
@@ -144,7 +215,7 @@ def test_bm25_from_maintained_stats_equals_recompute(spark, tmp_path):
     total_dl = docs.select(F.sum(F.size(tokens("text"))).alias("s")).collect()[0].s
     avgdl = total_dl / n_docs  # long/long → the same IEEE double as in-plan
 
-    stats = spark.read.parquet(state)
+    stats = read_term_stats_segments(spark, state)
     terms = ["spark", "join"]
     got = [
         (r.doc_id, r.n_terms_matched, r.bm25)
@@ -217,29 +288,26 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: re-delivering an already-applied
     micro-batch (crash between view swap and checkpoint commit) must be
     a no-op — the batch-id marker commits atomically with the view — while
-    a genuinely new batch id still applies."""
-    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import apply_daily_batch
+    a genuinely new batch id still applies. Probed on the CMS counter
+    view because its counters ADD: a replay that is not skipped shows up
+    as a double count (the idempotent KMV/HLL merges would hide it)."""
+    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import apply_cms_batch
 
     state = str(tmp_path / "view")
-    b1 = spark.createDataFrame(
-        [("2024-03-01T09:00:00", "view", 1.5), ("2024-03-01T10:00:00", "view", 2.5)],
-        "ts string, event_type string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
+    b1 = spark.createDataFrame([("a",), ("a",), ("b",)], "k string")
 
-    apply_daily_batch(b1, 0, state)
-    first = {(str(r.day), r.event_type): (r.n, r.sum_value)
-             for r in spark.read.parquet(state).collect()}
-    assert first == {("2024-03-01", "view"): (2, 4.0)}
+    def counters():
+        return sorted(map(tuple, spark.read.parquet(state).collect()))
 
-    apply_daily_batch(b1, 0, state)          # REPLAY: same id → no-op
-    again = {(str(r.day), r.event_type): (r.n, r.sum_value)
-             for r in spark.read.parquet(state).collect()}
-    assert again == first
+    apply_cms_batch(b1, 0, state, "k", depth=2, width=8)
+    first = counters()
+    assert sum(c for _, _, c in first) == 2 * 3   # depth × rows
 
-    apply_daily_batch(b1, 1, state)          # new id → combines
-    after = {(str(r.day), r.event_type): (r.n, r.sum_value)
-             for r in spark.read.parquet(state).collect()}
-    assert after == {("2024-03-01", "view"): (4, 8.0)}
+    apply_cms_batch(b1, 0, state, "k", depth=2, width=8)   # REPLAY: same id → no-op
+    assert counters() == first
+
+    apply_cms_batch(b1, 1, state, "k", depth=2, width=8)   # new id → adds
+    assert counters() == [(d, b, 2 * c) for d, b, c in first]
 
 
 def test_interrupted_swap_recovers(spark, tmp_path):
@@ -247,57 +315,56 @@ def test_interrupted_swap_recovers(spark, tmp_path):
     state _commit_view can leave behind and check the next apply sees
     either the prior committed view or the new one — never an empty or
     single-delta view (the failure mode of the old rmtree-then-move
-    ordering)."""
+    ordering). The CMS counters ADD, so a lost prior view or a replayed
+    delta both change the counts; each state is checked against the
+    one-shot counters over the rows applied so far."""
+    import os
     import shutil
 
+    from skylogix_real_time_weather_data_pipeline_spark.ext.sketch import cms_counters
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_daily_batch,
+        apply_cms_batch,
     )
 
     state = str(tmp_path / "view")
-    b1 = spark.createDataFrame(
-        [("2024-03-01T09:00:00", "view", 1.5), ("2024-03-01T10:00:00", "view", 2.5)],
-        "ts string, event_type string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    b2 = spark.createDataFrame(
-        [("2024-03-02T09:00:00", "click", 1.0)],
-        "ts string, event_type string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
+    r1, r2 = [("a",), ("a",), ("b",)], [("c",), ("a",)]
 
-    apply_daily_batch(b1, 0, state)
+    def apply(rows, batch_id):
+        apply_cms_batch(spark.createDataFrame(rows, "k string"), batch_id, state,
+                        "k", depth=2, width=8)
 
     def snapshot():
-        return {(str(r.day), r.event_type): (r.n, r.sum_value)
-                for r in spark.read.parquet(state).collect()}
+        return sorted(map(tuple, spark.read.parquet(state).collect()))
 
-    committed = snapshot()
-    assert committed == {("2024-03-01", "view"): (2, 4.0)}
+    def oneshot(rows):
+        return sorted(map(tuple, cms_counters(
+            spark.createDataFrame(rows, "k string"), "k", depth=2, width=8
+        ).collect()))
+
+    apply(r1, 0)
+    assert snapshot() == oneshot(r1)
 
     # crash point A: old view renamed aside, new view not yet moved in —
     # the window the rmtree ordering destroyed. Replaying the NEXT batch
     # must restore the prior view and combine into it.
     shutil.move(state, state + "__old")
-    apply_daily_batch(b2, 1, state)
-    assert snapshot() == {("2024-03-01", "view"): (2, 4.0),
-                          ("2024-03-02", "click"): (1, 1.0)}
+    apply(r2, 1)
+    assert snapshot() == oneshot(r1 + r2)
 
     # crash point B: new view moved in, aside copy not yet deleted →
     # the new view (with its marker) wins; replaying batch 1 is a no-op
     # and the stale aside is garbage-collected.
     shutil.copytree(state, state + "__old")
-    apply_daily_batch(b2, 1, state)
-    import os
+    apply(r2, 1)
     assert not os.path.exists(state + "__old")
-    assert snapshot() == {("2024-03-01", "view"): (2, 4.0),
-                          ("2024-03-02", "click"): (1, 1.0)}
+    assert snapshot() == oneshot(r1 + r2)
 
     # crash point C: an orphaned staging dir from an interrupted write is
     # discarded, then rebuilt by the replay.
     os.makedirs(state + "__staging", exist_ok=True)
-    apply_daily_batch(b2, 2, state)
+    apply(r2, 2)
     assert not os.path.exists(state + "__staging")
-    assert snapshot() == {("2024-03-01", "view"): (2, 4.0),
-                          ("2024-03-02", "click"): (2, 2.0)}
+    assert snapshot() == oneshot(r1 + r2 + r2)
 
 
 def test_incremental_gram_index_equals_batch_and_drives_rewrite(spark, tmp_path):
@@ -313,7 +380,8 @@ def test_incremental_gram_index_equals_batch_and_drives_rewrite(spark, tmp_path)
         substring_dedup_rewrite_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        maintain_gram_index_view,
+        apply_gram_index_delta,
+        read_gram_index_segments,
     )
 
     k = 3
@@ -338,10 +406,11 @@ def test_incremental_gram_index_equals_batch_and_drives_rewrite(spark, tmp_path)
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(str(src_dir))
     )
-    maintain_gram_index_view(stream, state, ckpt, k=k)
+    maintain_view(stream, lambda df, b: apply_gram_index_delta(df, b, state, k=k), ckpt)
 
     corpus = spark.read.json(str(src_dir), schema=schema)
-    got = {r.h: (r.cnt, r.min_okey) for r in spark.read.parquet(state).collect()}
+    view = read_gram_index_segments(spark, state)
+    got = {r.h: (r.cnt, r.min_okey) for r in view.collect()}
     _, _, occ = _gram_occurrences(corpus, "text", "doc_id", k)
     want = {
         r.h: (r.cnt, r.min_okey)
@@ -355,7 +424,6 @@ def test_incremental_gram_index_equals_batch_and_drives_rewrite(spark, tmp_path)
     cross = [mo for cnt, mo in got.values() if cnt >= 2]
     assert cross and min(cross) < (2 << 20)
 
-    view = spark.read.parquet(state)
     got_rw = {
         r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
         for r in substring_dedup_rewrite_from_index(
@@ -415,7 +483,8 @@ def test_gram_index_postings_cap_overflows_across_batches(spark, tmp_path):
         substring_shared_gram_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_gram_index_batch,
+        apply_gram_index_delta,
+        read_gram_index_segments,
     )
 
     k, cap = 3, 3
@@ -428,9 +497,9 @@ def test_gram_index_postings_cap_overflows_across_batches(spark, tmp_path):
     state = str(tmp_path / "gi")
     # each batch alone stays under the cap (3 docs, then 2) — only the
     # cross-batch union (5) overflows
-    apply_gram_index_batch(b0, 0, state, k=k, max_gram_df=cap)
-    apply_gram_index_batch(b1, 1, state, k=k, max_gram_df=cap)
-    view = spark.read.parquet(state)
+    apply_gram_index_delta(b0, 0, state, k=k, max_gram_df=cap)
+    apply_gram_index_delta(b1, 1, state, k=k, max_gram_df=cap)
+    view = read_gram_index_segments(spark, state, max_gram_df=cap)
     over_rows = view.filter("over").collect()
     assert over_rows and all(r.ids is None for r in over_rows)
     assert all(r.cnt >= 5 for r in over_rows)  # counts still maintained
@@ -455,22 +524,17 @@ def test_gram_index_replay_is_idempotent(spark, tmp_path):
     """Re-applying an already-committed batch id must be a no-op (the
     at-least-once replay guard) — counts must not double."""
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_gram_index_batch,
+        apply_gram_index_delta,
+        read_gram_index_segments,
     )
 
     docs = spark.createDataFrame(
         [(1, "x y z x y z"), (2, "x y z")], "doc_id long, text string"
     )
     state = str(tmp_path / "gi")
-    apply_gram_index_batch(docs, 0, state, k=3)
-    first = sorted(
-        (r.h, r.cnt, r.min_okey) for r in spark.read.parquet(state).collect()
-    )
-    apply_gram_index_batch(docs, 0, state, k=3)  # replay
-    again = sorted(
-        (r.h, r.cnt, r.min_okey) for r in spark.read.parquet(state).collect()
-    )
-    assert first == again
+    apply_gram_index_delta(docs, 0, state, k=3)
+    apply_gram_index_delta(docs, 0, state, k=3)  # replay
+    assert _snap_grams(read_gram_index_segments(spark, state)) == _grams_oneshot(docs, 3)
 
 
 def test_session_state_dir_sweeps_stale_sibling_apps(spark):
@@ -544,7 +608,8 @@ def test_incremental_minhash_buckets_equal_batch_and_drive_pairs(spark, tmp_path
         minhash_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        maintain_minhash_buckets_view,
+        apply_minhash_buckets_delta,
+        read_minhash_buckets_segments,
     )
 
     schema = "doc_id long, text string"
@@ -565,31 +630,19 @@ def test_incremental_minhash_buckets_equal_batch_and_drive_pairs(spark, tmp_path
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(str(src_dir))
     )
-    maintain_minhash_buckets_view(stream, state, ckpt, n_hashes=16, bands=4)
+    maintain_view(
+        stream,
+        lambda df, b: apply_minhash_buckets_delta(df, b, state, n_hashes=16, bands=4),
+        ckpt,
+    )
 
     corpus = spark.read.json(str(src_dir), schema=schema)
-    view = spark.read.parquet(state)
+    view = read_minhash_buckets_segments(spark, state)
 
     # maintained buckets == one-shot banding membership
-    from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
-        band_structs,
-        minhash_signatures,
-    )
-    sig = minhash_signatures(corpus, n_hashes=16)
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_structs(16, 4))).alias("b")
-    ).select("doc_id", "b.band_idx", "b.band_hash")
-    want_rows = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .collect()
-    )
-    want_buckets = {(r.band_idx, r.band_hash): tuple(r.ids) for r in want_rows}
-    got_buckets = {
-        (r.band_idx, r.band_hash): tuple(r.ids) for r in view.collect()
-    }
-    assert got_buckets == want_buckets
-    assert all(not r.over for r in view.collect())
+    got_buckets = _snap_buckets(view)
+    assert got_buckets == _buckets_oneshot(corpus)
+    assert not any(over for *_, over in got_buckets)
 
     got = sorted(tuple(r) for r in minhash_pairs_from_index(view).collect())
     want = sorted(tuple(r) for r in minhash_lsh_pairs(corpus, n_hashes=16, bands=4).collect())
@@ -616,7 +669,8 @@ def test_minhash_buckets_cap_overflows_across_batches(spark, tmp_path):
         minhash_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_minhash_buckets_batch,
+        apply_minhash_buckets_delta,
+        read_minhash_buckets_segments,
     )
 
     boiler = "spam spam spam wonderful spam and eggs every single day"
@@ -632,9 +686,9 @@ def test_minhash_buckets_cap_overflows_across_batches(spark, tmp_path):
         "doc_id long, text string",
     )
     state = str(tmp_path / "mh")
-    apply_minhash_buckets_batch(b0, 0, state, max_bucket_size=cap)
-    apply_minhash_buckets_batch(b1, 1, state, max_bucket_size=cap)
-    view = spark.read.parquet(state)
+    apply_minhash_buckets_delta(b0, 0, state, max_bucket_size=cap)
+    apply_minhash_buckets_delta(b1, 1, state, max_bucket_size=cap)
+    view = read_minhash_buckets_segments(spark, state, max_bucket_size=cap)
     over_rows = view.filter("over").collect()
     assert over_rows and all(r.ids is None for r in over_rows)
 
@@ -649,11 +703,11 @@ def test_minhash_buckets_cap_overflows_across_batches(spark, tmp_path):
     assert got == want
     assert {(a, b) for a, b, _ in got} == {(10, 11)}  # boilerplate cluster gone
 
-    # replay idempotence
-    before = sorted(map(tuple, view.collect()))
-    apply_minhash_buckets_batch(b1, 1, state, max_bucket_size=cap)
-    after = sorted(map(tuple, spark.read.parquet(state).collect()))
-    assert before == after
+    # replay idempotence: the view still equals the one-shot buckets
+    apply_minhash_buckets_delta(b1, 1, state, max_bucket_size=cap)
+    assert _snap_buckets(
+        read_minhash_buckets_segments(spark, state, max_bucket_size=cap)
+    ) == _buckets_oneshot(corpus, cap)
 
 
 def test_incremental_exact_dedup_equals_batch(spark, tmp_path):
@@ -662,8 +716,8 @@ def test_incremental_exact_dedup_equals_batch(spark, tmp_path):
     the copy count ADDs across batches — and replay must be a no-op."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_batch,
-        maintain_exact_dedup_view,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
     )
 
     schema = "doc_id long, text string"
@@ -683,11 +737,11 @@ def test_incremental_exact_dedup_equals_batch(spark, tmp_path):
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(str(src_dir))
     )
-    maintain_exact_dedup_view(stream, state, ckpt)
+    maintain_view(stream, lambda df, b: apply_exact_dedup_delta(df, b, state), ckpt)
 
     corpus = spark.read.json(str(src_dir), schema=schema)
     got = {r.fingerprint: (r.doc_id, r.n_copies)
-           for r in spark.read.parquet(state).collect()}
+           for r in read_exact_dedup_segments(spark, state).collect()}
     want = {r.fingerprint: (r.doc_id, r.n_copies)
             for r in exact_dedup(corpus).collect()}
     assert got == want
@@ -695,15 +749,12 @@ def test_incremental_exact_dedup_equals_batch(spark, tmp_path):
     # copies counted across all three batches
     assert (3, 3) in got.values()
 
-    before = sorted(got.items())
-    apply_exact_dedup_batch(
+    apply_exact_dedup_delta(
         spark.createDataFrame([(3, "the same exact text")], schema), 1, state
     )  # replay of batch id 1
-    after = sorted(
-        (r.fingerprint, (r.doc_id, r.n_copies))
-        for r in spark.read.parquet(state).collect()
-    )
-    assert before == after
+    after = {r.fingerprint: (r.doc_id, r.n_copies)
+             for r in read_exact_dedup_segments(spark, state).collect()}
+    assert after == want
 
 
 def test_new_views_tolerate_empty_micro_batches(spark, tmp_path):
@@ -711,36 +762,46 @@ def test_new_views_tolerate_empty_micro_batches(spark, tmp_path):
     empty apply must commit its batch id (so replay accounting stays
     monotone) without disturbing the stored view — for all three r10
     maintainers."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_batch,
-        apply_gram_index_batch,
-        apply_minhash_buckets_batch,
+        _segment_scan,
+        apply_exact_dedup_delta,
+        apply_gram_index_delta,
+        apply_minhash_buckets_delta,
+        read_exact_dedup_segments,
+        read_gram_index_segments,
+        read_minhash_buckets_segments,
     )
 
     schema = "doc_id long, text string"
-    docs = spark.createDataFrame([(1, "a b c d e"), (2, "a b c d e")], schema)
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g h i"), (2, "a b c d e f g h i")], schema)
     empty = spark.createDataFrame([], schema)
 
-    for name, apply_fn in (
-        ("mh", apply_minhash_buckets_batch),
-        ("gi", apply_gram_index_batch),
-        ("ed", apply_exact_dedup_batch),
+    for name, apply_fn, read, want in (
+        ("mh", apply_minhash_buckets_delta,
+         lambda st: _snap_buckets(read_minhash_buckets_segments(spark, st)),
+         _buckets_oneshot(docs)),
+        ("gi", apply_gram_index_delta,
+         lambda st: _snap_grams(read_gram_index_segments(spark, st)),
+         _grams_oneshot(docs, 8)),
+        ("ed", apply_exact_dedup_delta,
+         lambda st: sorted(map(tuple, read_exact_dedup_segments(spark, st).collect())),
+         sorted(map(tuple, exact_dedup(docs).collect()))),
     ):
         state = str(tmp_path / name)
         apply_fn(docs, 0, state)
-        before = sorted(map(tuple, spark.read.parquet(state).collect()))
         apply_fn(empty, 1, state)            # empty batch commits harmlessly
-        after = sorted(map(tuple, spark.read.parquet(state).collect()))
-        assert before == after, name
+        assert _segment_scan(state)[1] == {0, 1}, name
+        assert read(state) == want, name
         apply_fn(empty, 1, state)            # and replays as a no-op
-        again = sorted(map(tuple, spark.read.parquet(state).collect()))
-        assert before == again, name
+        assert read(state) == want, name
 
 
 def test_segmented_gram_index_equals_compacting_view(spark, tmp_path):
     """LSM-segmented state: O(batch) segment applies + read-side monoid
-    merge must equal the compact-every-batch view AND the one-shot
-    aggregate — including a posting cap that only overflows through the
+    merge must equal the one-shot aggregate before and after compaction
+    — including a posting cap that only overflows through the
     cross-segment union — and the index read paths must work unchanged
     against the merged view."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
@@ -748,7 +809,6 @@ def test_segmented_gram_index_equals_compacting_view(spark, tmp_path):
         substring_dedup_rewrite_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_gram_index_batch,
         apply_gram_index_delta,
         compact_gram_index_segments,
         read_gram_index_segments,
@@ -762,27 +822,20 @@ def test_segmented_gram_index_equals_compacting_view(spark, tmp_path):
         [(5, boiler), (6, "unique one two three"), (7, boiler + " alpha beta gamma")],
     ]
     seg_dir = str(tmp_path / "seg")
-    cmp_dir = str(tmp_path / "cmp")
     for b, rows in enumerate(batches):
         bdf = spark.createDataFrame(rows, "doc_id long, text string")
         apply_gram_index_delta(bdf, b, seg_dir, k=k, max_gram_df=cap)
-        apply_gram_index_batch(bdf, b, cmp_dir, k=k, max_gram_df=cap)
-
-    def snap(df):
-        return sorted(
-            (r.h, r.cnt, r.min_okey, tuple(r.ids) if r.ids is not None else None, r.over)
-            for r in df.collect()
-        )
+    corpus = spark.createDataFrame(
+        [r for rows in batches for r in rows], "doc_id long, text string"
+    )
+    snap = _snap_grams
 
     merged = read_gram_index_segments(spark, seg_dir, max_gram_df=cap)
-    want = snap(spark.read.parquet(cmp_dir))
+    want = _grams_oneshot(corpus, k, cap)
     assert snap(merged) == want
     assert any(r[4] for r in want)       # the cap genuinely overflowed
 
     # read path against the segment-merged view == batch rewrite
-    corpus = spark.createDataFrame(
-        [r for rows in batches for r in rows], "doc_id long, text string"
-    )
     got_rw = sorted(
         tuple(r)
         for r in substring_dedup_rewrite_from_index(corpus, merged, k=k).collect()
@@ -806,10 +859,8 @@ def test_segmented_gram_index_equals_compacting_view(spark, tmp_path):
     # post-compaction ingest keeps working
     bdf3 = spark.createDataFrame([(9, boiler)], "doc_id long, text string")
     apply_gram_index_delta(bdf3, 3, seg_dir, k=k, max_gram_df=cap)
-    apply_gram_index_batch(bdf3, 3, cmp_dir, k=k, max_gram_df=cap)
-    assert snap(read_gram_index_segments(spark, seg_dir, max_gram_df=cap)) == snap(
-        spark.read.parquet(cmp_dir)
-    )
+    assert snap(read_gram_index_segments(spark, seg_dir, max_gram_df=cap)) == (
+        _grams_oneshot(corpus.unionByName(bdf3), k, cap))
 
 
 def test_segmented_gram_index_crash_windows_never_double_count(spark, tmp_path):
@@ -888,18 +939,16 @@ def test_segmented_gram_index_crash_windows_never_double_count(spark, tmp_path):
 
 def test_segmented_minhash_and_exact_views_equal_compacting(spark, tmp_path):
     """The shared segment protocol applied to the other two dedup views:
-    segmented state == compacting state == one-shot, before and after
-    compaction, for the LSH-bucket view (capped semilattice) and the
-    exact-dedup view (min/sum monoids)."""
+    segmented state == one-shot, before and after compaction, for the
+    LSH-bucket view (capped semilattice) and the exact-dedup view
+    (min/sum monoids)."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
         exact_dedup,
         minhash_lsh_pairs,
         minhash_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_batch,
         apply_exact_dedup_delta,
-        apply_minhash_buckets_batch,
         apply_minhash_buckets_delta,
         compact_exact_dedup_segments,
         compact_minhash_buckets_segments,
@@ -914,23 +963,15 @@ def test_segmented_minhash_and_exact_views_equal_compacting(spark, tmp_path):
         [(5, near)],
     ]
     schema = "doc_id long, text string"
-    mh_s, mh_c = str(tmp_path / "mhs"), str(tmp_path / "mhc")
-    ed_s, ed_c = str(tmp_path / "eds"), str(tmp_path / "edc")
+    mh_s, ed_s = str(tmp_path / "mhs"), str(tmp_path / "eds")
     for b, rows in enumerate(batches):
         bdf = spark.createDataFrame(rows, schema)
         apply_minhash_buckets_delta(bdf, b, mh_s)
-        apply_minhash_buckets_batch(bdf, b, mh_c)
         apply_exact_dedup_delta(bdf, b, ed_s)
-        apply_exact_dedup_batch(bdf, b, ed_c)
     corpus = spark.createDataFrame([r for rows in batches for r in rows], schema)
+    want_mh = _buckets_oneshot(corpus)
 
-    def snap_mh(df):
-        return sorted((r.band_idx, r.band_hash, tuple(r.ids or ()), r.over)
-                      for r in df.collect())
-
-    assert snap_mh(read_minhash_buckets_segments(spark, mh_s)) == snap_mh(
-        spark.read.parquet(mh_c)
-    )
+    assert _snap_buckets(read_minhash_buckets_segments(spark, mh_s)) == want_mh
     got_pairs = sorted(
         tuple(r)
         for r in minhash_pairs_from_index(
@@ -947,9 +988,7 @@ def test_segmented_minhash_and_exact_views_equal_compacting(spark, tmp_path):
     # compaction preserves both, and replays of covered batches no-op
     assert compact_minhash_buckets_segments(spark, mh_s) == 3
     assert compact_exact_dedup_segments(spark, ed_s) == 3
-    assert snap_mh(read_minhash_buckets_segments(spark, mh_s)) == snap_mh(
-        spark.read.parquet(mh_c)
-    )
+    assert _snap_buckets(read_minhash_buckets_segments(spark, mh_s)) == want_mh
     assert sorted(map(tuple, read_exact_dedup_segments(spark, ed_s).collect())) == want_ed
     bdf0 = spark.createDataFrame(batches[0], schema)
     apply_minhash_buckets_delta(bdf0, 0, mh_s)
@@ -958,16 +997,15 @@ def test_segmented_minhash_and_exact_views_equal_compacting(spark, tmp_path):
 
 
 def test_segmented_term_stats_equals_compacting_and_scores_bm25(spark, tmp_path):
-    """Segmented term-stats state == the compacting view == the one-shot
-    aggregate, and BM25 scored against the segment-merged stats equals
-    the full recompute — before and after compaction."""
+    """Segmented term-stats state == the one-shot aggregate, and BM25
+    scored against the segment-merged stats equals the full recompute —
+    before and after compaction."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.text import (
         bm25_topk,
         bm25_topk_from_stats,
         tokens,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_term_stats_batch,
         apply_term_stats_delta,
         compact_term_stats_segments,
         read_term_stats_segments,
@@ -978,17 +1016,15 @@ def test_segmented_term_stats_equals_compacting_and_scores_bm25(spark, tmp_path)
         [(1, "spark join merge spark spark"), (2, "merge table scan join")],
         [(3, "spark window filter"), (4, "join join window the filter scan")],
     ]
-    seg, cmp_ = str(tmp_path / "seg"), str(tmp_path / "cmp")
+    seg = str(tmp_path / "seg")
     for b, rows in enumerate(batches):
-        bdf = spark.createDataFrame(rows, schema)
-        apply_term_stats_delta(bdf, b, seg)
-        apply_term_stats_batch(bdf, b, cmp_)
+        apply_term_stats_delta(spark.createDataFrame(rows, schema), b, seg)
+    docs = spark.createDataFrame([r for rows in batches for r in rows], schema)
 
     got = sorted(map(tuple, read_term_stats_segments(spark, seg).collect()))
-    want = sorted(map(tuple, spark.read.parquet(cmp_).collect()))
+    want = _term_stats_oneshot(docs)
     assert got == want
 
-    docs = spark.createDataFrame([r for rows in batches for r in rows], schema)
     n_docs = docs.count()
     avgdl = docs.select(F.sum(F.size(tokens("text"))).alias("s")).collect()[0].s / n_docs
     terms = ["spark", "join"]
@@ -1050,9 +1086,7 @@ def test_maintained_index_rejects_non_integral_ids(spark, tmp_path):
     import pytest
 
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_gram_index_batch,
         apply_gram_index_delta,
-        apply_minhash_buckets_batch,
         apply_minhash_buckets_delta,
     )
 
@@ -1060,8 +1094,7 @@ def test_maintained_index_rejects_non_integral_ids(spark, tmp_path):
         [("d1", "a b c d e f g h i"), ("d2", "a b c d e f g h i")],
         "doc_id string, text string",
     )
-    for fn in (apply_gram_index_batch, apply_gram_index_delta,
-               apply_minhash_buckets_batch, apply_minhash_buckets_delta):
+    for fn in (apply_gram_index_delta, apply_minhash_buckets_delta):
         with pytest.raises(TypeError, match="integral"):
             fn(docs, 0, str(tmp_path / fn.__name__))
 
@@ -1069,23 +1102,25 @@ def test_maintained_index_rejects_non_integral_ids(spark, tmp_path):
     ints = spark.createDataFrame(
         [(1, "a b c d e f g h i")], "doc_id int, text string"
     )
-    apply_gram_index_batch(ints, 0, str(tmp_path / "ok_gi"))
-    apply_minhash_buckets_batch(ints, 0, str(tmp_path / "ok_mh"))
+    apply_gram_index_delta(ints, 0, str(tmp_path / "ok_gi"))
+    apply_minhash_buckets_delta(ints, 0, str(tmp_path / "ok_mh"))
 
 
 def test_pre_r10_gram_index_state_backfills_on_read(spark, tmp_path):
     """r10 ADVICE (low): a pre-r10 (h, cnt, min_okey) gram-index view must
-    keep working — applies migrate it by backfilling (ids=NULL, over=true),
-    the rewrite path keeps exact answers (it reads cnt/min_okey only), and
-    the pairs path conservatively claims NO pairs for legacy grams instead
-    of raising AnalysisException."""
+    keep working on READ — the rewrite path keeps exact answers (it reads
+    cnt/min_okey only), and the pairs path conservatively claims NO pairs
+    for legacy grams (backfilled ids=NULL, over=true) instead of raising
+    AnalysisException."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
         substring_dedup_rewrite,
         substring_dedup_rewrite_from_index,
         substring_shared_gram_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_gram_index_batch,
+        _backfill_gram_index_schema,
+        apply_gram_index_delta,
+        read_gram_index_segments,
     )
 
     k = 3
@@ -1094,52 +1129,39 @@ def test_pre_r10_gram_index_state_backfills_on_read(spark, tmp_path):
         "doc_id long, text string",
     )
     # build a CURRENT view, then strip it down to the legacy schema
-    full_state = str(tmp_path / "full")
-    apply_gram_index_batch(docs, 0, full_state, k=k)
-    legacy = spark.read.parquet(full_state).select("h", "cnt", "min_okey")
+    state = str(tmp_path / "full")
+    apply_gram_index_delta(docs, 0, state, k=k)
+    full = read_gram_index_segments(spark, state)
+    assert substring_shared_gram_pairs_from_index(full).count() > 0
     legacy_state = str(tmp_path / "legacy")
-    legacy.write.parquet(legacy_state)
+    full.select("h", "cnt", "min_okey").write.parquet(legacy_state)
+    legacy = spark.read.parquet(legacy_state)
 
     # pairs path: empty, not AnalysisException
-    assert substring_shared_gram_pairs_from_index(
-        spark.read.parquet(legacy_state)
-    ).count() == 0
-
-    # apply on top of legacy state migrates instead of failing
-    more = spark.createDataFrame(
-        [(3, "six seven eight nine ten")], "doc_id long, text string"
-    )
-    apply_gram_index_batch(more, 1, legacy_state, k=k)
-    migrated = spark.read.parquet(legacy_state)
+    assert substring_shared_gram_pairs_from_index(legacy).count() == 0
+    migrated = _backfill_gram_index_schema(legacy)
     assert {"h", "cnt", "min_okey", "ids", "over"} <= set(migrated.columns)
+    assert {bool(r.over) for r in migrated.collect()} == {True}
 
-    # rewrite path still exact: cnt/min_okey survived the migration
-    corpus = docs.union(more)
+    # rewrite path still exact on the legacy view
     got = sorted(
         tuple(r)
-        for r in substring_dedup_rewrite_from_index(corpus, migrated, k=k).collect()
+        for r in substring_dedup_rewrite_from_index(docs, legacy, k=k).collect()
     )
-    want = sorted(tuple(r) for r in substring_dedup_rewrite(corpus, k=k).collect())
+    want = sorted(tuple(r) for r in substring_dedup_rewrite(docs, k=k).collect())
     assert got == want
-
-    # legacy grams stay over=true (no invented pairs); the NEW batch's
-    # grams carry real posting lists
-    by_over = {bool(r.over) for r in migrated.collect()}
-    assert by_over == {True, False}
-    assert substring_shared_gram_pairs_from_index(migrated).count() == 0
 
 
 def test_auto_compaction_triggers_and_preserves_view(spark, tmp_path):
     """r11: the count-threshold auto-compaction wired into the segmented
     appliers must (a) actually fold segments when the readable count hits
-    the trigger, (b) yield a view identical to the never-compacting and
-    compact-every-batch protocols WHATEVER the trigger point, and (c) keep
-    replays of compaction-covered batches as no-ops."""
+    the trigger, (b) yield a view identical to the never-compacting
+    protocol and the one-shot aggregate WHATEVER the trigger point, and
+    (c) keep replays of compaction-covered batches as no-ops."""
     import os
 
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
         _segment_scan,
-        apply_term_stats_batch,
         apply_term_stats_delta,
         read_term_stats_segments,
     )
@@ -1152,18 +1174,17 @@ def test_auto_compaction_triggers_and_preserves_view(spark, tmp_path):
     auto2 = str(tmp_path / "auto2")    # trigger every 2nd apply
     auto4 = str(tmp_path / "auto4")
     manual = str(tmp_path / "manual")  # never compacts
-    cmp_dir = str(tmp_path / "cmp")    # compact-every-batch protocol
     for b, rows in enumerate(batches):
         bdf = spark.createDataFrame(rows, "doc_id long, text string")
         apply_term_stats_delta(bdf, b, auto2, auto_compact=2)
         apply_term_stats_delta(bdf, b, auto4, auto_compact=4)
         apply_term_stats_delta(bdf, b, manual, auto_compact=None)
-        apply_term_stats_batch(bdf, b, cmp_dir)
 
     def snap(state):
         return sorted(map(tuple, read_term_stats_segments(spark, state).collect()))
 
-    want = sorted(map(tuple, spark.read.parquet(cmp_dir).collect()))
+    want = _term_stats_oneshot(spark.createDataFrame(
+        [r for rows in batches for r in rows], "doc_id long, text string"))
     assert snap(auto2) == want
     assert snap(auto4) == want
     assert snap(manual) == want
@@ -1258,7 +1279,7 @@ def test_retractable_exact_dedup_equals_rebuild(spark, tmp_path):
 
 def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
     """r11: the retractable gram-index view must read equal to the
-    add-only view REBUILT over the surviving corpus — including cnt /
+    one-shot gram aggregate over the surviving corpus — including cnt /
     keep-first min_okey re-election when the retracted doc held the
     global argmin — and the whole *_from_index read-path family must give
     the batch answers for the survivors, across compaction."""
@@ -1269,7 +1290,6 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
         substring_shared_gram_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_gram_index_batch,
         apply_gram_index_retractable_delta,
         compact_gram_index_retractable_segments,
         read_gram_index_retractable_segments,
@@ -1288,21 +1308,13 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
     apply_gram_index_retractable_delta(
         spark.createDataFrame(b1, schema), 1, state, k=k)
 
-    def snap(df):
-        return sorted(
-            (r.h, r.cnt, r.min_okey,
-             tuple(r.ids) if r.ids is not None else None, r.over)
-            for r in df.collect()
-        )
+    snap = _snap_grams
 
-    def rebuild(rows, tag):
-        cdir = str(tmp_path / f"cmp_{tag}")
-        apply_gram_index_batch(
-            spark.createDataFrame(rows, schema), 0, cdir, k=k, max_gram_df=cap)
-        return snap(spark.read.parquet(cdir))
+    def rebuild(rows):
+        return _grams_oneshot(spark.createDataFrame(rows, schema), k, cap)
 
     merged = read_gram_index_retractable_segments(spark, state, max_gram_df=cap)
-    assert snap(merged) == rebuild(b0 + b1, "all")
+    assert snap(merged) == rebuild(b0 + b1)
     assert any(r[4] for r in snap(merged))  # boiler grams genuinely over cap
 
     # retract doc 1 — the keep-first argmin holder for the boiler grams —
@@ -1312,7 +1324,7 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
         spark.createDataFrame([b0[0], b1[1]], schema), 2, state, k=k)
     survivors = [b0[1], b1[0], b1[2]]
     merged = read_gram_index_retractable_segments(spark, state, max_gram_df=cap)
-    assert snap(merged) == rebuild(survivors, "surv")
+    assert snap(merged) == rebuild(survivors)
     assert not any(r[4] for r in snap(merged))  # cap RECOVERED (3 docs left)
 
     # downstream read paths: rewrite + pairs over survivors == batch
@@ -1339,16 +1351,16 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
     # compaction still works
     assert compact_gram_index_retractable_segments(spark, state) == 3
     assert snap(read_gram_index_retractable_segments(spark, state, max_gram_df=cap)) \
-        == rebuild(survivors, "surv2")
+        == rebuild(survivors)
     retract_gram_index_delta(
         spark.createDataFrame([b1[0]], schema), 3, state, k=k)
     assert snap(read_gram_index_retractable_segments(spark, state, max_gram_df=cap)) \
-        == rebuild([b0[1], b1[2]], "surv3")
+        == rebuild([b0[1], b1[2]])
 
 
 def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
     """r11: the retractable LSH-bucket view must read equal to the
-    add-only view rebuilt over survivors (including a bucket recovering
+    one-shot banding over survivors (including a bucket recovering
     from its cap collapse), and pairs from the view must equal the batch
     detector on the surviving corpus."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
@@ -1356,7 +1368,6 @@ def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
         minhash_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_minhash_buckets_batch,
         apply_minhash_buckets_retractable_delta,
         read_minhash_buckets_retractable_segments,
         retract_minhash_buckets_delta,
@@ -1374,23 +1385,14 @@ def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
     apply_minhash_buckets_retractable_delta(
         spark.createDataFrame(b1, schema), 1, state)
 
-    def snap(df):
-        return sorted(
-            (r.band_idx, r.band_hash,
-             tuple(r.ids) if r.ids is not None else None, r.over)
-            for r in df.collect()
-        )
+    snap = _snap_buckets
 
-    def rebuild(rows, tag):
-        cdir = str(tmp_path / f"cmp_{tag}")
-        apply_minhash_buckets_batch(
-            spark.createDataFrame(rows, schema), 0, cdir,
-            max_bucket_size=cap)
-        return snap(spark.read.parquet(cdir))
+    def rebuild(rows):
+        return _buckets_oneshot(spark.createDataFrame(rows, schema), cap)
 
     got = snap(read_minhash_buckets_retractable_segments(spark, state,
                                                          max_bucket_size=cap))
-    assert got == rebuild(b0 + b1, "all")
+    assert got == rebuild(b0 + b1)
     assert any(r[3] for r in got)  # 5 identical docs → bucket over cap=3
 
     # retract two of the identical docs: the bucket falls back under cap
@@ -1399,7 +1401,7 @@ def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
     survivors = [b0[1], b0[2], b1[1], b1[2]]
     merged = read_minhash_buckets_retractable_segments(spark, state,
                                                        max_bucket_size=cap)
-    assert snap(merged) == rebuild(survivors, "surv")
+    assert snap(merged) == rebuild(survivors)
     assert not any(r[3] for r in snap(merged))  # cap recovered
 
     got_pairs = sorted(
@@ -2724,12 +2726,11 @@ def test_pooled_term_stats_deltas_match_sequential(spark, tmp_path):
     term-stats delta applies CONCURRENTLY — immutable per-batch segments +
     an additive (cf, df) fold commute, so the pooled protocol must land
     the same readable state as the sequential segmented protocol and the
-    same stats as the full-rewrite combine protocol."""
+    same stats as the one-shot aggregate."""
     from concurrent.futures import ThreadPoolExecutor
 
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
         _merge_term_stats_segments,
-        apply_term_stats_batch,
         apply_term_stats_delta,
         maybe_compact,
         read_term_stats_segments,
@@ -2741,7 +2742,7 @@ def test_pooled_term_stats_deltas_match_sequential(spark, tmp_path):
         [(1, "spark join merge spark spark"), (2, "merge table scan join")],
         [(3, "spark window filter"), (4, "join join window the filter scan")],
     ]
-    pooled, seq, cmp_ = (str(tmp_path / d) for d in ("pooled", "seq", "cmp"))
+    pooled, seq = str(tmp_path / "pooled"), str(tmp_path / "seq")
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
             pool.submit(apply_term_stats_delta,
@@ -2756,12 +2757,56 @@ def test_pooled_term_stats_deltas_match_sequential(spark, tmp_path):
     assert segment_stats(pooled)["raw_segments"] == 2
 
     for b, rows in enumerate(batches):
-        bdf = spark.createDataFrame(rows, schema)
-        apply_term_stats_delta(bdf, b, seq)
-        apply_term_stats_batch(bdf, b, cmp_)
+        apply_term_stats_delta(spark.createDataFrame(rows, schema), b, seq)
 
     def stats(state):
         return sorted(map(tuple, read_term_stats_segments(spark, state).collect()))
 
-    want = sorted(map(tuple, spark.read.parquet(cmp_).collect()))
+    want = _term_stats_oneshot(
+        spark.createDataFrame([r for rows in batches for r in rows], schema))
     assert stats(pooled) == stats(seq) == want
+
+
+def test_maybe_compact_tombstone_first_diverges_on_disk_only(spark, tmp_path):
+    """maybe_compact promises ANSWER-equivalence with the sequential
+    protocol, not on-disk equality: when the tombstone lands FIRST, the
+    sequential inline fraction check finds no earlier segment and never
+    compacts, while the pooled post-drain check sees 1 tombstone in 3
+    segments and folds them. Reads agree; the end states differ."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
+        _fold_count_sketch_weights,
+        apply_count_sketch_delta,
+        maybe_compact,
+        read_count_sketch_segments,
+        retract_count_sketch_delta,
+        segment_stats,
+    )
+
+    writes = [
+        (retract_count_sketch_delta, [("a",)], 2),   # the tombstone lands first
+        (apply_count_sketch_delta, [("a",), ("b",), ("a",)], 0),
+        (apply_count_sketch_delta, [("c",), ("a",)], 1),
+    ]
+
+    def write(fn, rows, b, state, auto_compact):
+        fn(spark.createDataFrame(rows, "k string"), b, state, "k", depth=3,
+           width=8, auto_compact=auto_compact)
+
+    seq, pooled = str(tmp_path / "seq"), str(tmp_path / "pooled")
+    for fn, rows, b in writes:
+        write(fn, rows, b, seq, 16)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = [pool.submit(write, fn, rows, b, pooled, None) for fn, rows, b in writes]
+        for f in futs:
+            f.result()
+    assert maybe_compact(spark, pooled, _fold_count_sketch_weights) is True
+
+    def counters(state):
+        return sorted(map(tuple, read_count_sketch_segments(spark, state).collect()))
+
+    assert counters(pooled) == counters(seq)
+    ss, sp = segment_stats(seq), segment_stats(pooled)
+    assert (ss["compact_segments"], ss["raw_segments"], ss["tombstone_segments"]) == (0, 3, 1)
+    assert (sp["compact_segments"], sp["raw_segments"]) == (1, 0)

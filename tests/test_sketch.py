@@ -96,6 +96,41 @@ def test_triangle_known_graph(spark):
     assert row.clustering_ppm == 3_000_000 * 2 // 8
 
 
+def test_co_supplier_pair_key_survives_int32_suppkeys(spark, tmp_path):
+    """The packed pair key a·2³² + b must not degenerate on an int32
+    l_suppkey (Spark masks an int shift amount mod 32, so the key became
+    a + b and pairs (1, 4) and (2, 3) collided): shared counts must equal
+    an unpacked groupBy on (a, b)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from skylogix_real_time_weather_data_pipeline_spark.plans.sketches import (
+        TRI_MIN_SHARED,
+        co_supplier_shared_counts,
+    )
+
+    trades = [(c, s) for c in (1, 2) for s in (1, 2, 3, 4)] + [(3, 1), (3, 4)]
+    pq.write_table(pa.table({
+        "l_orderkey": pa.array(range(len(trades)), pa.int64()),
+        "l_suppkey": pa.array([s for _, s in trades], pa.int32()),
+    }), str(tmp_path / "lineitem.parquet"))
+    pq.write_table(pa.table({
+        "o_orderkey": pa.array(range(len(trades)), pa.int64()),
+        "o_custkey": pa.array([c for c, _ in trades], pa.int64()),
+    }), str(tmp_path / "orders.parquet"))
+
+    got = sorted(map(tuple, co_supplier_shared_counts(spark, str(tmp_path)).collect()))
+    cs = spark.createDataFrame(trades, "c long, s int")
+    want = sorted(map(tuple, (
+        cs.alias("t1").join(cs.alias("t2"), (F.col("t1.c") == F.col("t2.c"))
+                            & (F.col("t1.s") < F.col("t2.s")))
+        .groupBy(F.col("t1.s").alias("a"), F.col("t2.s").alias("b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+        .filter(F.col("shared") >= TRI_MIN_SHARED)
+    ).collect()))
+    assert got == want and (1, 4, 3) in got
+
+
 def test_triangle_free_graph(spark):
     # star graph: wedges but zero triangles
     edges = spark.createDataFrame([(1, i) for i in range(2, 7)], ["a", "b"])

@@ -128,6 +128,43 @@ def test_session_window_matches_lag_cumsum_form(spark, sf_dir):
     assert a == b
 
 
+def test_sessionize_sub_second_gap_matches_oracle(spark, tmp_path):
+    """The 7200 s session gap is tested on microseconds, as the oracle's
+    fractional epoch(ts) does: events 7200.5 s apart whose whole-second
+    floors differ by exactly 7200 start a NEW session, while a gap of
+    exactly 7200 s stays in one."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from skylogix_real_time_weather_data_pipeline_spark.plans.streaming_batch import (
+        O_SESSIONIZE,
+        q_sessionize,
+    )
+
+    t0 = datetime(2024, 3, 1, 0, 0, 0)
+    rows = [(1, t0), (1, t0 + timedelta(seconds=7200.5)),
+            (2, t0 + timedelta(seconds=0.5)), (2, t0 + timedelta(seconds=7200.5))]
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({
+        "user_id": pa.array([u for u, _ in rows], pa.int64()),
+        "ts": pa.array([t for _, t in rows], pa.timestamp("us")),
+        "value": pa.array([1.0] * len(rows), pa.float64()),
+    }), path)
+
+    got = sorted((r.user_id, r.session_seq, r.n_events)
+                 for r in q_sessionize(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+        want = sorted((u, s, n) for u, s, _, _, n, _ in con.execute(O_SESSIONIZE).fetchall())
+    finally:
+        con.close()
+    assert got == want == [(1, 1, 1), (1, 2, 1), (2, 1, 2)]
+
+
 def test_metrics_listener_counts_rows(spark, raw_dir, tmp_path):
     listener = attach_metrics_listener(spark)
     try:

@@ -198,9 +198,12 @@ def test_ingest_loop_all_dedup_views_compose(spark, tmp_path):
         substring_dedup_rewrite_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_batch,
-        apply_gram_index_batch,
-        apply_minhash_buckets_batch,
+        apply_exact_dedup_delta,
+        apply_gram_index_delta,
+        apply_minhash_buckets_delta,
+        read_exact_dedup_segments,
+        read_gram_index_segments,
+        read_minhash_buckets_segments,
     )
     import pyspark.sql.functions as F
 
@@ -218,12 +221,12 @@ def test_ingest_loop_all_dedup_views_compose(spark, tmp_path):
         bdf = spark.createDataFrame(rows, schema)
         seen.extend(rows)
         # (1) maintenance: one pass over the batch per view
-        apply_exact_dedup_batch(bdf, b, ed)
-        apply_minhash_buckets_batch(bdf, b, mh)
-        apply_gram_index_batch(bdf, b, gi, k=4)
+        apply_exact_dedup_delta(bdf, b, ed)
+        apply_minhash_buckets_delta(bdf, b, mh)
+        apply_gram_index_delta(bdf, b, gi, k=4)
 
         # (2) the batch's dedup answers, from the views only
-        ev = spark.read.parquet(ed)
+        ev = read_exact_dedup_segments(spark, ed)
         batch_fp = bdf.select(
             "doc_id", F.md5("text").alias("fingerprint")
         )
@@ -249,7 +252,7 @@ def test_ingest_loop_all_dedup_views_compose(spark, tmp_path):
     corpus = spark.createDataFrame(seen, schema)
 
     # exact view == one-shot
-    got_ed = sorted(tuple(r) for r in spark.read.parquet(ed).collect())
+    got_ed = sorted(tuple(r) for r in read_exact_dedup_segments(spark, ed).collect())
     want_ed = sorted(tuple(r) for r in exact_dedup(corpus).collect())
     assert got_ed == want_ed
 
@@ -258,7 +261,7 @@ def test_ingest_loop_all_dedup_views_compose(spark, tmp_path):
     got_pairs = {
         (r.id_a, r.id_b)
         for r in minhash_pairs_from_index(
-            spark.read.parquet(mh), batch_ids=last_ids
+            read_minhash_buckets_segments(spark, mh), batch_ids=last_ids
         ).collect()
     }
     want_pairs = {
@@ -272,7 +275,7 @@ def test_ingest_loop_all_dedup_views_compose(spark, tmp_path):
     got_rw = sorted(
         tuple(r)
         for r in substring_dedup_rewrite_from_index(
-            corpus, spark.read.parquet(gi), k=4
+            corpus, read_gram_index_segments(spark, gi), k=4
         ).collect()
     )
     want_rw = sorted(tuple(r) for r in substring_dedup_rewrite(corpus, k=4).collect())
