@@ -309,7 +309,7 @@ def main() -> int:
     # SERIES BREAK (r15, r14 verdict #3): the two applies now go through
     # the SEGMENTED term-stats appliers submitted from a thread pool —
     # the same commutativity contract as the doc-views/count-sketch
-    # pooling (immutable per-batch segments + additive (cf, df) fold;
+    # pooling (immutable per-batch segments + Z-set weight fold;
     # equivalence pytest-pinned in
     # test_pooled_term_stats_deltas_match_sequential) — then one
     # post-drain maybe_compact (a no-op at 2 data segments, like the
@@ -320,6 +320,9 @@ def main() -> int:
     # compare r15+ numbers for this row against r14-and-earlier with
     # that protocol change in mind. BM25 answers are identical (the fold
     # and the combined view agree; pytest-pinned since r10).
+    # A second break: the term-stats segments are now doc-granular Z-set
+    # rows (term, doc, tf, ±1), the one segment format of the doc views,
+    # instead of pre-aggregated (cf, df) partials.
     import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
@@ -331,8 +334,8 @@ def main() -> int:
         tokens,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        _merge_term_stats_segments,
         apply_term_stats_delta,
+        compact_term_stats_segments,
         maybe_compact,
         read_term_stats_segments,
     )
@@ -358,7 +361,7 @@ def main() -> int:
                 ]
                 for f in futs:
                     f.result()
-            maybe_compact(spark, state, _merge_term_stats_segments)
+            maybe_compact(spark, state, compact_term_stats_segments)
             stats = read_term_stats_segments(spark, state)
             return bm25_topk_from_stats(
                 docs, stats, n_docs, avgdl, ["data", "model"], k=10

@@ -68,16 +68,17 @@ def _pairs_from_sorted_ids(ids: str) -> F.Column:
     member — O(m²) element copies per bucket before any pair exists —
     while two nested index ``sequence``s touch members by ``element_at``
     only (A/B on 200k buckets of 2-12 members: 0.44 s → 0.19 s noop,
-    byte-identical output). PRECONDITION (unchanged from the slice form
-    in practice, now load-bearing): callers must filter ``size >= 2``
-    first — every posting-list/bucket caller already does — because
-    ``sequence(1, 0)`` DESCENDS and would fabricate a reversed pair for
-    singleton buckets the slice form silently skipped."""
+    byte-identical output). Arrays with fewer than two members yield no
+    pairs: ``sequence(1, 0)`` DESCENDS, so without the ``size >= 2``
+    guard an empty or singleton array reaches ``element_at(ids, 0)`` and
+    fails the whole job. The call-site filters stay, because they also
+    apply the upper bucket cap."""
     return F.expr(
+        f"CASE WHEN size({ids}) >= 2 THEN "
         f"flatten(transform(sequence(1, size({ids}) - 1), i -> "
         f"transform(sequence(i + 1, size({ids})), j -> "
         f"named_struct('id_a', element_at({ids}, i),"
-        f" 'id_b', element_at({ids}, j)))))"
+        f" 'id_b', element_at({ids}, j))))) ELSE array() END"
     )
 
 
@@ -1066,9 +1067,9 @@ def substring_shared_gram_pairs_from_index(index: DataFrame,
     :func:`substring_dedup_rewrite_from_index`; stats:
     :func:`substring_dup_spans_from_index`).
 
-    The df cap is baked into the view at BUILD time (``max_gram_df`` on
-    the apply and segment-read side): a gram whose distinct-doc set
-    ever exceeds it stores (ids=NULL, over=true) and contributes no pairs —
+    The df cap is applied when the view is READ (``max_gram_df`` on
+    ``read_gram_index_segments``): a gram whose live distinct-doc set
+    exceeds it reads as (ids=NULL, over=true) and contributes no pairs —
     exactly the batch detector's boilerplate-gram cutoff, so with the
     same cap the output equals the one-shot batch pairs (pytest-pinned,
     including a cap that only overflows through a cross-batch union).

@@ -55,9 +55,10 @@ def _scan_partitions_estimate(df: DataFrame) -> int | None:
     decision only needs the ORDER OF MAGNITUDE of the scan's
     parallelism, which for a file source follows from file sizes and
     ``spark.sql.files.maxPartitionBytes`` (each file yields about
-    ceil(size/split) slices; slice packing only merges small files, so
-    this over-estimates on many-tiny-file layouts — acceptable, because
-    at that shape the downstream per-row work is already spread).
+    ceil(size/split) slices). Known blind spot: slice packing merges
+    small files, so on many-tiny-file layouts this OVER-estimates — the
+    caller then skips the respread although packing left only a few
+    partitions, and the downstream per-row work runs on few cores.
     Returns None — caller falls back to the exact probe — for non-file
     sources (test createDataFrame frames, joins over views) and
     non-local URIs whose sizes we cannot stat cheaply. Either branch of

@@ -204,9 +204,9 @@ def q_minhash_pairs_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-bucket view (r10): build the view over two corpus halves as
     replay-guarded segment applies
     (streaming/matview.py:apply_minhash_buckets_delta — per-doc
-    signatures are pure functions of the document, member sets union on
-    the capped semilattice), then read candidate pairs entirely from
-    the segment-merged view (streaming/matview.py:
+    signatures are pure functions of the document, segments carry
+    doc-granular memberships and the bucket cap applies at read time),
+    then read candidate pairs entirely from the segment-merged view (streaming/matview.py:
     read_minhash_buckets_segments → ext/dedup.py:minhash_pairs_from_index
     — no corpus scan, no signature recomputation). The oracle is
     byte-identical to docs_minhash_lsh_pairs's: maintained buckets ==
@@ -224,11 +224,11 @@ def q_minhash_pairs_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(root, "view")
     apply_minhash_buckets_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state,
-        n_hashes=_N_HASHES, bands=_BANDS, max_bucket_size=_MAX_BUCKET,
+        n_hashes=_N_HASHES, bands=_BANDS,
     )
     apply_minhash_buckets_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state,
-        n_hashes=_N_HASHES, bands=_BANDS, max_bucket_size=_MAX_BUCKET,
+        n_hashes=_N_HASHES, bands=_BANDS,
     )
     view = read_minhash_buckets_segments(spark, state, max_bucket_size=_MAX_BUCKET)
     return dedup.minhash_pairs_from_index(view, max_bucket_size=_MAX_BUCKET)
@@ -237,8 +237,9 @@ def q_minhash_pairs_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_exact_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup read from the MAINTAINED fingerprint view (r10): two
     replay-guarded segment applies
-    (streaming/matview.py:apply_exact_dedup_delta — survivor id MINs,
-    copy count ADDs), then the segment-merged view
+    (streaming/matview.py:apply_exact_dedup_delta — +1-weight
+    (fingerprint, doc) rows; the read fold elects the MIN survivor and
+    counts live copies), then the segment-merged view
     (streaming/matview.py:read_exact_dedup_segments) IS the answer — the
     membership table a deployment probes per ingest batch without
     re-hashing history. Oracle byte-identical to docs_exact_dedup's (maintained
@@ -271,21 +272,21 @@ def q_exact_dedup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_as_of,
+        apply_exact_dedup_delta,
+        read_exact_dedup_as_of,
         retract_exact_dedup_delta,
     )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_exact_asof")
     state = os.path.join(root, "view")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state, auto_compact=None)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state, auto_compact=None)
     retract_exact_dedup_delta(
         docs.filter(F.col("doc_id") % 7 == 3), 2, state, auto_compact=None)
-    return read_exact_dedup_retractable_as_of(spark, state, 1).select(
+    return read_exact_dedup_as_of(spark, state, 1).select(
         "fingerprint", "doc_id", "n_copies"
     )
 
@@ -293,35 +294,35 @@ def q_exact_dedup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_pairs_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs AFTER A DELETE (r11): maintain the
     RETRACTABLE LSH-bucket view (doc-granular (band, bucket, doc) Z-set
-    memberships, streaming/matview.py:apply_minhash_buckets_retractable_delta)
+    memberships, streaming/matview.py:apply_minhash_buckets_delta)
     over two batches, tombstone the doc_id % 7 == 3 shard, and answer
     pairs from the live view with no corpus scan
     (ext/dedup.py:minhash_pairs_from_index). Retraction changes real
     answers here: pairs touching retracted docs vanish, and a bucket
-    that overflowed the cap RECOVERS when members retract (the sticky
-    add-only collapse is an artifact, not a semantic). Oracle = the
+    that overflowed the cap RECOVERS when members retract (the cap is
+    recomputed from live members at read time). Oracle = the
     one-shot pair detector's SQL over the survivors."""
     import os
 
     from ..streaming.matview import (
-        apply_minhash_buckets_retractable_delta,
-        read_minhash_buckets_retractable_segments,
+        apply_minhash_buckets_delta,
+        read_minhash_buckets_segments,
         retract_minhash_buckets_delta,
     )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_minhash_rz")
     state = os.path.join(root, "view")
-    apply_minhash_buckets_retractable_delta(
+    apply_minhash_buckets_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state,
         n_hashes=_N_HASHES, bands=_BANDS)
-    apply_minhash_buckets_retractable_delta(
+    apply_minhash_buckets_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state,
         n_hashes=_N_HASHES, bands=_BANDS)
     retract_minhash_buckets_delta(
         docs.filter(F.col("doc_id") % 7 == 3), 2, state,
         n_hashes=_N_HASHES, bands=_BANDS)
-    view = read_minhash_buckets_retractable_segments(
+    view = read_minhash_buckets_segments(
         spark, state, max_bucket_size=_MAX_BUCKET)
     return dedup.minhash_pairs_from_index(view, max_bucket_size=_MAX_BUCKET)
 
@@ -348,9 +349,9 @@ def q_minhash_pairs_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_minhash_buckets_retractable_delta,
+        apply_minhash_buckets_delta,
         maintain_changelog_view,
-        read_minhash_buckets_retractable_segments,
+        read_minhash_buckets_segments,
         retract_minhash_buckets_delta,
     )
 
@@ -372,12 +373,12 @@ def q_minhash_pairs_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     maintain_changelog_view(
         stream, state, os.path.join(root, "ckpt"),
-        apply_fn=lambda df, bid, sd: apply_minhash_buckets_retractable_delta(
+        apply_fn=lambda df, bid, sd: apply_minhash_buckets_delta(
             df, bid, sd, n_hashes=_N_HASHES, bands=_BANDS),
         retract_fn=lambda df, bid, sd: retract_minhash_buckets_delta(
             df, bid, sd, n_hashes=_N_HASHES, bands=_BANDS),
     )
-    view = read_minhash_buckets_retractable_segments(
+    view = read_minhash_buckets_segments(
         spark, state, max_bucket_size=_MAX_BUCKET)
     return dedup.minhash_pairs_from_index(view, max_bucket_size=_MAX_BUCKET)
 
@@ -385,29 +386,29 @@ def q_minhash_pairs_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_exact_dedup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The r11 curation-loop deletion path: ingest the corpus into the
     RETRACTABLE exact-dedup view (doc-granular Z-set segments,
-    streaming/matview.py:apply_exact_dedup_retractable_delta) in two
+    streaming/matview.py:apply_exact_dedup_delta) in two
     batches, then retract a corrected shard (doc_id % 7 == 3) as a
     tombstone batch — including fingerprints whose stored MIN survivor is
-    retracted, the case the add-only aggregate view cannot express
+    retracted, the case a stored (min, count) aggregate cannot express
     without a full rebuild. The read fold must equal a rebuild over the
     surviving corpus, which is exactly what the oracle computes."""
     import os
 
     from ..streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_exact_rz")
     state = os.path.join(root, "view")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state)
     retract_exact_dedup_delta(docs.filter(F.col("doc_id") % 7 == 3), 2, state)
-    return read_exact_dedup_retractable_segments(spark, state).select(
+    return read_exact_dedup_segments(spark, state).select(
         "fingerprint", "doc_id", "n_copies"
     )
 
@@ -436,9 +437,9 @@ def q_exact_dedup_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_exact_dedup_retractable_delta,
+        apply_exact_dedup_delta,
         maintain_changelog_view,
-        read_exact_dedup_retractable_segments,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -461,10 +462,10 @@ def q_exact_dedup_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     maintain_changelog_view(
         stream, state, os.path.join(root, "ckpt"),
-        apply_fn=lambda df, bid, sd: apply_exact_dedup_retractable_delta(df, bid, sd),
+        apply_fn=lambda df, bid, sd: apply_exact_dedup_delta(df, bid, sd),
         retract_fn=lambda df, bid, sd: retract_exact_dedup_delta(df, bid, sd),
     )
-    return read_exact_dedup_retractable_segments(spark, state).select(
+    return read_exact_dedup_segments(spark, state).select(
         "fingerprint", "doc_id", "n_copies"
     )
 
@@ -1623,6 +1624,8 @@ def q_ivf_topk_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.matview import (
         apply_ivf_postings_retractable_delta,
+        compact_ivf_postings_retractable_segments,
+        maybe_compact,
         read_ivf_postings_retractable_segments,
         retract_ivf_postings_delta,
     )
@@ -1649,8 +1652,6 @@ def q_ivf_topk_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pytest-pinned).
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..streaming.matview import _fold_ivf_postings_weights, maybe_compact
-
     deltas = [
         (apply_ivf_postings_retractable_delta,
          corpus.filter(F.col("vec_id") % 2 == 0), 0),
@@ -1664,7 +1665,7 @@ def q_ivf_topk_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for fn, df, b in deltas]
         for f in futs:
             f.result()
-    maybe_compact(spark, state, _fold_ivf_postings_weights,
+    maybe_compact(spark, state, compact_ivf_postings_retractable_segments,
                   fraction_trigger=False)
     live = read_ivf_postings_retractable_segments(spark, state).withColumnRenamed(
         "cell", "label"
@@ -2467,9 +2468,9 @@ def _gram_index_view(spark: SparkSession, sf_dir: str, prefix: str,
     root = _session_state_dir(spark, sf_dir, prefix)
     state = os.path.join(root, "view")
     apply_gram_index_delta(docs.filter(F.col("doc_id") % 2 == 0), 0, state,
-                           k=_SUBSTR_K, max_gram_df=max_gram_df)
+                           k=_SUBSTR_K)
     apply_gram_index_delta(docs.filter(F.col("doc_id") % 2 == 1), 1, state,
-                           k=_SUBSTR_K, max_gram_df=max_gram_df)
+                           k=_SUBSTR_K)
     return docs, read_gram_index_segments(spark, state, max_gram_df=max_gram_df)
 
 
@@ -2527,8 +2528,8 @@ def q_substring_rewrite_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     retractable (Z-set, doc-granular) gram-index view over two ingest
     batches, retract a corrected shard (doc_id % 7 == 3) as a tombstone
     batch, then rewrite the SURVIVING corpus from the merged view
-    (streaming/matview.py:apply_gram_index_retractable_delta /
-    retract_gram_index_delta / read_gram_index_retractable_segments).
+    (streaming/matview.py:apply_gram_index_delta /
+    retract_gram_index_delta / read_gram_index_segments).
     Retraction here changes real answers — keep-first argmins held by
     retracted docs re-elect, duplicate counts drop — so the oracle is the
     one-shot rewrite oracle evaluated over the survivors, certifying the
@@ -2536,21 +2537,21 @@ def q_substring_rewrite_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_gram_index_retractable_delta,
-        read_gram_index_retractable_segments,
+        apply_gram_index_delta,
+        read_gram_index_segments,
         retract_gram_index_delta,
     )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_gram_rz")
     state = os.path.join(root, "view")
-    apply_gram_index_retractable_delta(
+    apply_gram_index_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state, k=_SUBSTR_K)
-    apply_gram_index_retractable_delta(
+    apply_gram_index_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state, k=_SUBSTR_K)
     retract_gram_index_delta(
         docs.filter(F.col("doc_id") % 7 == 3), 2, state, k=_SUBSTR_K)
-    view = read_gram_index_retractable_segments(spark, state)
+    view = read_gram_index_segments(spark, state)
     survivors = docs.filter(F.col("doc_id") % 7 != 3)
     return dedup.substring_dedup_rewrite_from_index(survivors, view, k=_SUBSTR_K)
 
@@ -2560,7 +2561,7 @@ def q_substring_rewrite_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of machinery has a driver hash only through the exact-dedup view,
     whose read fold is plain MIN/ADD monoids. This row reconstructs the
     retractable GRAM-INDEX view as it stood BEFORE a delete
-    (streaming/matview.py:read_gram_index_retractable_as_of — merge only
+    (streaming/matview.py:read_gram_index_as_of — merge only
     segments with batch id <= 1) and drives the ExactSubstr rewrite of
     the FULL corpus from that snapshot: the weighted capped-posting fold
     (doc-granular Z-set weights, cnt/min_okey argmins, over-cap
@@ -2571,24 +2572,24 @@ def q_substring_rewrite_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_gram_index_retractable_delta,
-        read_gram_index_retractable_as_of,
+        apply_gram_index_delta,
+        read_gram_index_as_of,
         retract_gram_index_delta,
     )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_gram_asof")
     state = os.path.join(root, "view")
-    apply_gram_index_retractable_delta(
+    apply_gram_index_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state, k=_SUBSTR_K,
         auto_compact=None)
-    apply_gram_index_retractable_delta(
+    apply_gram_index_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state, k=_SUBSTR_K,
         auto_compact=None)
     retract_gram_index_delta(
         docs.filter(F.col("doc_id") % 7 == 3), 2, state, k=_SUBSTR_K,
         auto_compact=None)
-    snapshot = read_gram_index_retractable_as_of(spark, state, 1)
+    snapshot = read_gram_index_as_of(spark, state, 1)
     return dedup.substring_dedup_rewrite_from_index(docs, snapshot, k=_SUBSTR_K)
 
 
@@ -2610,8 +2611,8 @@ def q_substring_pairs_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     view's capped posting lists (r10, r9 verdict #5): after the two
     micro-batch applies, the pair query never touches the corpus at all
     (ext/dedup.py:substring_shared_gram_pairs_from_index — the view's
-    posting lists ARE the detector's buckets; the df cap is baked at
-    build time, matching the batch detector's). The oracle is
+    posting lists ARE the detector's buckets; the df cap applies at
+    read time, matching the batch detector's). The oracle is
     byte-identical to docs_substring_pairs's by the view==batch
     contract."""
     _, view = _gram_index_view(
@@ -3197,8 +3198,8 @@ def q_url_dedup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -3206,13 +3207,13 @@ def q_url_dedup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", urlops.canonicalize_url("url").alias("curl"))
     root = _session_state_dir(spark, sf_dir, "skylogix_url_rz")
     state = os.path.join(root, "view")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         d.filter(F.col("doc_id") % 2 == 0), 0, state, text_col="curl")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         d.filter(F.col("doc_id") % 2 == 1), 1, state, text_col="curl")
     retract_exact_dedup_delta(
         d.filter(F.col("doc_id") % 7 == 3), 2, state, text_col="curl")
-    return read_exact_dedup_retractable_segments(spark, state).select(
+    return read_exact_dedup_segments(spark, state).select(
         "fingerprint", "doc_id", "n_copies"
     )
 
@@ -3240,8 +3241,8 @@ def q_url_dedup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_as_of,
+        apply_exact_dedup_delta,
+        read_exact_dedup_as_of,
         retract_exact_dedup_delta,
     )
 
@@ -3249,16 +3250,16 @@ def q_url_dedup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", urlops.canonicalize_url("url").alias("curl"))
     root = _session_state_dir(spark, sf_dir, "skylogix_url_asof")
     state = os.path.join(root, "view")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         d.filter(F.col("doc_id") % 2 == 0), 0, state, text_col="curl",
         auto_compact=None)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         d.filter(F.col("doc_id") % 2 == 1), 1, state, text_col="curl",
         auto_compact=None)
     retract_exact_dedup_delta(
         d.filter(F.col("doc_id") % 7 == 3), 2, state, text_col="curl",
         auto_compact=None)
-    return read_exact_dedup_retractable_as_of(spark, state, 1).select(
+    return read_exact_dedup_as_of(spark, state, 1).select(
         "fingerprint", "doc_id", "n_copies"
     )
 
@@ -3284,9 +3285,9 @@ def q_url_dedup_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..streaming.matview import (
-        apply_exact_dedup_retractable_delta,
+        apply_exact_dedup_delta,
         maintain_changelog_view,
-        read_exact_dedup_retractable_segments,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -3309,12 +3310,12 @@ def q_url_dedup_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     maintain_changelog_view(
         stream, state, os.path.join(root, "ckpt"),
-        apply_fn=lambda df, bid, sd: apply_exact_dedup_retractable_delta(
+        apply_fn=lambda df, bid, sd: apply_exact_dedup_delta(
             df, bid, sd, text_col="curl"),
         retract_fn=lambda df, bid, sd: retract_exact_dedup_delta(
             df, bid, sd, text_col="curl"),
     )
-    return read_exact_dedup_retractable_segments(spark, state).select(
+    return read_exact_dedup_segments(spark, state).select(
         "fingerprint", "doc_id", "n_copies"
     )
 
@@ -4220,8 +4221,8 @@ bm AS (
 
 def q_bm25_topk_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 after a RETRACTION (r11): maintain the retractable term-stats
-    view (doc-granular Z-set — df un-counts retracted docs, which the
-    add-only additive (cf, df) aggregate cannot), retract the corrected
+    view (doc-granular Z-set — df un-counts retracted docs, which an
+    additive (cf, df) aggregate cannot), retract the corrected
     shard (doc_id % 7 == 3), then score the SURVIVING corpus from the
     merged view with survivor-derived N/avgdl. Oracle = the one-shot
     BM25 oracle over the survivors: retracted view == rebuild is the
@@ -4230,21 +4231,21 @@ def q_bm25_topk_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..ext.text import tokens as _tokens
     from ..streaming.matview import (
-        apply_term_stats_retractable_delta,
-        read_term_stats_retractable_segments,
+        apply_term_stats_delta,
+        read_term_stats_segments,
         retract_term_stats_delta,
     )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_term_rz")
     state = os.path.join(root, "view")
-    apply_term_stats_retractable_delta(
+    apply_term_stats_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state)
-    apply_term_stats_retractable_delta(
+    apply_term_stats_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state)
     retract_term_stats_delta(docs.filter(F.col("doc_id") % 7 == 3), 2, state)
     survivors = docs.filter(F.col("doc_id") % 7 != 3)
-    stats = read_term_stats_retractable_segments(spark, state)
+    stats = read_term_stats_segments(spark, state)
     counters = survivors.select(F.size(_tokens("text")).alias("dl")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
@@ -4268,9 +4269,9 @@ def q_bm25_topk_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..ext.text import tokens as _tokens
     from ..streaming.matview import (
-        apply_term_stats_retractable_delta,
+        apply_term_stats_delta,
         maintain_changelog_view,
-        read_term_stats_retractable_segments,
+        read_term_stats_segments,
         retract_term_stats_delta,
     )
 
@@ -4292,11 +4293,11 @@ def q_bm25_topk_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     maintain_changelog_view(
         stream, state, os.path.join(root, "ckpt"),
-        apply_fn=lambda df, bid, sd: apply_term_stats_retractable_delta(df, bid, sd),
+        apply_fn=lambda df, bid, sd: apply_term_stats_delta(df, bid, sd),
         retract_fn=lambda df, bid, sd: retract_term_stats_delta(df, bid, sd),
     )
     survivors = docs.filter(F.col("doc_id") % 7 != 3)
-    stats = read_term_stats_retractable_segments(spark, state)
+    stats = read_term_stats_segments(spark, state)
     counters = survivors.select(F.size(_tokens("text")).alias("dl")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
@@ -4311,7 +4312,7 @@ def q_bm25_topk_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of machinery carries driver hashes through the exact-dedup (MIN/
     ADD) and gram-index (weighted capped-posting) folds; this row
     reconstructs the retractable TERM-STATS view as it stood BEFORE a
-    delete (read_term_stats_retractable_as_of — merge only segments with
+    delete (read_term_stats_as_of — merge only segments with
     batch id <= 1) and scores BM25 for the FULL corpus from that
     snapshot with full-corpus N/avgdl. The tombstone written at batch 2
     must be genuinely invisible — the oracle is byte-identical to
@@ -4320,21 +4321,21 @@ def q_bm25_topk_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..ext.text import tokens as _tokens
     from ..streaming.matview import (
-        apply_term_stats_retractable_delta,
-        read_term_stats_retractable_as_of,
+        apply_term_stats_delta,
+        read_term_stats_as_of,
         retract_term_stats_delta,
     )
 
     docs = _docs(spark, sf_dir)
     root = _session_state_dir(spark, sf_dir, "skylogix_term_asof")
     state = os.path.join(root, "view")
-    apply_term_stats_retractable_delta(
+    apply_term_stats_delta(
         docs.filter(F.col("doc_id") % 2 == 0), 0, state, auto_compact=None)
-    apply_term_stats_retractable_delta(
+    apply_term_stats_delta(
         docs.filter(F.col("doc_id") % 2 == 1), 1, state, auto_compact=None)
     retract_term_stats_delta(
         docs.filter(F.col("doc_id") % 7 == 3), 2, state, auto_compact=None)
-    snapshot = read_term_stats_retractable_as_of(spark, state, 1)
+    snapshot = read_term_stats_as_of(spark, state, 1)
     counters = docs.select(F.size(_tokens("text")).alias("dl")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]

@@ -155,6 +155,8 @@ def q_count_sketch_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.sketch import count_sketch_estimate
     from ..streaming.matview import (
         apply_count_sketch_delta,
+        compact_count_sketch_segments,
+        maybe_compact,
         read_count_sketch_segments,
         retract_count_sketch_delta,
     )
@@ -185,8 +187,6 @@ def q_count_sketch_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # points).
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..streaming.matview import _fold_count_sketch_weights, maybe_compact
-
     deltas = [
         (apply_count_sketch_delta, li.filter(F.col("l_orderkey") % 2 == 0), 0),
         (apply_count_sketch_delta, li.filter(F.col("l_orderkey") % 2 == 1), 1),
@@ -200,7 +200,7 @@ def q_count_sketch_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         for f in futs:
             f.result()
-    maybe_compact(spark, state, _fold_count_sketch_weights,
+    maybe_compact(spark, state, compact_count_sketch_segments,
                   fraction_trigger=False)
     counters = read_count_sketch_segments(spark, state)
     top = (

@@ -18,10 +18,11 @@ One protocol per view shape:
   the whole-view commit (:func:`_commit_view`): read, merge, rewrite
   the view under a batch-id replay guard. A rewrite costs O(bound).
 - Views that GROW WITH THE DATA (daily counts, term stats, gram index,
-  exact dedup, minhash buckets, and the retractable Z-set views) use
-  immutable per-batch segments (:func:`_apply_delta_segment`): the
-  segment directory is the replay guard, reads fold segments through
-  the monoid, and compaction folds them back to one.
+  exact dedup, minhash buckets, IVF postings, count sketch) use
+  immutable per-batch Z-set segments (:func:`_apply_delta_segment`):
+  rows carry a ±1 weight, the segment directory is the replay guard,
+  reads fold the weights and aggregate the live rows, and compaction
+  folds segments back to one.
 
 :func:`maintain_view` is the single streaming driver for both shapes.
 """
@@ -177,66 +178,6 @@ def _require_integral_id(batch_df: DataFrame, id_col: str, view: str) -> None:
         )
 
 
-def _gram_index_delta_from_occ(occ: DataFrame, id_col: str,
-                               max_gram_df: int) -> DataFrame:
-    """Per-gram partial aggregate (h, cnt, min_okey, ids, over) from a
-    gram-OCCURRENCE frame (id, pos, h, okey — ext.dedup.gram_occurrences):
-    the delta computation shared by the text-fed applier and the
-    shared-scan apply_gram_index_occ_delta path."""
-    ids_set = F.array_sort(F.collect_set(F.col(id_col).cast("long")))
-    return occ.groupBy("h").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min("okey").alias("min_okey"),
-        ids_set.alias("_raw_ids"),
-    ).select(
-        "h", "cnt", "min_okey",
-        F.when(F.size("_raw_ids") <= max_gram_df, F.col("_raw_ids")).alias("ids"),
-        (F.size("_raw_ids") > max_gram_df).alias("over"),
-    )
-
-
-def _gram_index_delta(batch_df: DataFrame, text_col: str, id_col: str,
-                      k: int, max_gram_df: int) -> DataFrame:
-    """One batch's per-gram partials (h, cnt, min_okey, ids, over):
-    counts add, the keep-first order key (doc_id·2^20 + pos) mins, and
-    the posting list is capped at ``max_gram_df`` distinct docs (see
-    :func:`_capped_union_merge`)."""
-    from ..ext.dedup import _gram_occurrences
-
-    _require_integral_id(batch_df, id_col, "gram_index")
-    _, _, occ = _gram_occurrences(batch_df, text_col, id_col, k)
-    return _gram_index_delta_from_occ(occ, id_col, max_gram_df)
-
-
-def _minhash_buckets_delta(batch_df: DataFrame, text_col: str, id_col: str,
-                           n_hashes: int, bands: int, shingle_n: int,
-                           max_bucket_size: int) -> DataFrame:
-    """One batch's banded bucket membership (band_idx, band_hash, ids,
-    over), capped at ``max_bucket_size`` members — the same cutoff
-    ``ext.dedup.minhash_lsh_pairs`` applies. Per-document signatures are
-    pure functions of the document, so the maintained buckets ARE the
-    batch detector's buckets."""
-    from ..ext.dedup import band_structs, minhash_signatures
-
-    _require_integral_id(batch_df, id_col, "minhash_buckets")
-    sig = minhash_signatures(batch_df, text_col, id_col, n_hashes, shingle_n)
-    banded = sig.select(
-        id_col, F.explode(F.array(*band_structs(n_hashes, bands))).alias("band")
-    ).select(
-        id_col,
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_hash").alias("band_hash"),
-    )
-    ids_set = F.array_sort(F.collect_set(F.col(id_col).cast("long")))
-    return banded.groupBy("band_idx", "band_hash").agg(
-        ids_set.alias("_raw_ids")
-    ).select(
-        "band_idx", "band_hash",
-        F.when(F.size("_raw_ids") <= max_bucket_size, F.col("_raw_ids")).alias("ids"),
-        (F.size("_raw_ids") > max_bucket_size).alias("over"),
-    )
-
-
 def _nearest_cell(vec_col: str, centroids: list[list[float]]):
     """Argmin-of-squared-L2 cell id against a literal centroid table —
     same strict fold + lexicographic struct-min tie-break as
@@ -302,8 +243,9 @@ def maintain_ivf_cell_view(src: DataFrame, centroids: list[list[float]],
       swap — the balance/drift side that tells you when to retrain.
 
     Equivalence with one-shot batch assignment + aggregation is pinned in
-    tests/test_matview.py. Append-only source assumed, as with the
-    add-only doc views (replayed ids would duplicate postings)."""
+    tests/test_matview.py. Append-only source assumed (replayed ids
+    would duplicate postings); the retractable IVF postings view below
+    handles deletes."""
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         if _already_applied(state_path, batch_id):
@@ -607,30 +549,39 @@ def _clear_tmp_segments(root: str, only: str | None = None) -> None:
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
-def _segment_scan(state_dir: str) -> tuple[list[str], set[int]]:
-    """Resolve the readable segment set: (parquet paths, batch ids
-    covered). Picks the compact segment with the LARGEST coverage (a
-    crash can leave several; newer covers a superset) and every raw
-    segment not covered by it. Strictly READ-ONLY: temp dirs are skipped,
-    not deleted — cleanup belongs to the writer (_clear_tmp_segments)."""
+def _list_segments(state_dir: str) -> tuple[list[tuple[set[int], str]],
+                                             dict[int, str]]:
+    """Every committed segment under ``state_dir``: compact segments as
+    (covered batch ids, path) and raw segments as batch id → path.
+    Strictly READ-ONLY: temp dirs are skipped, not deleted — cleanup
+    belongs to the writer (_clear_tmp_segments). A compact segment whose
+    manifest is unreadable or corrupt is skipped as garbage."""
     root = _segments_root(state_dir)
-    if not os.path.isdir(root):
-        return [], set()
     compacts, raws = [], {}
+    if not os.path.isdir(root):
+        return compacts, raws
     for name in os.listdir(root):
         path = os.path.join(root, name)
         if name.startswith("."):
             continue  # in-flight or interrupted write: reader skips it
         if name.startswith("compact_"):
-            mpath = os.path.join(path, "_manifest.json")
             try:
-                with open(mpath) as f:
+                with open(os.path.join(path, "_manifest.json")) as f:
                     covered = set(json.load(f)["batch_ids"])
             except (OSError, ValueError, KeyError):
-                continue  # unreadable/corrupt manifest: treat as garbage
+                continue
             compacts.append((covered, path))
         elif name.startswith("b"):
             raws[int(name[1:])] = path
+    return compacts, raws
+
+
+def _segment_scan(state_dir: str) -> tuple[list[str], set[int]]:
+    """Resolve the readable segment set: (parquet paths, batch ids
+    covered). Picks the compact segment with the LARGEST coverage (a
+    crash can leave several; newer covers a superset) and every raw
+    segment not covered by it."""
+    compacts, raws = _list_segments(state_dir)
     paths, covered = [], set()
     if compacts:
         covered, cpath = max(compacts, key=lambda cp: (len(cp[0]), cp[1]))
@@ -681,58 +632,6 @@ def _write_segment(delta: DataFrame, state_dir: str, batch_id: int,
             json.dump({**manifest, "rows": rows}, f)
     os.rename(tmp, final)  # commit point
     return rows
-
-
-def _capped_union_merge(df: DataFrame, keys: list[str], cap: int,
-                        extras: dict | None = None) -> DataFrame:
-    """Fold segment rows keyed by ``keys`` through the capped-posting
-    join-semilattice (+ optional extra monoid aggregates, name → agg
-    expr): distinct-doc sets UNION, and once a key's set exceeds ``cap``
-    it collapses to (ids=NULL, over=true) and stays there — the batch
-    detectors' boilerplate cutoff. The final union decides `over` exactly
-    when some pairwise prefix would have (union sizes grow
-    monotonically), so all-at-once == any pairwise order. Valid provided
-    each document arrives in exactly one batch (append-only corpus)."""
-    extras = extras or {}
-    merged = df.groupBy(*keys).agg(
-        *[expr.alias(name) for name, expr in extras.items()],
-        F.flatten(
-            F.collect_list(F.coalesce(F.col("ids"), F.array().cast("array<long>")))
-        ).alias("_all"),
-        (F.max(F.col("over").cast("int")) == 1).alias("_over_any"),
-    )
-    u = F.array_distinct(F.col("_all"))
-    over = F.col("_over_any") | (F.size(u) > cap)
-    return merged.select(
-        *keys, *extras.keys(),
-        F.when(~over, F.array_sort(u)).alias("ids"),
-        over.alias("over"),
-    )
-
-
-def _merge_gram_segments(df: DataFrame, max_gram_df: int) -> DataFrame:
-    """Fold any number of gram-index segment rows through the view's
-    monoid in ONE aggregate: counts add, the keep-first order key mins,
-    and the capped posting semilattice is order-free."""
-    return _capped_union_merge(
-        df, ["h"], max_gram_df,
-        {"cnt": F.sum("cnt"), "min_okey": F.min("min_okey")},
-    )
-
-
-def _merge_minhash_segments(df: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Segment merge for the LSH-bucket view: the same capped posting
-    semilattice keyed by (band_idx, band_hash)."""
-    return _capped_union_merge(df, ["band_idx", "band_hash"], max_bucket_size)
-
-
-def _merge_exact_dedup_segments(df: DataFrame) -> DataFrame:
-    """Segment merge for the exact-dedup view: survivor id MINs, copy
-    count ADDs — plain monoids, order-free."""
-    return df.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.sum("n_copies").alias("n_copies"),
-    )
 
 
 #: Auto-compaction trigger for the segmented appliers: compact when the
@@ -796,10 +695,7 @@ def _raw_segment_kind(path: str) -> str:
     - ``"empty_tombstone"`` — a zero-row tombstone. The changelog router
       intentionally lands one every pure-insert micro-batch so the
       replay guard sees each (batch, side) pair; it exerts zero read
-      pressure and must count in NEITHER the numerator (r12 ADVICE: it
-      fired O(view) compaction per CDC batch) NOR the denominator (r13
-      ADVICE: leaving it there dilutes the measured fraction on mixed
-      insert/delete streams, so the 1/3 trigger fired late);
+      pressure (see :func:`_tombstone_population`);
     - ``"data"`` — everything else.
 
     Manifests written before r13 lack ``rows``; they predate the router
@@ -817,70 +713,68 @@ def _raw_segment_kind(path: str) -> str:
     return "tombstone" if m.get("rows", 1) != 0 else "empty_tombstone"
 
 
-def _raw_is_tombstone(path: str) -> bool:
-    """True only for NON-EMPTY tombstone segments (see
-    :func:`_raw_segment_kind`)."""
-    return _raw_segment_kind(path) == "tombstone"
+def _tombstone_population(paths: list[str]) -> tuple[int, int]:
+    """The two sides of the tombstone fraction over the readable
+    ``paths``: (non-empty tombstone raws, raws with real read pressure).
+    Compact segments count in neither. Empty tombstones count in NEITHER
+    side either: numerator inclusion made CDC maintenance O(view) per
+    batch (r12 ADVICE), denominator inclusion diluted the fraction on
+    mixed insert/delete streams so the 1/3 trigger fired late (r13
+    ADVICE)."""
+    kinds = [_raw_segment_kind(p) for p in paths
+             if os.path.basename(p).startswith("b")]
+    return (sum(k == "tombstone" for k in kinds),
+            sum(k != "empty_tombstone" for k in kinds))
 
 
 def _apply_delta_segment(delta_fn, batch_df: DataFrame, batch_id: int,
-                         state_dir: str, merge_fn, auto_compact: int | None,
+                         state_dir: str, fold_fn, auto_compact: int | None,
                          tombstone: bool = False) -> None:
     """Shared segmented-apply protocol: replay guard → O(batch) immutable
-    segment write → auto-compaction on either the count threshold or the
-    tombstone-fraction threshold. ``delta_fn`` is lazy so a replayed
-    batch skips building the delta plan entirely; ``auto_compact=None``
-    disables BOTH triggers (the manual protocol the equivalence tests
-    exercise at arbitrary compaction points)."""
+    segment write → :func:`maybe_compact` with ``fold_fn`` as the
+    compaction fold. ``delta_fn`` is lazy so a replayed batch skips
+    building the delta plan entirely; ``auto_compact=None`` disables BOTH
+    triggers (the manual protocol the equivalence tests exercise at
+    arbitrary compaction points)."""
     paths, applied = _segment_scan(state_dir)
     if batch_id in applied:
         return
     rows = _write_segment(delta_fn(), state_dir, batch_id,
                           manifest={"kind": "tombstone"} if tombstone else None)
-    if auto_compact is None:
-        return
-    if len(paths) + 1 >= auto_compact:
-        _compact_segments(batch_df.sparkSession, state_dir, merge_fn,
-                          retain_last=AUTO_COMPACT_RETAIN)
-        return
     # the fraction check runs only when THIS apply landed a non-empty
-    # tombstone (rows comes from the parquet footers, no extra job): an
-    # empty tombstone — the changelog router writes one per pure-insert
-    # micro-batch for replay-guard completeness — adds no read pressure,
-    # and counts in NEITHER side of the fraction: numerator inclusion
-    # made CDC maintenance O(view) per batch (r12 ADVICE); denominator
-    # inclusion diluted the fraction on mixed insert/delete streams so
-    # the 1/3 trigger fired late (r13 ADVICE). Numerator and denominator
-    # run over the same population: segments with real read pressure.
-    if tombstone and rows and len(paths) >= 1:
-        raws = [p for p in paths if os.path.basename(p).startswith("b")]
-        kinds = [_raw_segment_kind(p) for p in raws]
-        n_tomb = 1 + sum(1 for k in kinds if k == "tombstone")
-        n_pop = 1 + sum(1 for k in kinds if k != "empty_tombstone")
-        if n_tomb / n_pop >= TOMBSTONE_COMPACT_FRACTION:
-            _compact_segments(batch_df.sparkSession, state_dir, merge_fn,
-                              retain_last=AUTO_COMPACT_RETAIN)
+    # tombstone (rows comes from the parquet footers, no extra job) on a
+    # state that already had segments
+    maybe_compact(
+        batch_df.sparkSession, state_dir,
+        lambda spark, sd, retain_last: _compact_segments(spark, sd, fold_fn,
+                                                         retain_last),
+        auto_compact, fraction_trigger=bool(tombstone and rows and paths),
+    )
 
 
-def maybe_compact(spark, state_dir: str, merge_fn,
+def maybe_compact(spark, state_dir: str, compact_fn,
                   auto_compact: int | None = AUTO_COMPACT_SEGMENTS,
                   fraction_trigger: bool = True) -> bool:
-    """Post-drain auto-compaction for POOLED segment writers (r15, r14
-    ADVICE): concurrent appliers run with ``auto_compact=None`` (a
-    mid-pool compaction would race other writers) and call this ONCE
-    after the pool drains. By default it applies BOTH triggers
-    :func:`_apply_delta_segment` applies inline — the segment-count
-    threshold AND the tombstone-fraction threshold (the r14 pooled paths
-    checked only the count trigger).
+    """Auto-compaction check: run ``compact_fn`` — the view's public
+    ``compact_*_segments`` function, called as ``compact_fn(spark,
+    state_dir, retain_last=AUTO_COMPACT_RETAIN)`` — when the readable
+    segment count reaches ``auto_compact``, or (``fraction_trigger``)
+    when non-empty tombstones make up at least
+    :data:`TOMBSTONE_COMPACT_FRACTION` of the raw segments with read
+    pressure (:func:`_tombstone_population`). Returns True when a
+    compaction ran.
 
-    The guarantee is ANSWER-equivalence with the sequential protocol:
-    reads fold raw and compacted segments alike, so every read returns
-    the same view whichever protocol wrote it. The on-disk end state
-    matches the sequential protocol only when the tombstone lands LAST:
-    the inline fraction check runs only on a tombstone apply that finds
-    earlier segments, so a sequential tombstone-FIRST order skips the
-    fraction compaction that this post-drain check, seeing the whole
-    pool, runs (pytest-pinned both ways).
+    Every segmented apply calls it after its write. POOLED segment
+    writers (r15, r14 ADVICE) run with ``auto_compact=None`` — a mid-pool
+    compaction would race other writers — and call it ONCE after the
+    pool drains. The guarantee is ANSWER-equivalence with the sequential
+    protocol: reads fold raw and compacted segments alike, so every read
+    returns the same view whichever protocol wrote it. The on-disk end
+    state matches the sequential protocol only when the tombstone lands
+    LAST: the per-apply fraction check runs only on a tombstone apply
+    that finds earlier segments, so a sequential tombstone-FIRST order
+    skips the fraction compaction that this post-drain check, seeing the
+    whole pool, runs (pytest-pinned both ways).
 
     ``fraction_trigger=False`` DEFERS the tombstone-fraction compaction
     on purpose — the choice for a protocol whose reads all happen
@@ -891,85 +785,27 @@ def maybe_compact(spark, state_dir: str, merge_fn,
     cycle's critical path. Callers that defer must say so where the
     deferral is visible (their on-disk end state keeps the tombstone
     raw segment the sequential protocol would have folded; the read
-    fold makes the ANSWERS identical either way — the equivalence the
-    segment tests pin at arbitrary compaction points). Returns True
-    when a compaction ran."""
+    fold makes the ANSWERS identical either way)."""
     if auto_compact is None:
         return False
     paths, _ = _segment_scan(state_dir)
     if not paths:
         return False
-    if len(paths) >= auto_compact:
-        _compact_segments(spark, state_dir, merge_fn,
-                          retain_last=AUTO_COMPACT_RETAIN)
-        return True
-    if not fraction_trigger:
-        return False
-    # same population rule as the inline check: non-empty tombstones over
-    # segments with real read pressure (empty tombstones count in neither
-    # side; compact segments are data). Pure-insert pools have no
-    # tombstone and skip compaction, exactly like the sequential path.
-    raws = [p for p in paths if os.path.basename(p).startswith("b")]
-    kinds = [_raw_segment_kind(p) for p in raws]
-    n_tomb = sum(1 for k in kinds if k == "tombstone")
-    n_pop = sum(1 for k in kinds if k != "empty_tombstone")
-    if n_tomb and n_pop and n_tomb / n_pop >= TOMBSTONE_COMPACT_FRACTION:
-        _compact_segments(spark, state_dir, merge_fn,
-                          retain_last=AUTO_COMPACT_RETAIN)
-        return True
-    return False
-
-
-def apply_gram_index_delta(batch_df: DataFrame, batch_id: int, state_dir: str,
-                           text_col: str = "text", id_col: str = "doc_id",
-                           k: int = 8, max_gram_df: int = 1_000,
-                           auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the ExactSubstr (Lee et al. 2022) gram
-    index: hash ONLY this batch's documents' k-grams (the shared
-    Carter-Wegman combine — bit-identical to the batch ExactSubstr
-    operators) and write the per-gram partials as an immutable segment.
-    The merged view feeds the whole triad's read paths without
-    re-scanning history: ``ext.dedup.substring_dedup_rewrite_from_index``
-    (span removal, via cnt + min_okey), ``substring_dup_spans_from_index``
-    (coverage stats, via cnt) and ``substring_shared_gram_pairs_from_index``
-    (pair detection, via the capped posting lists). Read with
-    :func:`read_gram_index_segments`; segments fold back to one
-    automatically once the readable count reaches ``auto_compact``
-    (:data:`AUTO_COMPACT_SEGMENTS`; None = manual
-    :func:`compact_gram_index_segments`). Replays no-op (the segment
-    directory, or a compacted segment covering its batch id, exists)."""
-    _apply_delta_segment(
-        lambda: _gram_index_delta(batch_df, text_col, id_col, k, max_gram_df),
-        batch_df, batch_id, state_dir,
-        lambda df: _merge_gram_segments(df, max_gram_df), auto_compact,
-    )
-
-
-def apply_gram_index_occ_delta(occ_batch: DataFrame, batch_id: int,
-                               state_dir: str, id_col: str = "doc_id",
-                               max_gram_df: int = 1_000,
-                               auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """:func:`apply_gram_index_delta` fed from a precomputed
-    gram-OCCURRENCE slice (``ext.dedup.gram_occurrences`` output filtered
-    to the batch) instead of raw (id, text) rows — the shared-scan form
-    (r14, r13 verdict #7): a caller that maintains the index AND rewrites
-    against it in one job pays the corpus gram-hash pass ONCE (persist
-    occ, slice per batch here, hand the same triple to the rewrite via
-    ``grams=``). Segment protocol, replay guard, and the resulting view
-    are identical to the text-fed applier (pytest-pinned equivalence)."""
-    _apply_delta_segment(
-        lambda: _gram_index_delta_from_occ(occ_batch, id_col, max_gram_df),
-        occ_batch, batch_id, state_dir,
-        lambda df: _merge_gram_segments(df, max_gram_df), auto_compact,
-    )
+    fire = len(paths) >= auto_compact
+    if not fire and fraction_trigger:
+        n_tomb, n_pop = _tombstone_population(paths)
+        fire = bool(n_tomb) and n_tomb / n_pop >= TOMBSTONE_COMPACT_FRACTION
+    if fire:
+        compact_fn(spark, state_dir, retain_last=AUTO_COMPACT_RETAIN)
+    return fire
 
 
 def _read_segments(spark, state_dir: str, merge_fn) -> DataFrame:
     """The current view from segmented state: union the readable
-    segments and fold through the view's monoid merge. Equal to the
+    segments and fold through the view's read merge. Equal to the
     one-shot batch aggregate over the same batches (pytest-pinned); the
-    read-side merge is one groupBy over segment rows — compact when the
-    segment count makes that noticeable."""
+    read-side merge is one aggregate over segment rows — compact when
+    the segment count makes that noticeable."""
     paths, _ = _segment_scan(state_dir)
     if not paths:
         raise FileNotFoundError(f"no committed segments under {state_dir}")
@@ -1035,109 +871,53 @@ def _compact_segments(spark, state_dir: str, merge_fn,
     return len(fold_bids)
 
 
-def read_gram_index_segments(spark, state_dir: str,
-                             max_gram_df: int = 1_000) -> DataFrame:
-    return _read_segments(
-        spark, state_dir, lambda df: _merge_gram_segments(df, max_gram_df)
-    )
-
-
-def compact_gram_index_segments(spark, state_dir: str,
-                                max_gram_df: int = 1_000,
-        retain_last: int = 0) -> int:
-    return _compact_segments(
-        spark, state_dir, lambda df: _merge_gram_segments(df, max_gram_df),
-        retain_last=retain_last)
-
-
-def apply_minhash_buckets_delta(batch_df: DataFrame, batch_id: int,
-                                state_dir: str, text_col: str = "text",
-                                id_col: str = "doc_id", n_hashes: int = 16,
-                                bands: int = 4, shingle_n: int = 3,
-                                max_bucket_size: int = 100_000,
-                                auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the LSH-bucket view — same protocol
-    and crash story as :func:`apply_gram_index_delta`."""
-    _apply_delta_segment(
-        lambda: _minhash_buckets_delta(batch_df, text_col, id_col, n_hashes,
-                                       bands, shingle_n, max_bucket_size),
-        batch_df, batch_id, state_dir,
-        lambda df: _merge_minhash_segments(df, max_bucket_size), auto_compact,
-    )
-
-
-def read_minhash_buckets_segments(spark, state_dir: str,
-                                  max_bucket_size: int = 100_000) -> DataFrame:
-    return _read_segments(
-        spark, state_dir, lambda df: _merge_minhash_segments(df, max_bucket_size)
-    )
-
-
-def compact_minhash_buckets_segments(spark, state_dir: str,
-                                     max_bucket_size: int = 100_000,
-        retain_last: int = 0) -> int:
-    return _compact_segments(
-        spark, state_dir, lambda df: _merge_minhash_segments(df, max_bucket_size),
-        retain_last=retain_last)
-
-
-def apply_exact_dedup_delta(batch_df: DataFrame, batch_id: int,
-                            state_dir: str, text_col: str = "text",
-                            id_col: str = "doc_id",
-                            auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the exact-dedup view: fingerprint ONLY
-    this batch's documents (md5 of the text — bit-identical to the batch
-    ``exact_dedup``). The merged view IS ``exact_dedup``'s output over
-    everything ingested so far: the membership table a deployment probes
-    per ingest batch. Same protocol and crash story as
-    :func:`apply_gram_index_delta`."""
-    from ..ext.dedup import exact_dedup
-
-    _apply_delta_segment(
-        lambda: exact_dedup(batch_df, text_col=text_col, id_col=id_col),
-        batch_df, batch_id, state_dir, _merge_exact_dedup_segments, auto_compact,
-    )
-
-
-def read_exact_dedup_segments(spark, state_dir: str) -> DataFrame:
-    return _read_segments(spark, state_dir, _merge_exact_dedup_segments)
-
-
-def compact_exact_dedup_segments(spark, state_dir: str,
-        retain_last: int = 0) -> int:
-    return _compact_segments(
-        spark, state_dir, _merge_exact_dedup_segments, retain_last=retain_last)
-
-
 # --------------------------------------------------------------------------
-# Deletion / retraction (r11): weighted (Z-set) segments
+# The doc and term views (exact dedup, gram index, minhash buckets, term
+# stats): one Z-set segment format
 # --------------------------------------------------------------------------
 #
-# The add-only views above store per-batch AGGREGATES, whose monoids
-# (MIN survivor id, ADD counts, capped-union postings) have no inverse: a
-# delete of the stored min-id survivor cannot recover the next-smallest id
-# from the aggregate, so any retraction forces a full rebuild. (The
-# reference never deletes either — src/transform.py:64-66 re-reads all
-# history — but a production curation loop re-ingests corrected shards.)
+# Each segment row is doc-granular evidence — (fingerprint, doc_id),
+# (gram, doc), (bucket, doc) or (term, doc) — with a weight: +1 for an
+# apply, -1 for a tombstone. All aggregation is deferred to read time.
+# Segments stay O(batch); a retraction is just another segment (its own
+# batch id in the same replay-guarded numbering, so crash/replay
+# semantics are unchanged); compaction folds the keyed weight sums (an
+# abelian GROUP, hence invertible) and keeps w != 0 rows — a tombstone
+# compacted before its add arrives must survive to cancel it. The read
+# fold keeps the live (w > 0) rows and only then aggregates to the view
+# contract, so apply/retract/compact in ANY interleaving reads equal to
+# a rebuild from the surviving corpus (pytest-pinned, including deleting
+# a stored min-id survivor and delete-then-re-add). (The reference never
+# deletes — src/transform.py:64-66 re-reads all history — but a
+# production curation loop re-ingests corrected shards.)
 #
-# The retractable exact-dedup view fixes this at the SEGMENT SCHEMA: keep
-# doc granularity — (fingerprint, doc_id, w) with w=+1 adds and w=-1
-# tombstones — and defer ALL aggregation to merge time. Segments stay
-# O(batch); a retraction is just another segment (its own batch id in the
-# same replay-guarded numbering, so crash/replay semantics are unchanged);
-# compaction folds the keyed weight sums (an abelian GROUP, hence
-# invertible — the whole point); the read fold keeps rows with w > 0 and
-# only then aggregates to the (fingerprint, survivor, n_copies) contract.
-# Because per-key weight addition is commutative and associative,
-# apply/retract/compact in ANY interleaving reads equal to a rebuild from
-# the surviving corpus (pytest-pinned, including deleting a stored
-# survivor and delete-then-re-add).
+# Each read fold hash-partitions the unioned segments by the VIEW KEY
+# before the (key, doc) weight fold: that partitioning satisfies both
+# the (key, doc) fold and the per-key aggregate, so a read plans ONE
+# exchange instead of two (pytest-pinned).
+#
+# The gram and bucket deltas end in a rebalance: their input is already
+# partitioned by doc id, so with no exchange of their own they would
+# write one small file per input partition (4-32 per batch segment, each
+# opened again by every read). The rebalance lets adaptive execution
+# size the segment's files to the data: one file for a small batch.
+#
+# Posting caps (``max_gram_df``, ``max_bucket_size``) are READ-time
+# parameters: the read fold recomputes each key's live distinct-doc set
+# and marks it (ids=NULL, over=true) above the cap, exactly as the batch
+# detectors recompute their cutoff from scratch. One state therefore
+# answers at any cap, and a key that overflowed can fall back UNDER the
+# cap when enough members are retracted. The price is state size: a key
+# above its cap still stores one row per (key, doc).
 #
 # Contract: retraction takes the ORIGINAL rows (id + text) — exactly what
-# "re-ingest a corrected shard" has in hand — because the fingerprint is
-# recomputed from text. Retracting a never-added doc leaves a w=-1 row
-# that reads as absent and annihilates against a later re-add (out-of-
-# order tolerant); n_copies counts distinct live doc ids.
+# "re-ingest a corrected shard" has in hand. Evidence values (fingerprint,
+# cnt, min_okey, band hashes, tf) are pure functions of the document, so
+# a tombstone reproduces its add's rows exactly and the keyed weight sums
+# annihilate. Retracting a never-added doc leaves a w=-1 row that reads
+# as absent and annihilates against a later re-add (out-of-order
+# tolerant). State written by the pre-Z-set add-only appliers is not
+# migrated (reading it fails on the missing weight column).
 
 
 def _exact_dedup_weighted_delta(batch_df: DataFrame, text_col: str,
@@ -1151,8 +931,7 @@ def _exact_dedup_weighted_delta(batch_df: DataFrame, text_col: str,
 
 def _fold_exact_dedup_weights(df: DataFrame) -> DataFrame:
     """Compaction fold: per-(fingerprint, doc_id) weight sums, dropping
-    annihilated (w=0) pairs. Keeps w<0 rows — a tombstone compacted
-    before its add arrives must survive to cancel it."""
+    annihilated (w=0) pairs."""
     return (
         df.groupBy("fingerprint", "doc_id")
         .agg(F.sum("w").alias("w"))
@@ -1160,23 +939,31 @@ def _fold_exact_dedup_weights(df: DataFrame) -> DataFrame:
     )
 
 
-def _merge_exact_dedup_retractable(df: DataFrame) -> DataFrame:
+def _live_exact_dedup(df: DataFrame) -> DataFrame:
     """Read fold: live rows (w > 0) aggregated to the same
-    (fingerprint, doc_id survivor, n_copies) contract as exact_dedup."""
+    (fingerprint, doc_id survivor, n_copies) contract as exact_dedup;
+    n_copies counts distinct live doc ids."""
     return (
-        _fold_exact_dedup_weights(df)
+        _fold_exact_dedup_weights(df.repartition("fingerprint"))
         .filter(F.col("w") > 0)
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def apply_exact_dedup_retractable_delta(
-        batch_df: DataFrame, batch_id: int, state_dir: str,
-        text_col: str = "text", id_col: str = "doc_id",
-        auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the RETRACTABLE exact-dedup view
-    (doc-granular +1 weights; see the Z-set protocol note above)."""
+def apply_exact_dedup_delta(batch_df: DataFrame, batch_id: int,
+                            state_dir: str, text_col: str = "text",
+                            id_col: str = "doc_id",
+                            auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
+    """O(batch) segmented apply of the exact-dedup view: fingerprint ONLY
+    this batch's documents (md5 of the text — bit-identical to the batch
+    ``exact_dedup``). The read view IS ``exact_dedup``'s output over
+    everything live so far: the membership table a deployment probes per
+    ingest batch. Read with :func:`read_exact_dedup_segments`; segments
+    fold back to one automatically once the readable count reaches
+    ``auto_compact`` (:data:`AUTO_COMPACT_SEGMENTS`; None = manual
+    :func:`compact_exact_dedup_segments`). Replays no-op (the segment
+    directory, or a compacted segment covering its batch id, exists)."""
     _apply_delta_segment(
         lambda: _exact_dedup_weighted_delta(batch_df, text_col, id_col, 1),
         batch_df, batch_id, state_dir, _fold_exact_dedup_weights, auto_compact,
@@ -1187,10 +974,10 @@ def retract_exact_dedup_delta(
         batch_df: DataFrame, batch_id: int, state_dir: str,
         text_col: str = "text", id_col: str = "doc_id",
         auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """Retract previously-ingested documents from the retractable
-    exact-dedup view: writes a -1-weight tombstone segment under its own
-    batch id (same replay guard / crash protocol as an apply). Takes the
-    original (id, text) rows — the corrected-shard re-ingest shape."""
+    """Retract previously-ingested documents from the exact-dedup view:
+    writes a -1-weight tombstone segment under its own batch id (same
+    replay guard / crash protocol as an apply). Takes the original
+    (id, text) rows — the corrected-shard re-ingest shape."""
     _apply_delta_segment(
         lambda: _exact_dedup_weighted_delta(batch_df, text_col, id_col, -1),
         batch_df, batch_id, state_dir, _fold_exact_dedup_weights, auto_compact,
@@ -1198,45 +985,36 @@ def retract_exact_dedup_delta(
     )
 
 
-def read_exact_dedup_retractable_segments(spark, state_dir: str) -> DataFrame:
-    return _read_segments(spark, state_dir, _merge_exact_dedup_retractable)
+def read_exact_dedup_segments(spark, state_dir: str) -> DataFrame:
+    return _read_segments(spark, state_dir, _live_exact_dedup)
 
 
-def compact_exact_dedup_retractable_segments(spark, state_dir: str,
+def compact_exact_dedup_segments(spark, state_dir: str,
         retain_last: int = 0) -> int:
     return _compact_segments(
         spark, state_dir, _fold_exact_dedup_weights, retain_last=retain_last)
 
 
-# The same Z-set construction generalized to the OTHER two doc views.
-# The add-only gram-index / LSH-bucket monoids are capped-union
-# SEMILATTICES — union has no inverse and the over-cap collapse is sticky
-# — so like exact-dedup they cannot retract. The retractable variants
-# store doc-granular evidence (per (gram, doc) / per (bucket, doc)) with
-# ±1 weights and recompute the aggregate AT READ TIME from live rows
-# only. Semantics therefore equal REBUILD-over-survivors: in particular a
-# bucket/gram that overflowed its cap can fall back UNDER it when enough
-# members are retracted (the sticky collapse is an add-only artifact, not
-# a correctness property — the batch detectors recompute the cap from
-# scratch too). Segments are O(batch tokens) instead of O(batch grams):
-# the price of invertibility is carrying the per-doc breakdown the
-# add-only delta pre-aggregates away. Retraction takes the ORIGINAL
-# (id, text) rows; evidence values (cnt, min_okey, band hashes) are pure
-# functions of the document, so a tombstone reproduces its add's rows
-# exactly and the keyed weight sums annihilate.
+def _gram_index_occ_delta(occ: DataFrame, id_col: str, weight: int) -> DataFrame:
+    """Doc-granular gram evidence (h, doc_id, cnt, min_okey, w) from a
+    gram-OCCURRENCE frame (id, pos, h, okey — ext.dedup.gram_occurrences):
+    the per-(gram, doc) count and keep-first order key
+    (doc_id·2^20 + pos), shared by the text-fed and shared-scan
+    appliers."""
+    return occ.groupBy("h", F.col(id_col).cast("long").alias("doc_id")).agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.min("okey").alias("min_okey"),
+        F.lit(weight).cast("long").alias("w"),
+    ).hint("rebalance")
 
 
 def _gram_index_weighted_delta(batch_df: DataFrame, text_col: str,
                                id_col: str, k: int, weight: int) -> DataFrame:
     from ..ext.dedup import _gram_occurrences
 
-    _require_integral_id(batch_df, id_col, "gram_index_retractable")
+    _require_integral_id(batch_df, id_col, "gram_index")
     _, _, occ = _gram_occurrences(batch_df, text_col, id_col, k)
-    return occ.groupBy("h", F.col(id_col).cast("long").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min("okey").alias("min_okey"),
-        F.lit(weight).cast("long").alias("w"),
-    )
+    return _gram_index_occ_delta(occ, id_col, weight)
 
 
 def _fold_gram_index_weights(df: DataFrame) -> DataFrame:
@@ -1251,11 +1029,12 @@ def _fold_gram_index_weights(df: DataFrame) -> DataFrame:
     )
 
 
-def _merge_gram_index_retractable(df: DataFrame, max_gram_df: int) -> DataFrame:
+def _live_gram_index(df: DataFrame, max_gram_df: int) -> DataFrame:
     """Read fold: live (gram, doc) rows re-aggregated to the maintained
-    gram-index contract (h, cnt, min_okey, ids, over) — byte-compatible
-    with every *_from_index read path."""
-    live = _fold_gram_index_weights(df).filter(F.col("w") > 0)
+    gram-index contract (h, cnt, min_okey, ids, over) that every
+    *_from_index read path consumes; the posting list is capped at
+    ``max_gram_df`` distinct live docs."""
+    live = _fold_gram_index_weights(df.repartition("h")).filter(F.col("w") > 0)
     return (
         live.groupBy("h")
         .agg(
@@ -1271,14 +1050,39 @@ def _merge_gram_index_retractable(df: DataFrame, max_gram_df: int) -> DataFrame:
     )
 
 
-def apply_gram_index_retractable_delta(
-        batch_df: DataFrame, batch_id: int, state_dir: str,
-        text_col: str = "text", id_col: str = "doc_id", k: int = 8,
-        auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the RETRACTABLE gram-index view."""
+def apply_gram_index_delta(batch_df: DataFrame, batch_id: int, state_dir: str,
+                           text_col: str = "text", id_col: str = "doc_id",
+                           k: int = 8,
+                           auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
+    """O(batch) segmented apply of the ExactSubstr (Lee et al. 2022) gram
+    index: hash ONLY this batch's documents' k-grams (the shared
+    Carter-Wegman combine — bit-identical to the batch ExactSubstr
+    operators). The read view feeds the whole triad's read paths without
+    re-scanning history: ``ext.dedup.substring_dedup_rewrite_from_index``
+    (span removal, via cnt + min_okey), ``substring_dup_spans_from_index``
+    (coverage stats, via cnt) and ``substring_shared_gram_pairs_from_index``
+    (pair detection, via the capped posting lists). Same protocol as
+    :func:`apply_exact_dedup_delta`."""
     _apply_delta_segment(
         lambda: _gram_index_weighted_delta(batch_df, text_col, id_col, k, 1),
         batch_df, batch_id, state_dir, _fold_gram_index_weights, auto_compact,
+    )
+
+
+def apply_gram_index_occ_delta(occ_batch: DataFrame, batch_id: int,
+                               state_dir: str, id_col: str = "doc_id",
+                               auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
+    """:func:`apply_gram_index_delta` fed from a precomputed
+    gram-OCCURRENCE slice (``ext.dedup.gram_occurrences`` output filtered
+    to the batch) instead of raw (id, text) rows — the shared-scan form
+    (r14, r13 verdict #7): a caller that maintains the index AND rewrites
+    against it in one job pays the corpus gram-hash pass ONCE (persist
+    occ, slice per batch here, hand the same triple to the rewrite via
+    ``grams=``). Segment protocol, replay guard, and the resulting view
+    are identical to the text-fed applier (pytest-pinned equivalence)."""
+    _apply_delta_segment(
+        lambda: _gram_index_occ_delta(occ_batch, id_col, 1),
+        occ_batch, batch_id, state_dir, _fold_gram_index_weights, auto_compact,
     )
 
 
@@ -1286,8 +1090,8 @@ def retract_gram_index_delta(
         batch_df: DataFrame, batch_id: int, state_dir: str,
         text_col: str = "text", id_col: str = "doc_id", k: int = 8,
         auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """Tombstone segment for the retractable gram-index view (original
-    (id, text) rows; same k as the applies it cancels)."""
+    """Tombstone segment for the gram-index view (original (id, text)
+    rows; same k as the applies it cancels)."""
     _apply_delta_segment(
         lambda: _gram_index_weighted_delta(batch_df, text_col, id_col, k, -1),
         batch_df, batch_id, state_dir, _fold_gram_index_weights, auto_compact,
@@ -1295,15 +1099,13 @@ def retract_gram_index_delta(
     )
 
 
-def read_gram_index_retractable_segments(spark, state_dir: str,
-                                         max_gram_df: int = 1_000) -> DataFrame:
+def read_gram_index_segments(spark, state_dir: str,
+                             max_gram_df: int = 1_000) -> DataFrame:
     return _read_segments(
-        spark, state_dir,
-        lambda df: _merge_gram_index_retractable(df, max_gram_df),
-    )
+        spark, state_dir, lambda df: _live_gram_index(df, max_gram_df))
 
 
-def compact_gram_index_retractable_segments(spark, state_dir: str,
+def compact_gram_index_segments(spark, state_dir: str,
         retain_last: int = 0) -> int:
     return _compact_segments(
         spark, state_dir, _fold_gram_index_weights, retain_last=retain_last)
@@ -1312,9 +1114,13 @@ def compact_gram_index_retractable_segments(spark, state_dir: str,
 def _minhash_buckets_weighted_delta(batch_df: DataFrame, text_col: str,
                                     id_col: str, n_hashes: int, bands: int,
                                     shingle_n: int, weight: int) -> DataFrame:
+    """Doc-granular banded bucket membership (doc_id, band_idx,
+    band_hash, w). Per-document signatures are pure functions of the
+    document, so the maintained buckets ARE the batch detector's
+    buckets."""
     from ..ext.dedup import band_structs, minhash_signatures
 
-    _require_integral_id(batch_df, id_col, "minhash_buckets_retractable")
+    _require_integral_id(batch_df, id_col, "minhash_buckets")
     sig = minhash_signatures(batch_df, text_col, id_col, n_hashes, shingle_n)
     return sig.select(
         F.col(id_col).cast("long").alias("doc_id"),
@@ -1324,7 +1130,7 @@ def _minhash_buckets_weighted_delta(batch_df: DataFrame, text_col: str,
         F.col("band.band_idx").alias("band_idx"),
         F.col("band.band_hash").alias("band_hash"),
         F.lit(weight).cast("long").alias("w"),
-    )
+    ).hint("rebalance")
 
 
 def _fold_minhash_weights(df: DataFrame) -> DataFrame:
@@ -1335,10 +1141,13 @@ def _fold_minhash_weights(df: DataFrame) -> DataFrame:
     )
 
 
-def _merge_minhash_retractable(df: DataFrame, max_bucket_size: int) -> DataFrame:
+def _live_minhash_buckets(df: DataFrame, max_bucket_size: int) -> DataFrame:
     """Read fold to the maintained LSH-bucket contract
-    (band_idx, band_hash, ids, over) from live memberships."""
-    live = _fold_minhash_weights(df).filter(F.col("w") > 0)
+    (band_idx, band_hash, ids, over) from live memberships, capped at
+    ``max_bucket_size`` members — the cutoff
+    ``ext.dedup.minhash_lsh_pairs`` applies."""
+    live = (_fold_minhash_weights(df.repartition("band_idx", "band_hash"))
+            .filter(F.col("w") > 0))
     return (
         live.groupBy("band_idx", "band_hash")
         .agg(F.array_sort(F.collect_set("doc_id")).alias("_ids"))
@@ -1350,12 +1159,13 @@ def _merge_minhash_retractable(df: DataFrame, max_bucket_size: int) -> DataFrame
     )
 
 
-def apply_minhash_buckets_retractable_delta(
-        batch_df: DataFrame, batch_id: int, state_dir: str,
-        text_col: str = "text", id_col: str = "doc_id", n_hashes: int = 16,
-        bands: int = 4, shingle_n: int = 3,
-        auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the RETRACTABLE LSH-bucket view."""
+def apply_minhash_buckets_delta(batch_df: DataFrame, batch_id: int,
+                                state_dir: str, text_col: str = "text",
+                                id_col: str = "doc_id", n_hashes: int = 16,
+                                bands: int = 4, shingle_n: int = 3,
+                                auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
+    """O(batch) segmented apply of the LSH-bucket view — same protocol
+    as :func:`apply_exact_dedup_delta`."""
     _apply_delta_segment(
         lambda: _minhash_buckets_weighted_delta(
             batch_df, text_col, id_col, n_hashes, bands, shingle_n, 1),
@@ -1368,8 +1178,8 @@ def retract_minhash_buckets_delta(
         text_col: str = "text", id_col: str = "doc_id", n_hashes: int = 16,
         bands: int = 4, shingle_n: int = 3,
         auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """Tombstone segment for the retractable LSH-bucket view (original
-    (id, text) rows; same signature params as the applies it cancels)."""
+    """Tombstone segment for the LSH-bucket view (original (id, text)
+    rows; same signature params as the applies it cancels)."""
     _apply_delta_segment(
         lambda: _minhash_buckets_weighted_delta(
             batch_df, text_col, id_col, n_hashes, bands, shingle_n, -1),
@@ -1378,12 +1188,16 @@ def retract_minhash_buckets_delta(
     )
 
 
-def read_minhash_buckets_retractable_segments(
-        spark, state_dir: str, max_bucket_size: int = 100_000) -> DataFrame:
+def read_minhash_buckets_segments(spark, state_dir: str,
+                                  max_bucket_size: int = 100_000) -> DataFrame:
     return _read_segments(
-        spark, state_dir,
-        lambda df: _merge_minhash_retractable(df, max_bucket_size),
-    )
+        spark, state_dir, lambda df: _live_minhash_buckets(df, max_bucket_size))
+
+
+def compact_minhash_buckets_segments(spark, state_dir: str,
+        retain_last: int = 0) -> int:
+    return _compact_segments(
+        spark, state_dir, _fold_minhash_weights, retain_last=retain_last)
 
 
 def _term_stats_weighted_delta(batch_df: DataFrame, text_col: str,
@@ -1411,25 +1225,26 @@ def _fold_term_stats_weights(df: DataFrame) -> DataFrame:
     )
 
 
-def _merge_term_stats_retractable(df: DataFrame) -> DataFrame:
+def _live_term_stats(df: DataFrame) -> DataFrame:
     """Read fold to the term-stats contract (w, cf, df) from live
     doc-level term frequencies: cf = Σ tf, df = count of live docs."""
     return (
-        _fold_term_stats_weights(df)
+        _fold_term_stats_weights(df.repartition("w"))
         .filter(F.col("zw") > 0)
         .groupBy("w")
         .agg(F.sum("tf").alias("cf"), F.count(F.lit(1)).alias("df"))
     )
 
 
-def apply_term_stats_retractable_delta(
-        batch_df: DataFrame, batch_id: int, state_dir: str,
-        text_col: str = "text", id_col: str = "doc_id",
-        auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the RETRACTABLE BM25/TF-IDF term-stats
-    view (doc-granular term frequencies with ±1 weights — cf is additive
-    and hence invertible, but df counts DISTINCT docs, which the add-only
-    (cf, df) aggregate cannot un-count; the Z-set schema can)."""
+def apply_term_stats_delta(batch_df: DataFrame, batch_id: int,
+                           state_dir: str, text_col: str = "text",
+                           id_col: str = "doc_id",
+                           auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
+    """O(batch) segmented apply of the BM25/TF-IDF term-stats view:
+    tokenize ONLY this batch's documents into doc-level term frequencies.
+    cf is additive, but df counts DISTINCT docs, which only the
+    doc-granular evidence can un-count on a retraction. Same protocol as
+    :func:`apply_exact_dedup_delta`."""
     _apply_delta_segment(
         lambda: _term_stats_weighted_delta(batch_df, text_col, id_col, 1),
         batch_df, batch_id, state_dir, _fold_term_stats_weights, auto_compact,
@@ -1440,8 +1255,8 @@ def retract_term_stats_delta(
         batch_df: DataFrame, batch_id: int, state_dir: str,
         text_col: str = "text", id_col: str = "doc_id",
         auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """Tombstone segment for the retractable term-stats view (original
-    (id, text) rows)."""
+    """Tombstone segment for the term-stats view (original (id, text)
+    rows)."""
     _apply_delta_segment(
         lambda: _term_stats_weighted_delta(batch_df, text_col, id_col, -1),
         batch_df, batch_id, state_dir, _fold_term_stats_weights, auto_compact,
@@ -1449,60 +1264,14 @@ def retract_term_stats_delta(
     )
 
 
-def read_term_stats_retractable_segments(spark, state_dir: str) -> DataFrame:
-    return _read_segments(spark, state_dir, _merge_term_stats_retractable)
-
-
-def compact_term_stats_retractable_segments(spark, state_dir: str,
-        retain_last: int = 0) -> int:
-    return _compact_segments(
-        spark, state_dir, _fold_term_stats_weights, retain_last=retain_last)
-
-
-def _merge_term_stats_segments(df: DataFrame) -> DataFrame:
-    """Segment merge for the term-stats view: cf and df both ADD —
-    plain additive monoids, order-free."""
-    return df.groupBy("w").agg(
-        F.sum("cf").alias("cf"), F.sum("df").alias("df")
-    )
-
-
-def _term_stats_delta(batch_df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    from ..ext.text import tokens
-
-    return (
-        batch_df.select(id_col, F.explode(tokens(text_col)).alias("w"))
-        .groupBy("w")
-        .agg(
-            F.count(F.lit(1)).alias("cf"),
-            F.count_distinct(F.col(id_col)).alias("df"),
-        )
-    )
-
-
-def apply_term_stats_delta(batch_df: DataFrame, batch_id: int,
-                           state_dir: str, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
-    """O(batch) segmented apply of the BM25/TF-IDF term-stats view:
-    tokenize ONLY this batch's documents into per-term (cf, df) partials.
-    df adds correctly provided each document arrives in exactly one batch
-    (append-only corpus). Same protocol and crash story as
-    :func:`apply_gram_index_delta`."""
-    _apply_delta_segment(
-        lambda: _term_stats_delta(batch_df, text_col, id_col),
-        batch_df, batch_id, state_dir, _merge_term_stats_segments, auto_compact,
-    )
-
-
 def read_term_stats_segments(spark, state_dir: str) -> DataFrame:
-    return _read_segments(spark, state_dir, _merge_term_stats_segments)
+    return _read_segments(spark, state_dir, _live_term_stats)
 
 
 def compact_term_stats_segments(spark, state_dir: str,
         retain_last: int = 0) -> int:
     return _compact_segments(
-        spark, state_dir, _merge_term_stats_segments, retain_last=retain_last)
+        spark, state_dir, _fold_term_stats_weights, retain_last=retain_last)
 
 
 # --------------------------------------------------------------------------
@@ -1523,7 +1292,7 @@ def compact_term_stats_segments(spark, state_dir: str,
 # postings feed the probe-time scan, and the per-cell stats (n_vecs,
 # component sums → live centroid drift) are recomputed from live rows —
 # the price of invertibility is doc-granular state, exactly as with the
-# retractable gram/bucket/term views above.
+# doc and term views above.
 
 
 def _ivf_postings_weighted_delta(batch_df: DataFrame, vec_col: str,
@@ -1761,23 +1530,7 @@ def _segment_scan_as_of(state_dir: str, as_of: int) -> list[str]:
     as_of. Raises :class:`SnapshotUnavailableError` when part of the
     prefix exists only inside a compaction that also folded later
     batches (splitting a monoid fold is not possible)."""
-    root = _segments_root(state_dir)
-    if not os.path.isdir(root):
-        return []
-    compacts, raws = [], {}
-    for name in os.listdir(root):
-        path = os.path.join(root, name)
-        if name.startswith("."):
-            continue
-        if name.startswith("compact_"):
-            try:
-                with open(os.path.join(path, "_manifest.json")) as f:
-                    covered = set(json.load(f)["batch_ids"])
-            except OSError:
-                continue
-            compacts.append((covered, path))
-        elif name.startswith("b"):
-            raws[int(name[1:])] = path
+    compacts, raws = _list_segments(state_dir)
     want = {b for b in (set().union(*[c for c, _ in compacts]) if compacts else set())
             | set(raws) if b <= as_of}
     eligible = [(c, p) for c, p in compacts if c and max(c) <= as_of]
@@ -1808,21 +1561,18 @@ def _read_segments_as_of(spark, state_dir: str, merge_fn, as_of: int) -> DataFra
     return merge_fn(spark.read.parquet(*paths))
 
 
-def read_exact_dedup_retractable_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir,
-                                _merge_exact_dedup_retractable, as_of)
+def read_exact_dedup_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
+    return _read_segments_as_of(spark, state_dir, _live_exact_dedup, as_of)
 
 
-def read_gram_index_retractable_as_of(spark, state_dir: str, as_of: int,
-                                      max_gram_df: int = 1_000) -> DataFrame:
+def read_gram_index_as_of(spark, state_dir: str, as_of: int,
+                          max_gram_df: int = 1_000) -> DataFrame:
     return _read_segments_as_of(
-        spark, state_dir,
-        lambda df: _merge_gram_index_retractable(df, max_gram_df), as_of)
+        spark, state_dir, lambda df: _live_gram_index(df, max_gram_df), as_of)
 
 
-def read_term_stats_retractable_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir,
-                                _merge_term_stats_retractable, as_of)
+def read_term_stats_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
+    return _read_segments_as_of(spark, state_dir, _live_term_stats, as_of)
 
 
 def maintain_changelog_view(src: DataFrame, state_dir: str,
@@ -1840,7 +1590,7 @@ def maintain_changelog_view(src: DataFrame, state_dir: str,
     exactly once, and an empty parquet segment costs one file.
 
     ``apply_fn`` / ``retract_fn`` take (batch_df, batch_id, state_dir) —
-    bind view-specific knobs (text/id columns, caps, auto_compact) with a
+    bind view-specific knobs (text/id columns, k, auto_compact) with a
     lambda. Because every retractable fold is an abelian Z-set, the
     maintained view reads equal to a one-shot rebuild over the NET
     surviving rows regardless of how the changelog interleaves adds and
@@ -1944,8 +1694,7 @@ def apply_doc_views_delta(batch_df: DataFrame, batch_id: int,
                           exact_dir: str, minhash_dir: str, gram_dir: str,
                           text_col: str = "text", id_col: str = "doc_id",
                           n_hashes: int = 16, bands: int = 4,
-                          shingle_n: int = 3, max_bucket_size: int = 100_000,
-                          k: int = 8, max_gram_df: int = 1_000,
+                          shingle_n: int = 3, k: int = 8,
                           auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
     """Fused per-ingest apply for the three maintained doc views — the
     deployment loop's natural shape, mirroring the r8 sketch-view fusion
@@ -1982,10 +1731,10 @@ def apply_doc_views_delta(batch_df: DataFrame, batch_id: int,
                 shared, batch_id, exact_dir, text_col, id_col, auto_compact),
             "minhash": lambda: apply_minhash_buckets_delta(
                 shared, batch_id, minhash_dir, text_col, id_col, n_hashes,
-                bands, shingle_n, max_bucket_size, auto_compact),
+                bands, shingle_n, auto_compact),
             "gram": lambda: apply_gram_index_delta(
                 shared, batch_id, gram_dir, text_col, id_col, k,
-                max_gram_df, auto_compact),
+                auto_compact),
         }
         with ThreadPoolExecutor(max_workers=len(appliers)) as pool:
             futures = {v: pool.submit(fn) for v, fn in appliers.items()}
@@ -1999,8 +1748,7 @@ def apply_doc_views_deltas(batches: list[tuple[DataFrame, int]],
                            exact_dir: str, minhash_dir: str, gram_dir: str,
                            text_col: str = "text", id_col: str = "doc_id",
                            n_hashes: int = 16, bands: int = 4,
-                           shingle_n: int = 3, max_bucket_size: int = 100_000,
-                           k: int = 8, max_gram_df: int = 1_000,
+                           shingle_n: int = 3, k: int = 8,
                            auto_compact: int | None = AUTO_COMPACT_SEGMENTS) -> None:
     """Concurrent MULTI-batch form of :func:`apply_doc_views_delta` (r14,
     r13 verdict #1): all len(batches)×3 (batch, view) applier jobs run in
@@ -2016,8 +1764,8 @@ def apply_doc_views_deltas(batches: list[tuple[DataFrame, int]],
     (:func:`_clear_tmp_segments`), distinct batch ids never share a
     ``.tmp_*`` path, and per-(batch, view) replay guards are untouched.
 
-    The appliers run with the AUTO-triggers disabled and ONE compaction
-    check per view runs after the pool drains — mid-pool compaction from
+    The appliers run with the AUTO-triggers disabled and ONE
+    :func:`maybe_compact` per view runs after the pool drains — mid-pool compaction from
     two writers would race, and deferring the check to the drain point
     preserves the trigger's invariant (segment count never exceeds
     threshold + len(batches) transiently, then folds).
@@ -2047,9 +1795,9 @@ def apply_doc_views_deltas(batches: list[tuple[DataFrame, int]],
                     s, b, exact_dir, text_col, id_col, None),
                 lambda s=shared, b=bid: apply_minhash_buckets_delta(
                     s, b, minhash_dir, text_col, id_col, n_hashes, bands,
-                    shingle_n, max_bucket_size, None),
+                    shingle_n, None),
                 lambda s=shared, b=bid: apply_gram_index_delta(
-                    s, b, gram_dir, text_col, id_col, k, max_gram_df, None),
+                    s, b, gram_dir, text_col, id_col, k, None),
             ])
         with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
             futures = [pool.submit(fn) for fn in jobs]
@@ -2058,18 +1806,13 @@ def apply_doc_views_deltas(batches: list[tuple[DataFrame, int]],
     finally:
         for shared, _ in shareds:
             release_one(shared)
-    if auto_compact is not None and batches:
+    if batches:
         spark = batches[0][0].sparkSession
-        for state_dir, merge_fn in (
-            (exact_dir, _merge_exact_dedup_segments),
-            (minhash_dir,
-             lambda df: _merge_minhash_segments(df, max_bucket_size)),
-            (gram_dir, lambda df: _merge_gram_segments(df, max_gram_df)),
-        ):
-            paths, _ = _segment_scan(state_dir)
-            if len(paths) >= auto_compact:
-                _compact_segments(spark, state_dir, merge_fn,
-                                  retain_last=AUTO_COMPACT_RETAIN)
+        for state_dir, compact_fn in (
+                (exact_dir, compact_exact_dedup_segments),
+                (minhash_dir, compact_minhash_buckets_segments),
+                (gram_dir, compact_gram_index_segments)):
+            maybe_compact(spark, state_dir, compact_fn, auto_compact)
 
 
 def segment_stats(state_dir: str) -> dict:
@@ -2094,12 +1837,8 @@ def segment_stats(state_dir: str) -> dict:
                     pass
         return total
 
-    kinds = [_raw_segment_kind(p) for p in raws]
-    n_tomb = sum(1 for k in kinds if k == "tombstone")
-    # the fraction the live trigger actually measures: empty tombstones
-    # (zero read pressure) excluded from numerator AND denominator (r13
-    # ADVICE — same-population invariant)
-    n_pop = sum(1 for k in kinds if k != "empty_tombstone")
+    # the fraction the live trigger actually measures
+    n_tomb, n_pop = _tombstone_population(paths)
     return {
         "readable_segments": len(paths),
         "raw_segments": len(raws),

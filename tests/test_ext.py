@@ -1434,6 +1434,25 @@ def test_substring_shared_gram_pairs_planted_and_df_cap(spark):
     assert capped == {(0, 1)}
 
 
+def test_pairs_from_sorted_ids_short_arrays_yield_no_pairs(spark):
+    """The in-bucket pair fan-out returns an empty list for empty and
+    singleton arrays instead of failing the job on element_at(ids, 0),
+    and every (a < b) index pair otherwise."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
+        _pairs_from_sorted_ids,
+    )
+
+    df = spark.createDataFrame(
+        [(0, []), (1, [5]), (2, [1, 2]), (3, [1, 2, 3])],
+        "k int, ids array<long>",
+    )
+    got = {
+        r.k: [(p.id_a, p.id_b) for p in r.p]
+        for r in df.select("k", _pairs_from_sorted_ids("ids").alias("p")).collect()
+    }
+    assert got == {0: [], 1: [], 2: [(1, 2)], 3: [(1, 2), (1, 3), (2, 3)]}
+
+
 def test_global_rank_handles_null_id(spark):
     """A NULL id must rank like any other (sentinel-hashed), not crash
     the driver-side offset fold (r8 review: NULL hash → NULL bucket →

@@ -474,10 +474,10 @@ def test_incremental_gram_index_equals_batch_and_drives_rewrite(spark, tmp_path)
 
 
 def test_gram_index_postings_cap_overflows_across_batches(spark, tmp_path):
-    """The capped posting list is a join-semilattice: a gram whose
-    distinct-doc set only exceeds max_gram_df through the CROSS-BATCH
-    union must collapse to (ids=NULL, over=true) and contribute no pairs
-    — exactly the batch detector's df cap on the same corpus."""
+    """The read-time posting cap: a gram whose distinct-doc set only
+    exceeds max_gram_df through the CROSS-BATCH union must read as
+    (ids=NULL, over=true) and contribute no pairs — exactly the batch
+    detector's df cap on the same corpus."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
         substring_shared_gram_pairs,
         substring_shared_gram_pairs_from_index,
@@ -497,8 +497,8 @@ def test_gram_index_postings_cap_overflows_across_batches(spark, tmp_path):
     state = str(tmp_path / "gi")
     # each batch alone stays under the cap (3 docs, then 2) — only the
     # cross-batch union (5) overflows
-    apply_gram_index_delta(b0, 0, state, k=k, max_gram_df=cap)
-    apply_gram_index_delta(b1, 1, state, k=k, max_gram_df=cap)
+    apply_gram_index_delta(b0, 0, state, k=k)
+    apply_gram_index_delta(b1, 1, state, k=k)
     view = read_gram_index_segments(spark, state, max_gram_df=cap)
     over_rows = view.filter("over").collect()
     assert over_rows and all(r.ids is None for r in over_rows)
@@ -661,7 +661,7 @@ def test_incremental_minhash_buckets_equal_batch_and_drive_pairs(spark, tmp_path
 
 def test_minhash_buckets_cap_overflows_across_batches(spark, tmp_path):
     """A bucket whose membership only exceeds max_bucket_size through the
-    cross-batch union must collapse to (ids=NULL, over=true) and emit no
+    cross-batch union must read as (ids=NULL, over=true) and emit no
     pairs — the batch detector's degenerate-mass-duplicate cutoff, and
     replaying an applied batch must not change the view."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
@@ -686,8 +686,8 @@ def test_minhash_buckets_cap_overflows_across_batches(spark, tmp_path):
         "doc_id long, text string",
     )
     state = str(tmp_path / "mh")
-    apply_minhash_buckets_delta(b0, 0, state, max_bucket_size=cap)
-    apply_minhash_buckets_delta(b1, 1, state, max_bucket_size=cap)
+    apply_minhash_buckets_delta(b0, 0, state)
+    apply_minhash_buckets_delta(b1, 1, state)
     view = read_minhash_buckets_segments(spark, state, max_bucket_size=cap)
     over_rows = view.filter("over").collect()
     assert over_rows and all(r.ids is None for r in over_rows)
@@ -704,7 +704,7 @@ def test_minhash_buckets_cap_overflows_across_batches(spark, tmp_path):
     assert {(a, b) for a, b, _ in got} == {(10, 11)}  # boilerplate cluster gone
 
     # replay idempotence: the view still equals the one-shot buckets
-    apply_minhash_buckets_delta(b1, 1, state, max_bucket_size=cap)
+    apply_minhash_buckets_delta(b1, 1, state)
     assert _snap_buckets(
         read_minhash_buckets_segments(spark, state, max_bucket_size=cap)
     ) == _buckets_oneshot(corpus, cap)
@@ -824,7 +824,7 @@ def test_segmented_gram_index_equals_compacting_view(spark, tmp_path):
     seg_dir = str(tmp_path / "seg")
     for b, rows in enumerate(batches):
         bdf = spark.createDataFrame(rows, "doc_id long, text string")
-        apply_gram_index_delta(bdf, b, seg_dir, k=k, max_gram_df=cap)
+        apply_gram_index_delta(bdf, b, seg_dir, k=k)
     corpus = spark.createDataFrame(
         [r for rows in batches for r in rows], "doc_id long, text string"
     )
@@ -845,20 +845,20 @@ def test_segmented_gram_index_equals_compacting_view(spark, tmp_path):
 
     # replay of an applied batch no-ops (segment exists)
     bdf0 = spark.createDataFrame(batches[0], "doc_id long, text string")
-    apply_gram_index_delta(bdf0, 0, seg_dir, k=k, max_gram_df=cap)
+    apply_gram_index_delta(bdf0, 0, seg_dir, k=k)
     assert snap(read_gram_index_segments(spark, seg_dir, max_gram_df=cap)) == want
 
     # compaction folds to one segment; view unchanged; replay of a
     # COVERED batch still no-ops (manifest carries the ids)
-    n = compact_gram_index_segments(spark, seg_dir, max_gram_df=cap)
+    n = compact_gram_index_segments(spark, seg_dir)
     assert n == 3
     assert snap(read_gram_index_segments(spark, seg_dir, max_gram_df=cap)) == want
-    apply_gram_index_delta(bdf0, 0, seg_dir, k=k, max_gram_df=cap)
+    apply_gram_index_delta(bdf0, 0, seg_dir, k=k)
     assert snap(read_gram_index_segments(spark, seg_dir, max_gram_df=cap)) == want
 
     # post-compaction ingest keeps working
     bdf3 = spark.createDataFrame([(9, boiler)], "doc_id long, text string")
-    apply_gram_index_delta(bdf3, 3, seg_dir, k=k, max_gram_df=cap)
+    apply_gram_index_delta(bdf3, 3, seg_dir, k=k)
     assert snap(read_gram_index_segments(spark, seg_dir, max_gram_df=cap)) == (
         _grams_oneshot(corpus.unionByName(bdf3), k, cap))
 
@@ -940,8 +940,7 @@ def test_segmented_gram_index_crash_windows_never_double_count(spark, tmp_path):
 def test_segmented_minhash_and_exact_views_equal_compacting(spark, tmp_path):
     """The shared segment protocol applied to the other two dedup views:
     segmented state == one-shot, before and after compaction, for the
-    LSH-bucket view (capped semilattice) and the exact-dedup view
-    (min/sum monoids)."""
+    LSH-bucket view and the exact-dedup view."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
         exact_dedup,
         minhash_lsh_pairs,
@@ -1212,9 +1211,9 @@ def test_retractable_exact_dedup_equals_rebuild(spark, tmp_path):
     and every interleaving with compaction (manual and auto)."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        compact_exact_dedup_retractable_segments,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        compact_exact_dedup_segments,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -1224,7 +1223,7 @@ def test_retractable_exact_dedup_equals_rebuild(spark, tmp_path):
 
     def snap(state):
         return sorted(
-            map(tuple, read_exact_dedup_retractable_segments(spark, state).collect())
+            map(tuple, read_exact_dedup_segments(spark, state).collect())
         )
 
     def want(rows):
@@ -1233,9 +1232,9 @@ def test_retractable_exact_dedup_equals_rebuild(spark, tmp_path):
 
     for trigger in (None, 2):  # manual protocol AND auto-compaction mid-run
         state = str(tmp_path / f"rz_{trigger}")
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame(b0, schema), 0, state, auto_compact=trigger)
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame(b1, schema), 1, state, auto_compact=trigger)
         assert snap(state) == want(b0 + b1)
 
@@ -1249,12 +1248,12 @@ def test_retractable_exact_dedup_equals_rebuild(spark, tmp_path):
         assert snap(state) == want(survivors)
 
         # delete-then-re-add: doc 1 returns, weights annihilate to +1
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame([b0[0]], schema), 3, state, auto_compact=trigger)
         assert snap(state) == want(survivors + [b0[0]])
 
         # explicit compaction at an arbitrary point changes nothing
-        covered = compact_exact_dedup_retractable_segments(spark, state)
+        covered = compact_exact_dedup_segments(spark, state)
         assert covered == 4
         assert snap(state) == want(survivors + [b0[0]])
 
@@ -1265,7 +1264,7 @@ def test_retractable_exact_dedup_equals_rebuild(spark, tmp_path):
 
     # a fingerprint whose every copy is retracted disappears entirely
     state = str(tmp_path / "rz_gone")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b0, schema), 0, state)
     retract_exact_dedup_delta(
         spark.createDataFrame([b0[0], b0[1]], schema), 1, state)
@@ -1290,9 +1289,9 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
         substring_shared_gram_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_gram_index_retractable_delta,
-        compact_gram_index_retractable_segments,
-        read_gram_index_retractable_segments,
+        apply_gram_index_delta,
+        compact_gram_index_segments,
+        read_gram_index_segments,
         retract_gram_index_delta,
     )
 
@@ -1303,9 +1302,9 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
     b1 = [(3, boiler), (4, boiler), (5, boiler + " alpha beta")]
 
     state = str(tmp_path / "rzgi")
-    apply_gram_index_retractable_delta(
+    apply_gram_index_delta(
         spark.createDataFrame(b0, schema), 0, state, k=k)
-    apply_gram_index_retractable_delta(
+    apply_gram_index_delta(
         spark.createDataFrame(b1, schema), 1, state, k=k)
 
     snap = _snap_grams
@@ -1313,7 +1312,7 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
     def rebuild(rows):
         return _grams_oneshot(spark.createDataFrame(rows, schema), k, cap)
 
-    merged = read_gram_index_retractable_segments(spark, state, max_gram_df=cap)
+    merged = read_gram_index_segments(spark, state, max_gram_df=cap)
     assert snap(merged) == rebuild(b0 + b1)
     assert any(r[4] for r in snap(merged))  # boiler grams genuinely over cap
 
@@ -1323,7 +1322,7 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
     retract_gram_index_delta(
         spark.createDataFrame([b0[0], b1[1]], schema), 2, state, k=k)
     survivors = [b0[1], b1[0], b1[2]]
-    merged = read_gram_index_retractable_segments(spark, state, max_gram_df=cap)
+    merged = read_gram_index_segments(spark, state, max_gram_df=cap)
     assert snap(merged) == rebuild(survivors)
     assert not any(r[4] for r in snap(merged))  # cap RECOVERED (3 docs left)
 
@@ -1349,12 +1348,12 @@ def test_retractable_gram_index_equals_rebuild(spark, tmp_path):
 
     # compaction at an arbitrary point changes nothing; retraction after
     # compaction still works
-    assert compact_gram_index_retractable_segments(spark, state) == 3
-    assert snap(read_gram_index_retractable_segments(spark, state, max_gram_df=cap)) \
+    assert compact_gram_index_segments(spark, state) == 3
+    assert snap(read_gram_index_segments(spark, state, max_gram_df=cap)) \
         == rebuild(survivors)
     retract_gram_index_delta(
         spark.createDataFrame([b1[0]], schema), 3, state, k=k)
-    assert snap(read_gram_index_retractable_segments(spark, state, max_gram_df=cap)) \
+    assert snap(read_gram_index_segments(spark, state, max_gram_df=cap)) \
         == rebuild([b0[1], b1[2]])
 
 
@@ -1368,8 +1367,8 @@ def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
         minhash_pairs_from_index,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_minhash_buckets_retractable_delta,
-        read_minhash_buckets_retractable_segments,
+        apply_minhash_buckets_delta,
+        read_minhash_buckets_segments,
         retract_minhash_buckets_delta,
     )
 
@@ -1380,9 +1379,9 @@ def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
     b1 = [(4, text), (5, text), (6, text + " extra")]
 
     state = str(tmp_path / "rzmh")
-    apply_minhash_buckets_retractable_delta(
+    apply_minhash_buckets_delta(
         spark.createDataFrame(b0, schema), 0, state)
-    apply_minhash_buckets_retractable_delta(
+    apply_minhash_buckets_delta(
         spark.createDataFrame(b1, schema), 1, state)
 
     snap = _snap_buckets
@@ -1390,7 +1389,7 @@ def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
     def rebuild(rows):
         return _buckets_oneshot(spark.createDataFrame(rows, schema), cap)
 
-    got = snap(read_minhash_buckets_retractable_segments(spark, state,
+    got = snap(read_minhash_buckets_segments(spark, state,
                                                          max_bucket_size=cap))
     assert got == rebuild(b0 + b1)
     assert any(r[3] for r in got)  # 5 identical docs → bucket over cap=3
@@ -1399,7 +1398,7 @@ def test_retractable_minhash_buckets_equal_rebuild(spark, tmp_path):
     retract_minhash_buckets_delta(
         spark.createDataFrame([b0[0], b1[0]], schema), 2, state)
     survivors = [b0[1], b0[2], b1[1], b1[2]]
-    merged = read_minhash_buckets_retractable_segments(spark, state,
+    merged = read_minhash_buckets_segments(spark, state,
                                                        max_bucket_size=cap)
     assert snap(merged) == rebuild(survivors)
     assert not any(r[3] for r in snap(merged))  # cap recovered
@@ -1431,9 +1430,9 @@ def test_retractable_term_stats_equals_rebuild_and_scores_bm25(spark, tmp_path):
         tokens,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_term_stats_retractable_delta,
-        compact_term_stats_retractable_segments,
-        read_term_stats_retractable_segments,
+        apply_term_stats_delta,
+        compact_term_stats_segments,
+        read_term_stats_segments,
         retract_term_stats_delta,
     )
 
@@ -1442,8 +1441,8 @@ def test_retractable_term_stats_equals_rebuild_and_scores_bm25(spark, tmp_path):
     b1 = [(3, "spark window filter"), (4, "join join window the filter scan")]
 
     state = str(tmp_path / "rzts")
-    apply_term_stats_retractable_delta(spark.createDataFrame(b0, schema), 0, state)
-    apply_term_stats_retractable_delta(spark.createDataFrame(b1, schema), 1, state)
+    apply_term_stats_delta(spark.createDataFrame(b0, schema), 0, state)
+    apply_term_stats_delta(spark.createDataFrame(b1, schema), 1, state)
 
     def want_stats(rows):
         return {
@@ -1458,7 +1457,7 @@ def test_retractable_term_stats_equals_rebuild_and_scores_bm25(spark, tmp_path):
     def got_stats():
         return {
             r.w: (r.cf, r.df)
-            for r in read_term_stats_retractable_segments(spark, state).collect()
+            for r in read_term_stats_segments(spark, state).collect()
         }
 
     assert got_stats() == want_stats(b0 + b1)
@@ -1473,7 +1472,7 @@ def test_retractable_term_stats_equals_rebuild_and_scores_bm25(spark, tmp_path):
     sdf = spark.createDataFrame(survivors, schema)
     n_docs = 3
     avgdl = sdf.select(F.sum(F.size(tokens("text"))).alias("s")).collect()[0].s / n_docs
-    stats = read_term_stats_retractable_segments(spark, state)
+    stats = read_term_stats_segments(spark, state)
     got = [
         (r.doc_id, r.n_terms_matched, r.bm25)
         for r in bm25_topk_from_stats(sdf, stats, n_docs, avgdl,
@@ -1486,19 +1485,19 @@ def test_retractable_term_stats_equals_rebuild_and_scores_bm25(spark, tmp_path):
     assert got == want
 
     # compaction then further retraction still exact
-    assert compact_term_stats_retractable_segments(spark, state) == 3
+    assert compact_term_stats_segments(spark, state) == 3
     retract_term_stats_delta(spark.createDataFrame([b1[0]], schema), 3, state)
     assert got_stats() == want_stats([b0[1], b1[1]])
 
     # string ids: full add/retract cycle with no numeric-id requirement
     sstate = str(tmp_path / "rzts_str")
     sschema = "doc_id string, text string"
-    apply_term_stats_retractable_delta(
+    apply_term_stats_delta(
         spark.createDataFrame([("a", "x y x"), ("b", "x z")], sschema), 0, sstate)
     retract_term_stats_delta(
         spark.createDataFrame([("a", "x y x")], sschema), 1, sstate)
     got_s = {r.w: (r.cf, r.df)
-             for r in read_term_stats_retractable_segments(spark, sstate).collect()}
+             for r in read_term_stats_segments(spark, sstate).collect()}
     assert got_s == {"x": (1, 1), "z": (1, 1)}
 
 
@@ -1698,10 +1697,10 @@ def test_as_of_snapshot_reads(spark, tmp_path):
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
         SnapshotUnavailableError,
-        apply_exact_dedup_retractable_delta,
-        compact_exact_dedup_retractable_segments,
-        read_exact_dedup_retractable_as_of,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        compact_exact_dedup_segments,
+        read_exact_dedup_as_of,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -1714,13 +1713,13 @@ def test_as_of_snapshot_reads(spark, tmp_path):
             spark.createDataFrame(rows, schema)).collect()))
 
     def snap_at(state, n):
-        return sorted(map(tuple, read_exact_dedup_retractable_as_of(
+        return sorted(map(tuple, read_exact_dedup_as_of(
             spark, state, n).collect()))
 
     state = str(tmp_path / "asof")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b0, schema), 0, state, auto_compact=None)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b1, schema), 1, state, auto_compact=None)
     retract_exact_dedup_delta(
         spark.createDataFrame([b0[0], b1[0]], schema), 2, state, auto_compact=None)
@@ -1733,12 +1732,12 @@ def test_as_of_snapshot_reads(spark, tmp_path):
 
     # compaction is history GC: pre-boundary snapshots are gone loudly,
     # the boundary itself (and later) still reads
-    compact_exact_dedup_retractable_segments(spark, state)
+    compact_exact_dedup_segments(spark, state)
     with pytest.raises(SnapshotUnavailableError):
         snap_at(state, 1)
     assert snap_at(state, 2) == want([b0[1], b0[2], b1[1]])
     # a fresh batch after the compaction snapshots fine
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame([(6, "dd")], schema), 3, state, auto_compact=None)
     assert snap_at(state, 2) == want([b0[1], b0[2], b1[1]])
     assert snap_at(state, 3) == want([b0[1], b0[2], b1[1], (6, "dd")])
@@ -1752,10 +1751,10 @@ def test_changelog_maintainer_equals_rebuild(spark, tmp_path):
     re-add across batches."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
+        apply_exact_dedup_delta,
         maintain_changelog_view,
-        read_exact_dedup_retractable_as_of,
-        read_exact_dedup_retractable_segments,
+        read_exact_dedup_as_of,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -1781,7 +1780,7 @@ def test_changelog_maintainer_equals_rebuild(spark, tmp_path):
     )
     maintain_changelog_view(
         stream, state, ckpt,
-        apply_fn=lambda df, bid, sd: apply_exact_dedup_retractable_delta(
+        apply_fn=lambda df, bid, sd: apply_exact_dedup_delta(
             df, bid, sd, auto_compact=None),
         retract_fn=lambda df, bid, sd: retract_exact_dedup_delta(
             df, bid, sd, auto_compact=None),
@@ -1791,7 +1790,7 @@ def test_changelog_maintainer_equals_rebuild(spark, tmp_path):
         return sorted(map(tuple, exact_dedup(
             spark.createDataFrame(rows, "doc_id long, text string")).collect()))
 
-    got = sorted(map(tuple, read_exact_dedup_retractable_segments(
+    got = sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect()))
     net = [(1, "aa"), (2, "aa"), (3, "bb"), (5, "bb")]
     assert got == want(net)
@@ -1799,7 +1798,7 @@ def test_changelog_maintainer_equals_rebuild(spark, tmp_path):
     # as-of at the even/odd micro-batch boundaries: 2b = adds applied,
     # 2b+1 = that batch's deletes applied
     def snap_at(n):
-        return sorted(map(tuple, read_exact_dedup_retractable_as_of(
+        return sorted(map(tuple, read_exact_dedup_as_of(
             spark, state, n).collect()))
 
     assert snap_at(1) == want([(1, "aa"), (2, "aa"), (3, "bb")])
@@ -2107,9 +2106,9 @@ def test_retention_compaction_preserves_recent_snapshots(spark, tmp_path):
         _compact_segments,
         _fold_exact_dedup_weights,
         _segment_scan,
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_as_of,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_as_of,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -2117,7 +2116,7 @@ def test_retention_compaction_preserves_recent_snapshots(spark, tmp_path):
     batches = [[(1, "aa"), (2, "bb")], [(3, "aa")], [(4, "cc")], [(5, "bb")]]
     state = str(tmp_path / "ret")
     for b, rows in enumerate(batches):
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame(rows, schema), b, state, auto_compact=None)
     retract_exact_dedup_delta(
         spark.createDataFrame([(1, "aa")], schema), 4, state, auto_compact=None)
@@ -2127,10 +2126,10 @@ def test_retention_compaction_preserves_recent_snapshots(spark, tmp_path):
             spark.createDataFrame(rows, schema)).collect()))
 
     def snap_at(n):
-        return sorted(map(tuple, read_exact_dedup_retractable_as_of(
+        return sorted(map(tuple, read_exact_dedup_as_of(
             spark, state, n).collect()))
 
-    head = sorted(map(tuple, read_exact_dedup_retractable_segments(
+    head = sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect()))
     survivors = [(2, "bb"), (3, "aa"), (4, "cc"), (5, "bb")]
     assert head == want(survivors)
@@ -2144,7 +2143,7 @@ def test_retention_compaction_preserves_recent_snapshots(spark, tmp_path):
     assert sum(1 for p in paths if "compact_" in p) == 1
 
     # current state and in-horizon snapshots unchanged
-    assert sorted(map(tuple, read_exact_dedup_retractable_segments(
+    assert sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect())) == want(survivors)
     assert snap_at(3) == want([r for b in batches for r in b])
     assert snap_at(2) == want([r for b in batches[:3] for r in b])
@@ -2157,7 +2156,7 @@ def test_retention_compaction_preserves_recent_snapshots(spark, tmp_path):
                              retain_last=5) == 0
     # full compaction still folds the retained tail afterwards
     assert _compact_segments(spark, state, _fold_exact_dedup_weights) == 5
-    assert sorted(map(tuple, read_exact_dedup_retractable_segments(
+    assert sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect())) == want(survivors)
 
 
@@ -2166,15 +2165,15 @@ def test_segment_stats_observability(spark, tmp_path):
     covered batches, bytes, auto-compact proximity) without running a
     Spark job — the per-view monitoring hook."""
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        compact_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        compact_exact_dedup_segments,
         segment_stats,
     )
 
     schema = "doc_id long, text string"
     state = str(tmp_path / "obs")
     for b in range(3):
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame([(b, f"t{b}")], schema), b, state,
             auto_compact=None)
     s = segment_stats(state)
@@ -2184,7 +2183,7 @@ def test_segment_stats_observability(spark, tmp_path):
     assert s["bytes"] > 0
     assert s["will_auto_compact_next"] is False
 
-    compact_exact_dedup_retractable_segments(spark, state, retain_last=1)
+    compact_exact_dedup_segments(spark, state, retain_last=1)
     s2 = segment_stats(state)
     assert s2["compact_segments"] == 1 and s2["raw_segments"] == 1
     assert s2["applied_batches"] == [0, 1, 2]  # coverage union unchanged
@@ -2205,8 +2204,8 @@ def test_retention_ignores_covered_crash_leftover_raws(spark, tmp_path):
         _compact_segments,
         _fold_exact_dedup_weights,
         _segments_root,
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
     )
 
     schema = "doc_id long, text string"
@@ -2215,7 +2214,7 @@ def test_retention_ignores_covered_crash_leftover_raws(spark, tmp_path):
 
     # batch 5 first, compact (covers {5}), then simulate the crash
     # window: the covered raw b5 is still on disk after the compact
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame([(50, "xx")], schema), 5, state, auto_compact=None)
     leftover = str(tmp_path / "b5_copy")
     _sh.copytree(f"{root}/b{5:010d}", leftover)
@@ -2223,9 +2222,9 @@ def test_retention_ignores_covered_crash_leftover_raws(spark, tmp_path):
     _sh.copytree(leftover, f"{root}/b{5:010d}")
 
     # older (non-monotonic) uncovered batches arrive next
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame([(30, "xx")], schema), 3, state, auto_compact=None)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame([(40, "yy")], schema), 4, state, auto_compact=None)
 
     want = sorted(map(tuple, exact_dedup(spark.createDataFrame(
@@ -2235,14 +2234,14 @@ def test_retention_ignores_covered_crash_leftover_raws(spark, tmp_path):
     # 3 and 4 are the retained window (the leftover b5 is NOT a
     # candidate), so nothing new folds and the read stays single-counted
     _compact_segments(spark, state, _fold_exact_dedup_weights, retain_last=2)
-    got = sorted(map(tuple, read_exact_dedup_retractable_segments(
+    got = sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect()))
     assert got == want  # old code double-counted batch 5 → n_copies 3
 
     # a full compaction afterwards folds everything and GC clears the
     # leftover; the view is still exact
     _compact_segments(spark, state, _fold_exact_dedup_weights)
-    assert sorted(map(tuple, read_exact_dedup_retractable_segments(
+    assert sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect())) == want
 
 
@@ -2300,8 +2299,8 @@ def test_tombstone_fraction_trigger_fires_and_preserves_view(spark, tmp_path):
     length never fires the new trigger."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
         segment_stats,
     )
@@ -2313,9 +2312,9 @@ def test_tombstone_fraction_trigger_fires_and_preserves_view(spark, tmp_path):
 
     # auto path: the retract crosses the tombstone fraction and compacts
     auto = str(tmp_path / "auto")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b0, schema), 0, auto)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b1, schema), 1, auto)
     s_pre = segment_stats(auto)
     assert s_pre["tombstone_segments"] == 0
@@ -2329,16 +2328,16 @@ def test_tombstone_fraction_trigger_fires_and_preserves_view(spark, tmp_path):
 
     # manual path: same batches, no trigger — views must be identical
     manual = str(tmp_path / "manual")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b0, schema), 0, manual, auto_compact=None)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b1, schema), 1, manual, auto_compact=None)
     retract_exact_dedup_delta(
         spark.createDataFrame(gone, schema), 2, manual, auto_compact=None)
     assert segment_stats(manual)["tombstone_segments"] == 1
 
     def view(state):
-        return sorted(map(tuple, read_exact_dedup_retractable_segments(
+        return sorted(map(tuple, read_exact_dedup_segments(
             spark, state).collect()))
 
     want = sorted(map(tuple, exact_dedup(spark.createDataFrame(
@@ -2348,7 +2347,7 @@ def test_tombstone_fraction_trigger_fires_and_preserves_view(spark, tmp_path):
     # pure-ingest sequence of the same length: the new trigger never fires
     ingest = str(tmp_path / "ingest")
     for b, rows in enumerate((b0, b1, [(9, "zz")])):
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame(rows, schema), b, ingest)
     s_ing = segment_stats(ingest)
     assert s_ing["compact_segments"] == 0 and s_ing["raw_segments"] == 3
@@ -2370,9 +2369,9 @@ def test_auto_compact_retain_preserves_asof_horizon(spark, tmp_path, monkeypatch
     from skylogix_real_time_weather_data_pipeline_spark.streaming import matview
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
         SnapshotUnavailableError,
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_as_of,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_as_of,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
         segment_stats,
     )
@@ -2381,9 +2380,9 @@ def test_auto_compact_retain_preserves_asof_horizon(spark, tmp_path, monkeypatch
     schema = "doc_id long, text string"
     b0, b1, gone = [(1, "aa"), (2, "bb")], [(3, "aa")], [(1, "aa")]
     state = str(tmp_path / "retain_auto")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b0, schema), 0, state)
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame(b1, schema), 1, state)
     # the retract fires the tombstone trigger (1/3) — but retention keeps
     # the 2 newest raw batch ids (1 and the tombstone 2) unfolded
@@ -2395,35 +2394,35 @@ def test_auto_compact_retain_preserves_asof_horizon(spark, tmp_path, monkeypatch
 
     want_now = sorted(map(tuple, exact_dedup(spark.createDataFrame(
         [(2, "bb"), (3, "aa")], schema)).collect()))
-    assert sorted(map(tuple, read_exact_dedup_retractable_segments(
+    assert sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect())) == want_now
     # every snapshot still reads: the fold covers exactly prefix [0], so
     # as-of 0 answers from the compact and 1/2 from compact + raws
-    assert sorted(map(tuple, read_exact_dedup_retractable_as_of(
+    assert sorted(map(tuple, read_exact_dedup_as_of(
         spark, state, 0).collect())) == sorted(map(tuple, exact_dedup(
             spark.createDataFrame(b0, schema)).collect()))
-    assert sorted(map(tuple, read_exact_dedup_retractable_as_of(
+    assert sorted(map(tuple, read_exact_dedup_as_of(
         spark, state, 1).collect())) == sorted(map(tuple, exact_dedup(
             spark.createDataFrame(b0 + b1, schema)).collect()))
 
     # a second delete window: the trigger fires again, retention slides
     # forward (keeps raws 3,4; folds 0-2) — the horizon moves, the
     # current view is still exact, and PRE-horizon as-of is now loud GC
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame([(4, "cc")], schema), 3, state)
     retract_exact_dedup_delta(
         spark.createDataFrame([(2, "bb")], schema), 4, state)
     s2 = segment_stats(state)
     assert s2["raw_segments"] == 2 and s2["applied_batches"] == list(range(5))
-    assert sorted(map(tuple, read_exact_dedup_retractable_segments(
+    assert sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect())) == sorted(map(tuple, exact_dedup(
             spark.createDataFrame([(3, "aa"), (4, "cc")], schema)).collect()))
-    assert sorted(map(tuple, read_exact_dedup_retractable_as_of(
+    assert sorted(map(tuple, read_exact_dedup_as_of(
         spark, state, 3).collect())) == sorted(map(tuple, exact_dedup(
             spark.createDataFrame([(2, "bb"), (3, "aa"), (4, "cc")],
                                   schema)).collect()))
     with pytest.raises(SnapshotUnavailableError):
-        read_exact_dedup_retractable_as_of(spark, state, 1).collect()
+        read_exact_dedup_as_of(spark, state, 1).collect()
 
 
 def test_empty_tombstones_never_trigger_compaction(spark, tmp_path):
@@ -2436,8 +2435,8 @@ def test_empty_tombstones_never_trigger_compaction(spark, tmp_path):
     maintenance into O(n^2) over the stream."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
         segment_stats,
     )
@@ -2449,7 +2448,7 @@ def test_empty_tombstones_never_trigger_compaction(spark, tmp_path):
     # the router's per-micro-batch shape: adds at 2b, tombstone at 2b+1
     batches = ([(1, "aa"), (2, "bb")], [(3, "aa")], [(4, "cc")])
     for b, rows in enumerate(batches):
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame(rows, schema), 2 * b, state)
         retract_exact_dedup_delta(empty, 2 * b + 1, state)
 
@@ -2462,7 +2461,7 @@ def test_empty_tombstones_never_trigger_compaction(spark, tmp_path):
     # the view is exact despite the empty segments (all 4 docs live)
     want = sorted(map(tuple, exact_dedup(spark.createDataFrame(
         [(1, "aa"), (2, "bb"), (3, "aa"), (4, "cc")], schema)).collect()))
-    assert sorted(map(tuple, read_exact_dedup_retractable_segments(
+    assert sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect())) == want
 
     # a REAL (non-empty) delete still fires the fraction trigger: 1
@@ -2474,7 +2473,7 @@ def test_empty_tombstones_never_trigger_compaction(spark, tmp_path):
     retract_exact_dedup_delta(
         spark.createDataFrame([(4, "cc")], schema), 8, state)
     assert segment_stats(state)["compact_segments"] == 1
-    assert sorted(map(tuple, read_exact_dedup_retractable_segments(
+    assert sorted(map(tuple, read_exact_dedup_segments(
         spark, state).collect())) == sorted(map(tuple, exact_dedup(
             spark.createDataFrame([(3, "aa")], schema)).collect()))
 
@@ -2489,8 +2488,8 @@ def test_empty_tombstones_excluded_from_fraction_denominator(spark, tmp_path):
     1 tombstone / (1 + 2 data) = 1/3 -> fires; the old diluted math read
     1 / (1 + 4 raws) = 0.2 and waited."""
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
         segment_stats,
     )
@@ -2500,7 +2499,7 @@ def test_empty_tombstones_excluded_from_fraction_denominator(spark, tmp_path):
     state = str(tmp_path / "cdc_mixed")
 
     for b, rows in enumerate(([(1, "aa"), (2, "bb")], [(3, "cc")])):
-        apply_exact_dedup_retractable_delta(
+        apply_exact_dedup_delta(
             spark.createDataFrame(rows, schema), 2 * b, state)
         retract_exact_dedup_delta(empty, 2 * b + 1, state)
 
@@ -2516,7 +2515,7 @@ def test_empty_tombstones_excluded_from_fraction_denominator(spark, tmp_path):
     assert segment_stats(state)["compact_segments"] == 1, (
         "denominator dilution: the 1/3 trigger must fire on the first "
         "real delete when empty tombstones are excluded from both sides")
-    got = sorted(r["doc_id"] for r in read_exact_dedup_retractable_segments(
+    got = sorted(r["doc_id"] for r in read_exact_dedup_segments(
         spark, state).collect())
     assert got == [1, 3]
 
@@ -2590,15 +2589,15 @@ def test_raw_manifest_corruption_is_tolerated(spark, tmp_path):
     import os
 
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
         segment_stats,
     )
 
     schema = "doc_id long, text string"
     state = str(tmp_path / "corrupt")
-    apply_exact_dedup_retractable_delta(
+    apply_exact_dedup_delta(
         spark.createDataFrame([(1, "aa"), (2, "bb")], schema), 0, state)
     retract_exact_dedup_delta(
         spark.createDataFrame([(2, "bb")], schema), 1, state,
@@ -2617,7 +2616,7 @@ def test_raw_manifest_corruption_is_tolerated(spark, tmp_path):
     retract_exact_dedup_delta(
         spark.createDataFrame([(1, "aa")], schema), 2, state,
         auto_compact=None)
-    assert read_exact_dedup_retractable_segments(
+    assert read_exact_dedup_segments(
         spark, state).count() == 0
 
 
@@ -2632,8 +2631,8 @@ def test_maybe_compact_pooled_matches_sequential(spark, tmp_path):
     from concurrent.futures import ThreadPoolExecutor
 
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        _fold_count_sketch_weights,
         apply_count_sketch_delta,
+        compact_count_sketch_segments,
         maybe_compact,
         read_count_sketch_segments,
         retract_count_sketch_delta,
@@ -2659,7 +2658,7 @@ def test_maybe_compact_pooled_matches_sequential(spark, tmp_path):
             ]
             for f in futs:
                 f.result()
-        return maybe_compact(spark, state, _fold_count_sketch_weights)
+        return maybe_compact(spark, state, compact_count_sketch_segments)
 
     pooled = str(tmp_path / "pooled")
     assert run_pooled(pooled) is True  # fraction trigger fired post-drain
@@ -2700,7 +2699,7 @@ def test_maybe_compact_pooled_matches_sequential(spark, tmp_path):
         ]
         for f in futs:
             f.result()
-    assert maybe_compact(spark, deferred, _fold_count_sketch_weights,
+    assert maybe_compact(spark, deferred, compact_count_sketch_segments,
                          fraction_trigger=False) is False
     sd = segment_stats(deferred)
     assert sd["compact_segments"] == 0 and sd["tombstone_segments"] == 1
@@ -2717,21 +2716,21 @@ def test_maybe_compact_pooled_matches_sequential(spark, tmp_path):
         ]
         for f in futs:
             f.result()
-    assert maybe_compact(spark, ins, _fold_count_sketch_weights) is False
+    assert maybe_compact(spark, ins, compact_count_sketch_segments) is False
     assert segment_stats(ins)["raw_segments"] == 2
 
 
 def test_pooled_term_stats_deltas_match_sequential(spark, tmp_path):
     """r15 (r14 verdict #3): the bench's matview cycle now submits its two
     term-stats delta applies CONCURRENTLY — immutable per-batch segments +
-    an additive (cf, df) fold commute, so the pooled protocol must land
+    the Z-set weight fold commute, so the pooled protocol must land
     the same readable state as the sequential segmented protocol and the
     same stats as the one-shot aggregate."""
     from concurrent.futures import ThreadPoolExecutor
 
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        _merge_term_stats_segments,
         apply_term_stats_delta,
+        compact_term_stats_segments,
         maybe_compact,
         read_term_stats_segments,
         segment_stats,
@@ -2753,7 +2752,7 @@ def test_pooled_term_stats_deltas_match_sequential(spark, tmp_path):
         for f in futs:
             f.result()
     # pure-insert pool below both triggers: no compaction, 2 raw segments
-    assert maybe_compact(spark, pooled, _merge_term_stats_segments) is False
+    assert maybe_compact(spark, pooled, compact_term_stats_segments) is False
     assert segment_stats(pooled)["raw_segments"] == 2
 
     for b, rows in enumerate(batches):
@@ -2776,8 +2775,8 @@ def test_maybe_compact_tombstone_first_diverges_on_disk_only(spark, tmp_path):
     from concurrent.futures import ThreadPoolExecutor
 
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        _fold_count_sketch_weights,
         apply_count_sketch_delta,
+        compact_count_sketch_segments,
         maybe_compact,
         read_count_sketch_segments,
         retract_count_sketch_delta,
@@ -2801,7 +2800,7 @@ def test_maybe_compact_tombstone_first_diverges_on_disk_only(spark, tmp_path):
         futs = [pool.submit(write, fn, rows, b, pooled, None) for fn, rows, b in writes]
         for f in futs:
             f.result()
-    assert maybe_compact(spark, pooled, _fold_count_sketch_weights) is True
+    assert maybe_compact(spark, pooled, compact_count_sketch_segments) is True
 
     def counters(state):
         return sorted(map(tuple, read_count_sketch_segments(spark, state).collect()))
@@ -2810,3 +2809,94 @@ def test_maybe_compact_tombstone_first_diverges_on_disk_only(spark, tmp_path):
     ss, sp = segment_stats(seq), segment_stats(pooled)
     assert (ss["compact_segments"], ss["raw_segments"], ss["tombstone_segments"]) == (0, 3, 1)
     assert (sp["compact_segments"], sp["raw_segments"]) == (1, 0)
+
+
+def test_doc_view_reads_plan_one_exchange(spark, tmp_path):
+    """Each doc/term view read hash-partitions the unioned Z-set segments
+    by the view key once: the (key, doc) weight fold and the per-key
+    aggregate share that exchange, instead of shuffling twice."""
+    import re
+
+    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
+        apply_exact_dedup_delta,
+        apply_gram_index_delta,
+        apply_minhash_buckets_delta,
+        apply_term_stats_delta,
+        read_exact_dedup_segments,
+        read_gram_index_segments,
+        read_minhash_buckets_segments,
+        read_term_stats_segments,
+    )
+
+    schema = "doc_id long, text string"
+    batches = [[(1, "a b c d e f g h i"), (2, "a b c d e f g h j")],
+               [(3, "a b c d e f g h i"), (4, "x y z")]]
+    views = {
+        "ed": (apply_exact_dedup_delta, read_exact_dedup_segments),
+        "gi": (lambda df, b, st: apply_gram_index_delta(df, b, st, k=3),
+               read_gram_index_segments),
+        "mh": (apply_minhash_buckets_delta, read_minhash_buckets_segments),
+        "ts": (apply_term_stats_delta, read_term_stats_segments),
+    }
+    for name, (apply_fn, read_fn) in views.items():
+        state = str(tmp_path / name)
+        for b, rows in enumerate(batches):
+            apply_fn(spark.createDataFrame(rows, schema), b, state)
+        plan = read_fn(spark, state)._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bExchange\b", plan)) == 1, (name, plan)
+
+
+def test_posting_caps_apply_at_read_time(spark, tmp_path):
+    """The gram and bucket caps are read-time parameters: ONE state
+    written without any cap answers at every cap, equal to the batch
+    detector recomputing its cutoff at that cap."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
+        minhash_lsh_pairs,
+        minhash_pairs_from_index,
+        substring_shared_gram_pairs,
+        substring_shared_gram_pairs_from_index,
+    )
+    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
+        apply_gram_index_delta,
+        apply_minhash_buckets_delta,
+        read_gram_index_segments,
+        read_minhash_buckets_segments,
+    )
+
+    schema = "doc_id long, text string"
+    boiler = "spam spam spam wonderful spam and eggs every single day"
+    near = "the quick brown fox jumps over the lazy dog tonight"
+    batches = [
+        [(1, boiler), (2, boiler), (3, near), (10, "alpha beta gamma delta eps")],
+        [(4, boiler), (5, near), (11, "alpha beta gamma delta zeta")],
+    ]
+    k = 3
+    gi, mh = str(tmp_path / "gi"), str(tmp_path / "mh")
+    for b, rows in enumerate(batches):
+        bdf = spark.createDataFrame(rows, schema)
+        apply_gram_index_delta(bdf, b, gi, k=k)
+        apply_minhash_buckets_delta(bdf, b, mh)
+    corpus = spark.createDataFrame([r for rows in batches for r in rows], schema)
+
+    def pairs(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    gram_answers = []
+    for cap in (2, 1_000):
+        got = pairs(substring_shared_gram_pairs_from_index(
+            read_gram_index_segments(spark, gi, max_gram_df=cap), min_shared=1))
+        want = pairs(substring_shared_gram_pairs(
+            corpus, k=k, min_shared=1, max_gram_df=cap))
+        assert got == want, cap
+        gram_answers.append(got)
+    bucket_answers = []
+    for cap in (2, 100_000):
+        got = pairs(minhash_pairs_from_index(
+            read_minhash_buckets_segments(spark, mh, max_bucket_size=cap),
+            max_bucket_size=cap))
+        want = pairs(minhash_lsh_pairs(corpus, max_bucket_size=cap))
+        assert got == want, cap
+        bucket_answers.append(got)
+    # the caps genuinely change the answers read from the one state
+    assert gram_answers[0] != gram_answers[1]
+    assert bucket_answers[0] != bucket_answers[1]

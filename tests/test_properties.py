@@ -793,7 +793,7 @@ def test_gram_index_view_invariant_under_batch_split(spark, tmp_path_factory,
         batch = [r for r in rows if split[r[0]] == b]
         if batch:
             bdf = spark.createDataFrame(batch, "doc_id long, text string")
-            apply_gram_index_delta(bdf, b, state, k=k, max_gram_df=cap)
+            apply_gram_index_delta(bdf, b, state, k=k)
     view = read_gram_index_segments(spark, state, max_gram_df=cap)
 
     # counts + keep-first argmin == one-shot aggregate (every doc lands
@@ -876,7 +876,7 @@ def test_minhash_bucket_view_invariant_under_batch_split(spark, tmp_path_factory
         batch = [r for r in rows if split[r[0]] == b]
         if batch:
             bdf = spark.createDataFrame(batch, "doc_id long, text string")
-            apply_minhash_buckets_delta(bdf, b, state, max_bucket_size=cap)
+            apply_minhash_buckets_delta(bdf, b, state)
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted(
         tuple(r)
@@ -907,8 +907,8 @@ def test_retractable_exact_dedup_invariant_under_interleaving(
     view reads equal to a one-shot rebuild over the survivors."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -926,14 +926,14 @@ def test_retractable_exact_dedup_invariant_under_interleaving(
         if batch is gone and bid == pos:
             retract_exact_dedup_delta(bdf, bid, state, auto_compact=None)
         else:
-            apply_exact_dedup_retractable_delta(bdf, bid, state,
+            apply_exact_dedup_delta(bdf, bid, state,
                                                 auto_compact=None)
         wrote = True
     if not wrote:
         return
     got = sorted(
         tuple(r)
-        for r in read_exact_dedup_retractable_segments(spark, state).collect()
+        for r in read_exact_dedup_segments(spark, state).collect()
     )
     survivors = [r for r in rows if not kill[r[0]]]
     if not survivors:
@@ -969,8 +969,8 @@ def test_retractable_url_membership_invariant_under_interleaving(
         synthetic_urls,
     )
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -994,13 +994,13 @@ def test_retractable_url_membership_invariant_under_interleaving(
             retract_exact_dedup_delta(bdf, bid, state, text_col="curl",
                                       auto_compact=2)
         else:
-            apply_exact_dedup_retractable_delta(bdf, bid, state,
+            apply_exact_dedup_delta(bdf, bid, state,
                                                 text_col="curl",
                                                 auto_compact=2)
     survivors = [v for i, v in rows if not kill[i]]
     got = sorted(
         tuple(r)
-        for r in read_exact_dedup_retractable_segments(spark, state).collect())
+        for r in read_exact_dedup_segments(spark, state).collect())
     if not survivors:
         assert got == []
         return
@@ -1130,8 +1130,8 @@ def test_retractable_exact_dedup_invariant_under_auto_triggers(
     is a prefix fold of an abelian-group view, wherever it lands."""
     from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import exact_dedup
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_exact_dedup_retractable_delta,
-        read_exact_dedup_retractable_segments,
+        apply_exact_dedup_delta,
+        read_exact_dedup_segments,
         retract_exact_dedup_delta,
     )
 
@@ -1149,14 +1149,14 @@ def test_retractable_exact_dedup_invariant_under_auto_triggers(
         if batch is gone and bid == pos:
             retract_exact_dedup_delta(bdf, bid, state, auto_compact=2)
         else:
-            apply_exact_dedup_retractable_delta(bdf, bid, state,
+            apply_exact_dedup_delta(bdf, bid, state,
                                                 auto_compact=2)
         wrote = True
     if not wrote:
         return
     got = sorted(
         tuple(r)
-        for r in read_exact_dedup_retractable_segments(spark, state).collect()
+        for r in read_exact_dedup_segments(spark, state).collect()
     )
     survivors = [r for r in rows if not kill[r[0]]]
     if not survivors:
@@ -1254,8 +1254,8 @@ def test_retractable_term_stats_invariant_under_auto_triggers(
     exactly what an add-only (cf, df) aggregate cannot un-count; this
     pins that the Z-set schema does, through every compaction point."""
     from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
-        apply_term_stats_retractable_delta,
-        read_term_stats_retractable_segments,
+        apply_term_stats_delta,
+        read_term_stats_segments,
         retract_term_stats_delta,
     )
 
@@ -1273,26 +1273,26 @@ def test_retractable_term_stats_invariant_under_auto_triggers(
         if batch is gone and bid == pos:
             retract_term_stats_delta(bdf, bid, state, auto_compact=2)
         else:
-            apply_term_stats_retractable_delta(bdf, bid, state,
+            apply_term_stats_delta(bdf, bid, state,
                                                auto_compact=2)
         wrote = True
     if not wrote:
         return
     got = sorted(
         tuple(r)
-        for r in read_term_stats_retractable_segments(spark, state).collect()
+        for r in read_term_stats_segments(spark, state).collect()
     )
     survivors = [r for r in rows if not kill[r[0]]]
     if not survivors:
         assert got == []
         return
     ref_state = str(tmp_path_factory.mktemp("ts_rz_ref") / "view")
-    apply_term_stats_retractable_delta(
+    apply_term_stats_delta(
         spark.createDataFrame(survivors, schema), 0, ref_state,
         auto_compact=None)
     want = sorted(
         tuple(r)
-        for r in read_term_stats_retractable_segments(
+        for r in read_term_stats_segments(
             spark, ref_state).collect()
     )
     assert got == want
