@@ -235,13 +235,17 @@ def minhash_pairs_from_index(index: DataFrame, max_bucket_size: int = 100_000,
     output to pairs touching those ids — the per-ingest-batch dedup
     query a deployment runs after applying the batch to the view:
     "which of MY new documents near-duplicate anything in the corpus".
-    The restriction is a broadcast semi-filter on the tiny pair output,
-    so history×history pairs are never materialized for it.
+    The restriction filters the AGGREGATED pair output: every in-bucket
+    pair, history×history included, is still fanned out and counted
+    first, and only then are the pairs without a batch member dropped.
 
     Plan shape / 100 TB: one pass over the view, in-bucket pair
     fan-out, one pair groupBy — the Σ size² fan-out bound of the batch
     detector minus its corpus scan, shingle hashing, and signature
-    exchange."""
+    exchange. With ``batch_ids``, the pair output then passes through
+    two left equi-joins against the distinct batch ids (one per pair
+    end; a small id set is broadcast) and one filter — no union, no
+    second aggregate."""
     buckets = index.filter(
         (~F.coalesce(F.col("over"), F.lit(False)))
         & (F.size("ids") >= 2) & (F.size("ids") <= max_bucket_size)
@@ -252,16 +256,20 @@ def minhash_pairs_from_index(index: DataFrame, max_bucket_size: int = 100_000,
         .agg(F.count(F.lit(1)).alias("n_band_collisions"))
     )
     if batch_ids is not None:
-        # two EQUI semi joins + a pair-key dedup, NOT one OR-condition
-        # semi (Spark plans a disjunctive join predicate as a
-        # BroadcastNestedLoopJoin — O(pairs × batch) comparisons, which
-        # stops being funny when the ingest batch is millions of docs);
-        # both sides here are hash joins and the dedup shuffles only the
-        # tiny pair output
-        ids = batch_ids.select(F.col(batch_ids.columns[0]).alias("_bid")).distinct()
-        pa = pairs.join(ids, pairs.id_a == ids._bid, "semi")
-        pb = pairs.join(ids, pairs.id_b == ids._bid, "semi")
-        pairs = pa.unionByName(pb).dropDuplicates(["id_a", "id_b"])
+        # two left EQUI joins marking each pair end that is a batch id,
+        # then one filter, NOT one OR-condition join (Spark plans a
+        # disjunctive join predicate as a BroadcastNestedLoopJoin —
+        # O(pairs × batch) comparisons, which stops being funny when the
+        # ingest batch is millions of docs). The ids are distinct, so a
+        # left join never duplicates a pair.
+        ids = batch_ids.select(batch_ids.columns[0]).distinct()
+        in_a, in_b = ids.toDF("_in_a"), ids.toDF("_in_b")
+        pairs = (
+            pairs.join(in_a, F.col("id_a") == F.col("_in_a"), "left")
+            .join(in_b, F.col("id_b") == F.col("_in_b"), "left")
+            .filter(F.col("_in_a").isNotNull() | F.col("_in_b").isNotNull())
+            .select("id_a", "id_b", "n_band_collisions")
+        )
     return pairs
 
 

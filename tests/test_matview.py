@@ -2900,3 +2900,87 @@ def test_posting_caps_apply_at_read_time(spark, tmp_path):
     # the caps genuinely change the answers read from the one state
     assert gram_answers[0] != gram_answers[1]
     assert bucket_answers[0] != bucket_answers[1]
+
+
+def _jobs_started_by(spark, build) -> list[int]:
+    """Spark job ids started while ``build()`` runs. The jobs are tagged
+    with a fresh job group; a sentinel job in a second group runs after,
+    and the listener bus is FIFO, so once the sentinel shows in the status
+    tracker every job ``build`` started shows too."""
+    import uuid
+
+    sc, tag = spark.sparkContext, uuid.uuid4().hex
+    st = sc.statusTracker()
+    sc.setJobGroup(f"build-{tag}", "jobs started while building")
+    try:
+        build()
+    finally:
+        sc.setJobGroup(f"sentinel-{tag}", "sentinel")
+        sc.parallelize([1], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 30
+    while not st.getJobIdsForGroup(f"sentinel-{tag}") and time.time() < deadline:
+        time.sleep(0.05)
+    assert st.getJobIdsForGroup(f"sentinel-{tag}"), "sentinel job never showed"
+    return list(st.getJobIdsForGroup(f"build-{tag}"))
+
+
+def test_state_reads_start_no_spark_job(spark, tmp_path):
+    """Building a state read is plan construction only: the schema comes
+    from a footer read on the driver, so neither a segmented read
+    (compact segment + raw segments) nor a bounded sketch view's state
+    read starts a Spark job (schema inference would start one per read)
+    before an action."""
+    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
+        _read_state,
+        apply_exact_dedup_delta,
+        apply_kmv_batch,
+        compact_exact_dedup_segments,
+        read_exact_dedup_segments,
+    )
+
+    exact, kmv = str(tmp_path / "exact"), str(tmp_path / "kmv")
+    schema = "doc_id long, text string"
+    for b, rows in enumerate([[(1, "a b c")], [(2, "a b c"), (3, "x y")],
+                              [(4, "x y")]]):
+        apply_exact_dedup_delta(spark.createDataFrame(rows, schema), b, exact,
+                                auto_compact=None)
+        apply_kmv_batch(spark.createDataFrame(rows, schema), b, kmv, "doc_id")
+        if b == 1:
+            compact_exact_dedup_segments(spark, exact)
+
+    built = {}
+    assert _jobs_started_by(spark, lambda: built.update(
+        exact=read_exact_dedup_segments(spark, exact),
+        kmv=_read_state(spark, kmv))) == []
+    assert sorted((r.doc_id, r.n_copies) for r in built["exact"].collect()) == \
+        [(1, 2), (3, 2)]
+    assert built["kmv"].count() == 4
+
+
+def test_minhash_batch_filter_equals_python_filter(spark):
+    """minhash_pairs_from_index(batch_ids=...) == the unrestricted pairs
+    filtered in Python to pairs with an end in the batch — with duplicate
+    batch ids, a pair whose BOTH ends are in the batch (kept once), and a
+    batch that touches no bucket (empty answer) — and the restriction
+    plans as equi-joins, never a BroadcastNestedLoopJoin."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.dedup import (
+        minhash_pairs_from_index,
+    )
+
+    index = spark.createDataFrame(
+        [(0, 11, [1, 2, 3], False), (1, 12, [2, 3], False),
+         (2, 13, [4, 5], None), (3, 14, [6, 7, 8], True),
+         (0, 15, [3, 9], False)],
+        "band_idx int, band_hash long, ids array<long>, over boolean")
+    every = sorted(tuple(r) for r in minhash_pairs_from_index(index).collect())
+    assert (2, 3, 2) in every  # collides in two bands
+    for batch in ([2, 2, 3, 3], [9, 9, 42], [42, 43]):
+        ids = spark.createDataFrame([(i,) for i in batch], "doc_id long")
+        out = minhash_pairs_from_index(index, batch_ids=ids)
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == [p for p in every if p[0] in batch or p[1] in batch], batch
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert not got  # the last batch touches no bucket

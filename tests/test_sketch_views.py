@@ -312,3 +312,41 @@ def test_fused_apply_without_value_col_maintains_three_views(spark):
                      ["d", "b", "bucket_count"]) == \
             _rows(cms_counters(full, "key", depth=2, width=16),
                   ["d", "b", "bucket_count"])
+
+
+def test_arrow_commit_round_trips_every_bounded_view(spark, tmp_path):
+    """_commit_view collects the merged view as one Arrow table and
+    writes it with pyarrow. For each bounded view shape (KMV, HLL, CMS,
+    bottom-k, the IVF cell stats with their array<double> sums, and an
+    empty merged frame) the committed directory must read back through
+    Spark's own inference with the merged frame's column names and types
+    (nullability aside) and hold the same rows."""
+    from skylogix_real_time_weather_data_pipeline_spark.ext.sketch import (
+        bottomk_rows,
+    )
+    from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import (
+        _commit_view,
+        combine_cell_stats,
+    )
+
+    keys = spark.createDataFrame(
+        [(j % 97, float(j) / 3) for j in range(500)], "key long, value double")
+    cells = spark.createDataFrame(
+        [(0, 2, [1.0, 2.5]), (1, 1, [0.5, -0.25]), (3, 4, [])],
+        "cell int, n_vecs long, sums array<double>")
+    merged = {
+        "kmv": kmv_mins(keys, "key", 64),
+        "hll": hll_registers(keys, "key", p=5),
+        "cms": cms_counters(keys, "key", depth=2, width=16),
+        "bottomk": bottomk_rows(keys, "key", "value", 32),
+        "ivf_cells": combine_cell_stats(cells, cells),
+        "empty": kmv_mins(keys.limit(0), "key", 64),
+    }
+    for view, df in merged.items():
+        path = str(tmp_path / view)
+        _commit_view(df, path, 0)
+        back = spark.read.parquet(path)
+        assert [(f.name, f.dataType.simpleString()) for f in back.schema] == \
+            [(f.name, f.dataType.simpleString()) for f in df.schema], view
+        assert _rows(back, back.columns) == _rows(df, df.columns), view
+    assert spark.read.parquet(str(tmp_path / "empty")).count() == 0
