@@ -23,6 +23,17 @@ in-function unpersist simply makes the registry entry a no-op.
 ``localCheckpoint`` frames are NOT tracked: their RDDs are owned by the
 ContextCleaner and vanish when the result frame is garbage-collected —
 the leak class this module fixes is specific to CacheManager entries.
+
+Stale reads: the CacheManager matches a later plan to a cached one by
+its analyzed plan, and a file scan's plan names the directory, not the
+files in it. So an ``owned_persist`` over a scan of a directory that
+changes (new raw JSON files landing) serves the cached rows to the next
+identical read in the same session until the entry is released. An
+``owned_persist`` of the daily ETL's flattened raw frame, never
+released between runs, read 268 silver rows where the new day's window
+held 273. Persist only what the caller reads again before the input can
+change, or use ``localCheckpoint`` (a fresh RDD per call, never matched
+by a later plan), as ``operators.silver.silver_pipeline`` does.
 """
 
 from __future__ import annotations

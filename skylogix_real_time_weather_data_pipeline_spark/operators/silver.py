@@ -1,9 +1,15 @@
 """Silver-layer operators: flatten, clean, derive (SURVEY.md §2.3, P1-P13).
 
-Each operator is a pure ``DataFrame -> DataFrame`` function so the whole
-silver stage composes into ONE lazy plan — Catalyst sees scan→filter→project
-→project and fuses it into a single whole-stage-codegen'd pass, unlike the
-reference's eager per-phase pandas materialization (reference
+Each operator is a pure ``DataFrame -> DataFrame`` function, so an
+uncleaned silver stage is one lazy plan: Catalyst fuses
+scan→filter→project→project into a single whole-stage-codegen'd pass.
+Outlier cleaning is the exception. Its bounds and fill medians are data
+statistics, so :func:`silver_pipeline` runs two eager stat jobs (IQR
+bounds, then the masked median) before the frame it returns is consumed.
+It marks the flattened frame for a lazy local checkpoint, so the raw
+documents are parsed once per run: the IQR job fills the checkpoint,
+and the median job and the caller's action read its blocks. The
+reference materializes every phase eagerly in pandas (reference
 src/transform.py:207-244).
 
 Works identically on batch and streaming DataFrames except where noted
@@ -14,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import day_name, epoch_to_timestamp, parse_iso_timestamp
@@ -63,14 +69,10 @@ def flatten_raw(raw: DataFrame) -> DataFrame:
     )
 
 
-def null_out_of_range(df: DataFrame, ranges: Mapping[str, tuple[float, float]]) -> DataFrame:
-    """Generic bounds→NULL masking (the reference's masking step,
-    src/transform.py:185, factored out for caller-supplied bounds)."""
-    cols = {}
-    for c, (lo, hi) in ranges.items():
-        if c in df.columns:
-            cols[c] = F.when((F.col(c) < lo) | (F.col(c) > hi), F.lit(None)).otherwise(F.col(c))
-    return df.withColumns(cols)
+def _masked(c: str, lo: float, hi: float) -> Column:
+    """Column ``c`` with values outside [lo, hi] as NULL (the reference's
+    masking step, src/transform.py:185)."""
+    return F.when((F.col(c) < lo) | (F.col(c) > hi), F.lit(None)).otherwise(F.col(c))
 
 
 def iqr_bounds(
@@ -97,6 +99,45 @@ def iqr_bounds(
     return out
 
 
+def outlier_stats(
+    df: DataFrame, columns: Sequence[str], lower_q: float = 0.05,
+    upper_q: float = 0.95, k: float = 1.5,
+) -> tuple[dict[str, tuple[float, float]], dict[str, float]]:
+    """Both stat passes of outlier cleaning: ``(bounds, medians)``.
+
+    Job 1 is :func:`iqr_bounds`. Job 2 takes the median of each bounded
+    column AFTER masking it to its bounds (the reference fills with the
+    post-nulling median — SURVEY §7.4.1e); the mask sits inside the
+    aggregate, so no masked frame is built. A column whose masked values
+    are all NULL has no median. Each job collects O(columns) doubles.
+    """
+    bounds = iqr_bounds(df, columns, lower_q, upper_q, k)
+    if not bounds:
+        return bounds, {}
+    med_row = df.agg(
+        *[F.percentile(_masked(c, lo, hi), 0.5).alias(c) for c, (lo, hi) in bounds.items()]
+    ).first()
+    return bounds, {c: float(med_row[c]) for c in bounds if med_row[c] is not None}
+
+
+def clean_outliers_with_bounds(
+    df: DataFrame,
+    bounds: Mapping[str, tuple[float, float]],
+    medians: Mapping[str, float] | None = None,
+) -> DataFrame:
+    """Apply precomputed outlier stats as pure row-level expressions in
+    one projection: NULL values outside ``bounds``, then fill NULLs with
+    ``medians``. Streaming-safe (fully incremental) when the stats were
+    computed in batch over bronze history, or come from a
+    slowly-refreshed broadcast."""
+    columns = df.columns
+    exprs = {c: _masked(c, lo, hi) for c, (lo, hi) in bounds.items() if c in columns}
+    for c, m in (medians or {}).items():
+        if c in columns:
+            exprs[c] = F.coalesce(exprs.get(c, F.col(c)), F.lit(float(m)))
+    return df.withColumns(exprs)
+
+
 def clean_outliers(
     df: DataFrame,
     columns: Sequence[str] | None = None,
@@ -108,32 +149,21 @@ def clean_outliers(
     """P7+P8+A9: two-pass IQR outlier cleaning + median fill
     (reference src/transform.py:165-188).
 
-    Pass 1 computes per-column quantile-derived bounds; pass 2 nulls values
-    outside the bounds; pass 3 computes the median of the *masked* column
-    (the reference fills with the post-nulling median — SURVEY §7.4.1e) and
-    coalesces. Both stat passes are tiny driver-collected aggregates; the
-    data itself is touched by exactly one extra projected pass.
+    :func:`outlier_stats` computes the per-column bounds and the median
+    of each masked column in two tiny driver-collected aggregates (one
+    without ``fill_with_median``); the data itself is then touched by
+    exactly one extra projected pass that masks and fills.
     """
     columns = [c for c in (columns or NUMERIC_MEASURE_COLUMNS) if c in df.columns]
     if not columns:
         return df
-    bounds = iqr_bounds(df, columns, lower_q, upper_q, k)
+    if fill_with_median:
+        bounds, medians = outlier_stats(df, columns, lower_q, upper_q, k)
+    else:
+        bounds, medians = iqr_bounds(df, columns, lower_q, upper_q, k), None
     if not bounds:
         return df
-    df = null_out_of_range(df, bounds)
-
-    if fill_with_median:
-        med_row = df.agg(
-            *[F.expr(f"percentile({c}, 0.5)").alias(c) for c in bounds]
-        ).first()
-        fills = {
-            c: F.coalesce(F.col(c), F.lit(float(med_row[c])))
-            for c in bounds
-            if med_row[c] is not None
-        }
-        if fills:
-            df = df.withColumns(fills)
-    return df
+    return clean_outliers_with_bounds(df, bounds, medians)
 
 
 def fill_categoricals(df: DataFrame, columns: Sequence[str] | None = None, value: str = "Unknown") -> DataFrame:
@@ -160,10 +190,24 @@ def derive_temporal(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
 def silver_pipeline(raw: DataFrame, clean: bool = True) -> DataFrame:
     """Full bronze→silver transform (reference transform phase,
     src/transform.py:207-244): required-key filter → flatten → IQR clean →
-    categorical fill → temporal derivations, in the reference's order."""
+    categorical fill → temporal derivations, in the reference's order.
+
+    With ``clean``, the flattened frame is marked for a lazy local
+    checkpoint before the two stat jobs. The IQR job parses the raw
+    documents and fills the checkpoint in the same job, so no job is
+    added; the masked-median job and the caller's action (the sink
+    write) read the checkpoint blocks instead of parsing the raw files
+    twice more. The trade-offs: the returned frame's lineage stops at
+    the checkpoint, and the blocks live on the executors that computed
+    them, so a lost executor fails the read instead of recomputing it.
+    A local checkpoint is a fresh RDD on every call, released by the
+    ContextCleaner when the frame is garbage-collected. A CacheManager
+    persist (``cache.owned_persist``) would instead be matched by plan,
+    so a second run over the same raw directory in one session would
+    read the first run's rows (see the ``cache`` module docstring)."""
     df = flatten_raw(filter_required_keys(raw))
     if clean:
-        df = clean_outliers(df)
+        df = clean_outliers(df.localCheckpoint(eager=False))
     return derive_temporal(fill_categoricals(df))
 
 

@@ -87,13 +87,25 @@ def _already_applied(state_path: str, batch_id: int) -> bool:
     return False
 
 
+class PreZSetStateError(RuntimeError):
+    """A doc or term view's state holds add-only segments written before
+    the Z-set segment format. That state is not migrated: rebuild the
+    view from its batches."""
+
+
 #: Spark's copy of the writing frame's schema in a parquet footer
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _read_state(spark, *paths: str) -> DataFrame | None:
+def _read_state(spark, *paths: str, zset: tuple[str, ...] = ()) -> DataFrame | None:
     """Read parquet state directories with an explicit schema, or None
     when none of them exists.
+
+    ``zset`` names the columns a Z-set segment of the view must carry
+    (:data:`_DOC_ZSET`, :data:`_TERM_ZSET`); a footer without them raises
+    :class:`PreZSetStateError`. The check looks at the schema already read
+    here, so it adds no file read. Segments are read oldest first, so a
+    directory that mixes pre-Z-set segments with later ones is caught too.
 
     ``spark.read.parquet`` without a schema infers one by reading a
     footer in a one-task Spark job, on every read of every view. The
@@ -116,6 +128,13 @@ def _read_state(spark, *paths: str) -> DataFrame | None:
             row_meta = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
             schema = (StructType.fromJson(json.loads(row_meta)) if row_meta
                       else from_arrow_schema(footer))
+            if not set(zset) <= set(schema.fieldNames()):
+                raise PreZSetStateError(
+                    f"{path} is an add-only segment (columns "
+                    f"{schema.fieldNames()}) written before the Z-set segment "
+                    f"format, whose rows carry {list(zset)}; add-only state "
+                    "is not migrated, so rebuild the view: delete its state "
+                    "directory and apply its batches again")
             return spark.read.schema(schema).parquet(*paths)
     raise FileNotFoundError(f"no parquet data file under {paths}")
 
@@ -765,7 +784,8 @@ def _tombstone_population(paths: list[str]) -> tuple[int, int]:
 
 def _apply_delta_segment(delta_fn, batch_df: DataFrame, batch_id: int,
                          state_dir: str, fold_fn, auto_compact: int | None,
-                         tombstone: bool = False) -> None:
+                         tombstone: bool = False,
+                         zset: tuple[str, ...] = ()) -> None:
     """Shared segmented-apply protocol: replay guard → O(batch) immutable
     segment write → :func:`maybe_compact` with ``fold_fn`` as the
     compaction fold. ``delta_fn`` is lazy so a replayed batch skips
@@ -782,8 +802,8 @@ def _apply_delta_segment(delta_fn, batch_df: DataFrame, batch_id: int,
     # state that already had segments
     maybe_compact(
         batch_df.sparkSession, state_dir,
-        lambda spark, sd, retain_last: _compact_segments(spark, sd, fold_fn,
-                                                         retain_last),
+        lambda spark, sd, retain_last: _compact_segments(
+            spark, sd, fold_fn, retain_last, zset=zset),
         auto_compact, fraction_trigger=bool(tombstone and rows and paths),
     )
 
@@ -836,7 +856,8 @@ def maybe_compact(spark, state_dir: str, compact_fn,
     return fire
 
 
-def _read_segments(spark, state_dir: str, merge_fn) -> DataFrame:
+def _read_segments(spark, state_dir: str, merge_fn,
+                   zset: tuple[str, ...] = ()) -> DataFrame:
     """The current view from segmented state: union the readable
     segments and fold through the view's read merge. Equal to the
     one-shot batch aggregate over the same batches (pytest-pinned); the
@@ -845,11 +866,11 @@ def _read_segments(spark, state_dir: str, merge_fn) -> DataFrame:
     paths, _ = _segment_scan(state_dir)
     if not paths:
         raise FileNotFoundError(f"no committed segments under {state_dir}")
-    return merge_fn(_read_state(spark, *paths))
+    return merge_fn(_read_state(spark, *paths, zset=zset))
 
 
 def _compact_segments(spark, state_dir: str, merge_fn,
-                      retain_last: int = 0) -> int:
+                      retain_last: int = 0, zset: tuple[str, ...] = ()) -> int:
     """Fold the readable segments into one compacted segment covering
     their batch ids, then garbage-collect what it covers (best-effort —
     a crash between commit and GC only leaves redundant raws the reader
@@ -894,7 +915,7 @@ def _compact_segments(spark, state_dir: str, merge_fn,
     if retain_last > 0 and not any(
             os.path.basename(p).startswith("b") for p in paths):
         return 0  # nothing new to fold: the compact alone already covers it
-    merged = merge_fn(_read_state(spark, *paths))
+    merged = merge_fn(_read_state(spark, *paths, zset=zset))
     tag = f"compact_{max(fold_bids):010d}_{len(fold_bids)}"
     _write_segment(merged, state_dir, -1,
                    manifest={"batch_ids": sorted(fold_bids)}, name=tag)
@@ -953,7 +974,15 @@ def _compact_segments(spark, state_dir: str, merge_fn,
 # annihilate. Retracting a never-added doc leaves a w=-1 row that reads
 # as absent and annihilates against a later re-add (out-of-order
 # tolerant). State written by the pre-Z-set add-only appliers is not
-# migrated (reading it fails on the missing weight column).
+# migrated: every read, apply and compaction of these four views checks
+# the segment footer for the Z-set columns and raises PreZSetStateError.
+
+
+#: columns every Z-set segment of the doc views (exact dedup, gram index,
+#: minhash buckets) carries; every add-only segment lacks one of them
+_DOC_ZSET = ("doc_id", "w")
+#: the term-stats view's Z-set columns (its term column is named ``w``)
+_TERM_ZSET = ("doc_id", "zw")
 
 
 def _exact_dedup_weighted_delta(batch_df: DataFrame, text_col: str,
@@ -1003,6 +1032,7 @@ def apply_exact_dedup_delta(batch_df: DataFrame, batch_id: int,
     _apply_delta_segment(
         lambda: _exact_dedup_weighted_delta(batch_df, text_col, id_col, 1),
         batch_df, batch_id, state_dir, _fold_exact_dedup_weights, auto_compact,
+        zset=_DOC_ZSET,
     )
 
 
@@ -1018,17 +1048,19 @@ def retract_exact_dedup_delta(
         lambda: _exact_dedup_weighted_delta(batch_df, text_col, id_col, -1),
         batch_df, batch_id, state_dir, _fold_exact_dedup_weights, auto_compact,
         tombstone=True,
+        zset=_DOC_ZSET,
     )
 
 
 def read_exact_dedup_segments(spark, state_dir: str) -> DataFrame:
-    return _read_segments(spark, state_dir, _live_exact_dedup)
+    return _read_segments(spark, state_dir, _live_exact_dedup, zset=_DOC_ZSET)
 
 
 def compact_exact_dedup_segments(spark, state_dir: str,
         retain_last: int = 0) -> int:
     return _compact_segments(
-        spark, state_dir, _fold_exact_dedup_weights, retain_last=retain_last)
+        spark, state_dir, _fold_exact_dedup_weights, retain_last=retain_last,
+        zset=_DOC_ZSET)
 
 
 def _gram_index_occ_delta(occ: DataFrame, id_col: str, weight: int) -> DataFrame:
@@ -1102,6 +1134,7 @@ def apply_gram_index_delta(batch_df: DataFrame, batch_id: int, state_dir: str,
     _apply_delta_segment(
         lambda: _gram_index_weighted_delta(batch_df, text_col, id_col, k, 1),
         batch_df, batch_id, state_dir, _fold_gram_index_weights, auto_compact,
+        zset=_DOC_ZSET,
     )
 
 
@@ -1119,6 +1152,7 @@ def apply_gram_index_occ_delta(occ_batch: DataFrame, batch_id: int,
     _apply_delta_segment(
         lambda: _gram_index_occ_delta(occ_batch, id_col, 1),
         occ_batch, batch_id, state_dir, _fold_gram_index_weights, auto_compact,
+        zset=_DOC_ZSET,
     )
 
 
@@ -1132,19 +1166,22 @@ def retract_gram_index_delta(
         lambda: _gram_index_weighted_delta(batch_df, text_col, id_col, k, -1),
         batch_df, batch_id, state_dir, _fold_gram_index_weights, auto_compact,
         tombstone=True,
+        zset=_DOC_ZSET,
     )
 
 
 def read_gram_index_segments(spark, state_dir: str,
                              max_gram_df: int = 1_000) -> DataFrame:
     return _read_segments(
-        spark, state_dir, lambda df: _live_gram_index(df, max_gram_df))
+        spark, state_dir, lambda df: _live_gram_index(df, max_gram_df),
+        zset=_DOC_ZSET)
 
 
 def compact_gram_index_segments(spark, state_dir: str,
         retain_last: int = 0) -> int:
     return _compact_segments(
-        spark, state_dir, _fold_gram_index_weights, retain_last=retain_last)
+        spark, state_dir, _fold_gram_index_weights, retain_last=retain_last,
+        zset=_DOC_ZSET)
 
 
 def _minhash_buckets_weighted_delta(batch_df: DataFrame, text_col: str,
@@ -1206,6 +1243,7 @@ def apply_minhash_buckets_delta(batch_df: DataFrame, batch_id: int,
         lambda: _minhash_buckets_weighted_delta(
             batch_df, text_col, id_col, n_hashes, bands, shingle_n, 1),
         batch_df, batch_id, state_dir, _fold_minhash_weights, auto_compact,
+        zset=_DOC_ZSET,
     )
 
 
@@ -1221,19 +1259,22 @@ def retract_minhash_buckets_delta(
             batch_df, text_col, id_col, n_hashes, bands, shingle_n, -1),
         batch_df, batch_id, state_dir, _fold_minhash_weights, auto_compact,
         tombstone=True,
+        zset=_DOC_ZSET,
     )
 
 
 def read_minhash_buckets_segments(spark, state_dir: str,
                                   max_bucket_size: int = 100_000) -> DataFrame:
     return _read_segments(
-        spark, state_dir, lambda df: _live_minhash_buckets(df, max_bucket_size))
+        spark, state_dir, lambda df: _live_minhash_buckets(df, max_bucket_size),
+        zset=_DOC_ZSET)
 
 
 def compact_minhash_buckets_segments(spark, state_dir: str,
         retain_last: int = 0) -> int:
     return _compact_segments(
-        spark, state_dir, _fold_minhash_weights, retain_last=retain_last)
+        spark, state_dir, _fold_minhash_weights, retain_last=retain_last,
+        zset=_DOC_ZSET)
 
 
 def _term_stats_weighted_delta(batch_df: DataFrame, text_col: str,
@@ -1284,6 +1325,7 @@ def apply_term_stats_delta(batch_df: DataFrame, batch_id: int,
     _apply_delta_segment(
         lambda: _term_stats_weighted_delta(batch_df, text_col, id_col, 1),
         batch_df, batch_id, state_dir, _fold_term_stats_weights, auto_compact,
+        zset=_TERM_ZSET,
     )
 
 
@@ -1297,17 +1339,19 @@ def retract_term_stats_delta(
         lambda: _term_stats_weighted_delta(batch_df, text_col, id_col, -1),
         batch_df, batch_id, state_dir, _fold_term_stats_weights, auto_compact,
         tombstone=True,
+        zset=_TERM_ZSET,
     )
 
 
 def read_term_stats_segments(spark, state_dir: str) -> DataFrame:
-    return _read_segments(spark, state_dir, _live_term_stats)
+    return _read_segments(spark, state_dir, _live_term_stats, zset=_TERM_ZSET)
 
 
 def compact_term_stats_segments(spark, state_dir: str,
         retain_last: int = 0) -> int:
     return _compact_segments(
-        spark, state_dir, _fold_term_stats_weights, retain_last=retain_last)
+        spark, state_dir, _fold_term_stats_weights, retain_last=retain_last,
+        zset=_TERM_ZSET)
 
 
 # --------------------------------------------------------------------------
@@ -1588,27 +1632,31 @@ def _segment_scan_as_of(state_dir: str, as_of: int) -> list[str]:
     return paths
 
 
-def _read_segments_as_of(spark, state_dir: str, merge_fn, as_of: int) -> DataFrame:
+def _read_segments_as_of(spark, state_dir: str, merge_fn, as_of: int,
+                         zset: tuple[str, ...] = ()) -> DataFrame:
     paths = _segment_scan_as_of(state_dir, as_of)
     if not paths:
         raise FileNotFoundError(
             f"no committed segments at or before batch {as_of} under {state_dir}"
         )
-    return merge_fn(_read_state(spark, *paths))
+    return merge_fn(_read_state(spark, *paths, zset=zset))
 
 
 def read_exact_dedup_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir, _live_exact_dedup, as_of)
+    return _read_segments_as_of(spark, state_dir, _live_exact_dedup, as_of,
+                                zset=_DOC_ZSET)
 
 
 def read_gram_index_as_of(spark, state_dir: str, as_of: int,
                           max_gram_df: int = 1_000) -> DataFrame:
     return _read_segments_as_of(
-        spark, state_dir, lambda df: _live_gram_index(df, max_gram_df), as_of)
+        spark, state_dir, lambda df: _live_gram_index(df, max_gram_df), as_of,
+        zset=_DOC_ZSET)
 
 
 def read_term_stats_as_of(spark, state_dir: str, as_of: int) -> DataFrame:
-    return _read_segments_as_of(spark, state_dir, _live_term_stats, as_of)
+    return _read_segments_as_of(spark, state_dir, _live_term_stats, as_of,
+                                zset=_TERM_ZSET)
 
 
 def maintain_changelog_view(src: DataFrame, state_dir: str,

@@ -23,44 +23,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.silver import (
+    clean_outliers_with_bounds,
     derive_temporal,
     fill_categoricals,
     filter_required_keys,
     flatten_raw,
-    iqr_bounds,
-    null_out_of_range,
+    outlier_stats,
 )
 from ..schemas import NUMERIC_MEASURE_COLUMNS
 
 
-def clean_outliers_with_bounds(
-    df: DataFrame,
-    bounds: dict[str, tuple[float, float]],
-    medians: dict[str, float] | None = None,
-) -> DataFrame:
-    """Streaming-safe outlier cleaning: bounds/medians are precomputed (in
-    batch over bronze history, or a slowly-refreshed broadcast) and applied
-    as pure row-level expressions — fully incremental."""
-    df = null_out_of_range(df, bounds)
-    if medians:
-        df = df.withColumns(
-            {c: F.coalesce(F.col(c), F.lit(float(m))) for c, m in medians.items() if c in df.columns}
-        )
-    return df
-
-
 def compute_stream_bounds(history: DataFrame, columns=None) -> tuple[dict, dict]:
     """Batch pass over bronze history → (bounds, medians) for
-    ``clean_outliers_with_bounds``. Mirrors the batch clean_outliers
-    semantics (median of the post-masking column)."""
+    ``clean_outliers_with_bounds``: the batch clean_outliers stats
+    (median of the post-masking column)."""
     columns = [c for c in (columns or NUMERIC_MEASURE_COLUMNS) if c in history.columns]
-    bounds = iqr_bounds(history, columns)
-    masked = null_out_of_range(history, bounds)
-    med_row = masked.agg(
-        *[F.expr(f"percentile({c}, 0.5)").alias(c) for c in bounds]
-    ).first()
-    medians = {c: float(med_row[c]) for c in bounds if med_row[c] is not None}
-    return bounds, medians
+    return outlier_stats(history, columns)
 
 
 def silver_stream(

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import json
+import re
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from skylogix_real_time_weather_data_pipeline_spark.streaming.matview import maintain_view
@@ -2984,3 +2986,40 @@ def test_minhash_batch_filter_equals_python_filter(spark):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" not in plan, plan
     assert not got  # the last batch touches no bucket
+
+
+@pytest.mark.parametrize("view, add_only", [
+    ("exact_dedup", "fingerprint string, doc_id long, n_copies long"),
+    ("gram_index", "h long, cnt long, min_okey long, ids array<long>, over boolean"),
+    ("minhash_buckets", "band_idx int, band_hash long, ids array<long>, over boolean"),
+    ("term_stats", "w string, cf long, df long"),
+])
+def test_pre_zset_state_raises_a_named_error(spark, tmp_path, view, add_only):
+    """State written by the add-only appliers (before the Z-set segment
+    format) is not migrated. Reading it, compacting it, or applying a
+    batch that triggers compaction raises PreZSetStateError, which names
+    the format change and asks for a rebuild, instead of an
+    AnalysisException about an unresolved column. The check reads no file
+    and starts no Spark job."""
+    from skylogix_real_time_weather_data_pipeline_spark.streaming import matview as mv
+
+    state = str(tmp_path / view)
+    n_cols = len(add_only.split(","))
+    spark.createDataFrame([(None,) * n_cols], add_only).write.parquet(
+        f"{state}/segments/b{0:010d}")
+    batch = spark.createDataFrame([(1, "a b c d e f g h i")], "doc_id long, text string")
+
+    errors = []
+
+    def read():
+        try:
+            getattr(mv, f"read_{view}_segments")(spark, state)
+        except mv.PreZSetStateError as exc:
+            errors.append(str(exc))
+
+    assert _jobs_started_by(spark, read) == []
+    assert len(errors) == 1 and re.search(r"Z-set segment format.*rebuild", errors[0])
+    with pytest.raises(mv.PreZSetStateError, match="add-only"):
+        getattr(mv, f"compact_{view}_segments")(spark, state)
+    with pytest.raises(mv.PreZSetStateError):
+        getattr(mv, f"apply_{view}_delta")(batch, 1, state, auto_compact=2)

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import os
 import sqlite3
+
+from pyspark.sql import functions as F
 
 from skylogix_real_time_weather_data_pipeline_spark.sinks import (
     write_csv_report,
@@ -25,6 +28,26 @@ def test_parquet_partitioned_roundtrip(spark, tmp_path):
     write_parquet(_sample(spark), p, partition_by=["date"])
     back = spark.read.parquet(p)
     assert back.count() == 2 and "city" in back.columns
+
+
+def test_partitioned_parquet_writes_one_file_per_date(spark, tmp_path):
+    """A partitioned write rebalances by the partition column first: six
+    input partitions, each holding rows of all three dates, leave one
+    parquet file per ``date=`` directory (not one per task per date), and
+    every row reads back."""
+    rows = [(i, f"2024-03-0{1 + i % 3}", float(i)) for i in range(36)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 6),
+                               "id int, date string, v double")
+    assert df.rdd.getNumPartitions() >= 4
+    p = str(tmp_path / "pq")
+    write_parquet(df, p, partition_by=["date"])
+    dirs = sorted(d for d in os.listdir(p) if d.startswith("date="))
+    assert dirs == ["date=2024-03-01", "date=2024-03-02", "date=2024-03-03"]
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(p, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    back = spark.read.parquet(p).select("id", F.col("date").cast("string"), "v")
+    assert sorted(tuple(r) for r in back.collect()) == rows
 
 
 def test_csv_report_roundtrip(spark, tmp_path):
