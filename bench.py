@@ -238,7 +238,15 @@ def main() -> int:
         release_owned_caches,
     )
 
-    def _median_time(run) -> tuple[float, int]:
+    # codegen compiles per row (Janino runs, from Spark's CodegenMetrics
+    # histogram count), summed over the row's timed reps only: a row
+    # that compiles in every rep is paying code generation, not data
+    # work. Written to bench_detail.json.
+    _compile_hist = (spark._jvm.org.apache.spark.metrics.source
+                     .CodegenMetrics.METRIC_COMPILATION_TIME())
+    compiles: dict[str, int] = {}
+
+    def _median_time(run, row: str) -> tuple[float, int]:
         """Median of 3 executions (the first still pays per-plan codegen
         compilation; the median discards that outlier without the
         best-of-N bias toward lucky scheduling). Owned caches are drained
@@ -261,9 +269,11 @@ def main() -> int:
         bench's position in the list."""
         times, n = [], 0
         for _ in range(3):
+            c0 = _compile_hist.getCount()
             t0 = time.perf_counter()
             n = run()
             times.append(time.perf_counter() - t0)
+            compiles[row] = compiles.get(row, 0) + _compile_hist.getCount() - c0
             release_owned_caches(spark)
         return statistics.median(times), n
 
@@ -287,10 +297,11 @@ def main() -> int:
             print(f"# calibration probe [{i}]: {cal_series[-1]:.3f}s",
                   file=sys.stderr)
         fn = qs[name]
-        med, n = _median_time(lambda: fn(spark, SF_DIR).count())
+        med, n = _median_time(lambda: fn(spark, SF_DIR).count(), name)
         timings[name] = round(med, 4)
         med_m, _ = _median_time(
-            lambda: fn(spark, SF_DIR).write.format("noop").mode("overwrite").save() or n
+            lambda: fn(spark, SF_DIR).write.format("noop").mode("overwrite").save() or n,
+            name,
         )
         mat[name] = round(med_m, 4)
         cal_at[name] = cal_series[-1]
@@ -370,7 +381,7 @@ def main() -> int:
             shutil.rmtree(root, ignore_errors=True)
 
     cal_series.append(round(_cal_probe(), 3))
-    med_mv, n_mv = _median_time(_matview_cycle)
+    med_mv, n_mv = _median_time(_matview_cycle, "matview_term_stats_cycle")
     timings["matview_term_stats_cycle"] = round(med_mv, 4)
     mat["matview_term_stats_cycle"] = round(med_mv, 4)  # cycle IS materialized
     cal_at["matview_term_stats_cycle"] = cal_series[-1]
@@ -409,7 +420,7 @@ def main() -> int:
         finally:
             shutil.rmtree(root, ignore_errors=True)
 
-    med_sv, n_sv = _median_time(_sketch_views_cycle)
+    med_sv, n_sv = _median_time(_sketch_views_cycle, "maintain_sketch_views_cycle")
     timings["maintain_sketch_views_cycle"] = round(med_sv, 4)
     mat["maintain_sketch_views_cycle"] = round(med_sv, 4)
     cal_at["maintain_sketch_views_cycle"] = cal_series[-1]
@@ -490,7 +501,7 @@ def main() -> int:
             shutil.rmtree(root, ignore_errors=True)
 
     cal_series.append(round(_cal_probe(), 3))
-    med_ic, n_ic = _median_time(_ingest_dedup_cycle)
+    med_ic, n_ic = _median_time(_ingest_dedup_cycle, "ingest_dedup_cycle")
     timings["ingest_dedup_cycle"] = round(med_ic, 4)
     mat["ingest_dedup_cycle"] = round(med_ic, 4)
     cal_at["ingest_dedup_cycle"] = cal_series[-1]
@@ -545,6 +556,7 @@ def main() -> int:
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "queries_normalized": {k: round(v, 3) for k, v in norm.items()},
         "materialized": {k: round(v, 3) for k, v in mat.items()},
+        "codegen_compiles": compiles,
         "calibration": round(cal, 3),
         "calibration_gate": {"series": gate_series, "passed": gate_passed},
         "calibration_floor": cal_floor,
@@ -568,7 +580,7 @@ def main() -> int:
     # live in bench_detail (committed per-round as BENCH_LOCAL_r{N}.json).
     # The scalar value_normalized / gate / floor fields ride in the line.
     line = {k: v for k, v in detail.items()
-            if k not in ("materialized", "calibration_at",
+            if k not in ("materialized", "calibration_at", "codegen_compiles",
                          "queries_normalized", "calibration_series")}
     print(json.dumps(line, separators=(",", ":")))
     return 0

@@ -156,7 +156,9 @@ def main() -> int:
     )
     # the default session deliberately mirrors the driver's (1g heap is
     # plenty at sf0.01); big replica sweeps (the sf1x spot-check) opt into
-    # a larger single-JVM heap explicitly
+    # a larger single-JVM heap explicitly. It also keeps Spark's
+    # 100-entry codegen cache, not session.get_spark's 1000: a sweep
+    # recompiles more, but the cache never changes a value.
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY")
     if mem:
         builder = builder.config("spark.driver.memory", mem)

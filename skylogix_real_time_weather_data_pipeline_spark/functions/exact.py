@@ -118,7 +118,13 @@ def fsum(c: Column | str, scale: int = 4) -> Column:
     Like dsumx the result is order-independent (integer adds are
     associative), so rounded outputs are bit-stable across partitionings
     and agree with the DuckDB twin ``sql_fsum``.
+
+    String names take the one-call F.expr path (see fsum1): the same
+    tree, parsed from one SQL string instead of built op by op.
     """
+    if isinstance(c, str):
+        units = _spark_fsum_units(_qid(c), scale)
+        return F.expr(f"(CAST({units} AS DOUBLE) / {10**scale})")
     c = _col(c)
     u = F.round(c * F.lit(float(10**scale))).cast("long")
     r = u % _SPLIT
@@ -174,6 +180,34 @@ def _spark_divha(num: str, den: str) -> str:
 
 def _qid(name: str) -> str:
     return f"`{name}`"
+
+
+def _spark_fsum_units(col_sql: str, scale: int) -> str:
+    """Spark-SQL text of fsum_units — the same ROUND, split and
+    decimal(38,0) combine as the Column builder, op for op."""
+    u = f"CAST(ROUND({col_sql} * CAST({10**scale} AS DOUBLE)) AS BIGINT)"
+    r = f"({u} % {_SPLIT})"
+    q = f"CAST(({u} - {r}) / {_SPLIT} AS BIGINT)"
+    return (f"(CAST(SUM({q}) AS DECIMAL(38,0)) * {_SPLIT}"
+            f" + CAST(SUM({r}) AS DECIMAL(38,0)))")
+
+
+def _spark_num_den(su: str, n: str, k: int, scale: int) -> tuple[str, str]:
+    """Spark-SQL (numerator, denominator) of the mean su / (n·10^scale)
+    on the 10^-k display grid, for the half-away integer divisions."""
+    if k >= scale:
+        return f"({su} * {10 ** (k - scale)})", f"({n})"
+    return f"({su})", f"({n} * {10 ** (scale - k)})"
+
+
+def _spark_sdivha(num: str, den: str) -> str:
+    """Spark-SQL text of _sdivha_long — the sign folded out first and the
+    exact division in decimal(38,0), so the full long range stays exact."""
+    m = f"(2 * ABS({num}) + {den})"
+    d2 = f"(2 * {den})"
+    return (f"((CASE WHEN {num} < 0 THEN -1 ELSE 1 END) * CAST("
+            f"CAST({m} - PMOD({m}, {d2}) AS DECIMAL(38,0))"
+            f" / CAST({d2} AS DECIMAL(38,0)) AS BIGINT))")
 
 
 def fsum1(c: Column | str, scale: int = 2) -> Column:
@@ -249,8 +283,13 @@ def fmean(c: Column | str, scale: int = 6) -> Column:
 
     Scale 6 quantizes each row at 5e-7 — at or below the 6-dp output
     rounding everything downstream uses — while keeping per-group headroom
-    to ~9e12 rows (see fsum).
+    to ~9e12 rows (see fsum). String names take the one-call F.expr
+    path with the identical (sum/10^s)/count division order.
     """
+    if isinstance(c, str):
+        q = _qid(c)
+        units = _spark_fsum_units(q, scale)
+        return F.expr(f"((CAST({units} AS DOUBLE) / {10**scale}) / COUNT({q}))")
     c = _col(c)
     return fsum(c, scale) / F.count(c)
 
@@ -345,12 +384,8 @@ def fmean1_round(c: Column | str, scale: int, k: int) -> Column:
     bit-identical to the Column path and to sql_fmean1_round."""
     if isinstance(c, str):
         q = _qid(c)
-        su = f"SUM({_spark_units(q, scale)})"
         n = f"COUNT({q})"
-        if k >= scale:
-            num, den = f"({su} * {10 ** (k - scale)})", f"({n})"
-        else:
-            num, den = f"({su})", f"({n} * {10 ** (scale - k)})"
+        num, den = _spark_num_den(f"SUM({_spark_units(q, scale)})", n, k, scale)
         divha = _spark_divha(num, den)
         return F.expr(
             f"(CASE WHEN {n} > 0 THEN {divha} / CAST({10**k} AS DOUBLE) END)"
@@ -384,7 +419,18 @@ def fmean_round(c: Column | str, k: int, scale: int = 6) -> Column:
     half-away rounding at digit ``k``. The unit total comes from
     fsum_units (decimal-exact at any corpus size) and is cast to long for
     the division — exact while |Σc|·10^scale < 9.2e18 (the documented
-    fsum per-group bound)."""
+    fsum per-group bound).
+
+    String names take the one-call F.expr path. Unlike fmean1_round's,
+    it keeps the Column path's decimal(38,0) half-away division
+    (_spark_sdivha), so the overflow bound is the same on both paths."""
+    if isinstance(c, str):
+        q = _qid(c)
+        n = f"COUNT({q})"
+        num, den = _spark_num_den(
+            f"CAST({_spark_fsum_units(q, scale)} AS BIGINT)", n, k, scale)
+        return F.expr(f"(CASE WHEN {n} > 0 THEN {_spark_sdivha(num, den)}"
+                      f" / CAST({10**k} AS DOUBLE) END)")
     su = fsum_units(c, scale).cast("long")
     n = F.count(_col(c))
     if k >= scale:

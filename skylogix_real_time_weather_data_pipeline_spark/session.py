@@ -40,6 +40,22 @@ DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "8g")
 DEFAULT_BYPASS_MERGE_THRESHOLD = os.environ.get(
     "SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "200")
 
+#: compiled whole-stage-codegen classes kept per JVM (Spark's default is
+#: 100). The engine's loops reuse one long-lived session, and their
+#: working sets are larger than 100: counted with ``CodegenMetrics``,
+#: about 335 distinct classes per ``query_mix`` pass, 195 per
+#: ``ingest_cycle`` op and 125 per ``etl_daily`` run. Each cycle
+#: overflowed the LRU cache, so every operation compiled its code again
+#: (13, 134-149 and about 70 Janino compiles per op). 1000 is about 3x
+#: the largest working set. This is not box tuning, unlike the writer
+#: threshold above: the compile count depends on the workload, not on
+#: the hardware, and the cache never changes a value. The conf is
+#: STATIC and read once, when ``CodeGenerator`` first initialises in the
+#: JVM: only the first session in a process sets it, and a session
+#: built outside this factory (``scripts/local_verify.py``) keeps
+#: Spark's 100.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
 
 #: RocksDB-backed streaming state (SURVEY §4.2 "use RocksDB state store for
 #: large state"): keeps per-key state off the JVM heap, so stateful
@@ -78,6 +94,8 @@ def get_spark(
         .config("spark.driver.memory", DEFAULT_DRIVER_MEMORY)
         .config("spark.shuffle.sort.bypassMergeThreshold",
                 DEFAULT_BYPASS_MERGE_THRESHOLD)
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

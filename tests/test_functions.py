@@ -129,3 +129,41 @@ def test_fmean_null_semantics_match_avg(spark):
     rows = {r.g: r for r in df.groupBy("g").agg(fmean("v").alias("m")).collect()}
     assert rows["a"].m == 1.5
     assert rows["b"].m is None
+
+
+def test_string_name_sql_path_matches_column_path(spark):
+    """fsum / fmean / fmean_round given a column NAME parse one SQL string;
+    given a Column they build the tree op by op. Both must give
+    bit-identical values: negative values, means on a .5 display boundary
+    (1.005 and -1.005 at k=2 round half away) and an all-null group."""
+    from skylogix_real_time_weather_data_pipeline_spark.functions.exact import (
+        fmean,
+        fmean_round,
+        fsum,
+    )
+
+    df = spark.createDataFrame(
+        [("neg", -1.005), ("neg", -2.5), ("neg", -0.125), ("neg", -1234.567891),
+         ("half", 1.0), ("half", 1.01),
+         ("nhalf", -1.0), ("nhalf", -1.01),
+         ("mixed", 2.675), ("mixed", -0.335), ("mixed", None),
+         ("null", None), ("null", None)],
+        "g string, v double",
+    )
+    aggs = {
+        "fsum2": lambda c: fsum(c, 2), "fsum4": lambda c: fsum(c),
+        "fsum6": lambda c: fsum(c, 6),
+        "fmean6": lambda c: fmean(c), "fmean2": lambda c: fmean(c, 2),
+        "fmr2": lambda c: fmean_round(c, 2), "fmr6": lambda c: fmean_round(c, 6),
+        "fmr8": lambda c: fmean_round(c, 8), "fmr1s2": lambda c: fmean_round(c, 1, 2),
+    }
+
+    def run(arg):
+        out = df.groupBy("g").agg(*[fn(arg).alias(n) for n, fn in aggs.items()])
+        return {r.g: r.asDict() for r in out.collect()}
+
+    by_name, by_col = run("v"), run(F.col("v"))
+    assert by_name == by_col
+    assert by_name["half"]["fmr2"] == 1.01
+    assert by_name["nhalf"]["fmr2"] == -1.01
+    assert {k: v for k, v in by_name["null"].items() if v is not None} == {"g": "null"}
